@@ -21,6 +21,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from cloudberry_spark.session import require_conf
 
 #: All fixture tables (TESTDATA.md).
 TABLES: tuple[str, ...] = (
@@ -44,6 +47,31 @@ REPLICATED_TABLES: frozenset[str] = frozenset({"region", "nation"})
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+#: path -> (st_mtime_ns, st_size, schema Spark inferred for that file).
+#: Inferring a parquet schema starts a one-task Spark job to read a
+#: footer; the reference never samples data to learn a schema, its
+#: catalog has it. One entry per path: a replaced file (new mtime or
+#: size) is inferred again and overwrites its entry.
+_FILE_SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
+
+
+def _read_fixture(spark: SparkSession, path: str) -> DataFrame:
+    """A fresh reader of one fixture file, whose schema is inferred once
+    per version of the file. Fresh on every call: one DataFrame object
+    on both sides of a self-join makes its column references ambiguous."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        # not a local path: Spark resolves it (and reports a missing one)
+        return spark.read.parquet(path)
+    known = _FILE_SCHEMAS.get(path)
+    if known is not None and known[:2] == (st.st_mtime_ns, st.st_size):
+        return spark.read.schema(known[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _FILE_SCHEMAS[path] = (st.st_mtime_ns, st.st_size, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table, normalizing types.
 
@@ -53,11 +81,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the same truncation DuckDB applies, so oracle comparisons agree.
     """
     if name == "events":
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        require_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = _read_fixture(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # Integer division — ns values exceed double's 53-bit mantissa, so
         # a float divide here silently corrupts the low microseconds.

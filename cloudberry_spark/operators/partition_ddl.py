@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.registry import register
 from cloudberry_spark.sources.external import _scratch
-from cloudberry_spark.sources.snapshot import SnapshotTable
+from cloudberry_spark.sources.snapshot import SnapshotTable, _schema_after
 
 
 class RangePartitionedTable:
@@ -72,8 +72,13 @@ class RangePartitionedTable:
     def _parts(self) -> dict[tuple[int, int], str]:
         return {self._bounds(d): d for d in self.st.manifest()["dirs"]}
 
-    def _commit(self, dirs: list[str], base: int) -> None:
-        self.st._write_manifest(base + 1, parent=base, dirs=sorted(dirs))
+    def _commit(self, dirs: list[str], base: int, *written: DataFrame) -> None:
+        """Commit ``dirs`` as version base+1; ``written`` are the frames
+        this change wrote its new filesets from."""
+        schema = _schema_after(self.st.manifest(base), written)
+        self.st._write_manifest(
+            base + 1, parent=base, dirs=sorted(dirs), schema=schema
+        )
         self.st._flip(base + 1)
 
     # -- lifecycle ------------------------------------------------------
@@ -101,7 +106,9 @@ class RangePartitionedTable:
                 "overwrite"
             ).parquet(os.path.join(root, d))
             dirs.append(d)
-        st._write_manifest(0, parent=None, dirs=sorted(dirs))
+        st._write_manifest(
+            0, parent=None, dirs=sorted(dirs), schema=df.schema.jsonValue()
+        )
         st._flip(0)
         return cls(st, key)
 
@@ -113,7 +120,7 @@ class RangePartitionedTable:
         pruning — the PartitionSelector analog)."""
         for (lo, hi), d in self._parts().items():
             if lo <= value < hi:
-                return spark.read.parquet(os.path.join(self.st.root, d))
+                return self.st.read(spark, dirs=[d])
         raise KeyError(f"no partition covers {value}")
 
     def add_partition(self, lo: int, hi: int, df: DataFrame) -> None:
@@ -131,7 +138,7 @@ class RangePartitionedTable:
         df.filter((F.col(self.key) >= lo) & (F.col(self.key) < hi)).write.mode(
             "overwrite"
         ).parquet(os.path.join(self.st.root, d))
-        self._commit(list(parts.values()) + [d], base)
+        self._commit(list(parts.values()) + [d], base, df)
 
     def exchange_partition(
         self, spark: SparkSession, value: int, staged: DataFrame
@@ -155,13 +162,13 @@ class RangePartitionedTable:
                     )
                 # the displaced fileset is immutable and survives the
                 # commit (time travel), so a lazy reader over it is safe
-                old = spark.read.parquet(os.path.join(self.st.root, d))
+                old = self.st.read(spark, base, dirs=[d])
                 nd = self._dirname(lo, hi, base + 1)
                 staged.write.mode("overwrite").parquet(
                     os.path.join(self.st.root, nd)
                 )
                 dirs = [x for x in parts.values() if x != d] + [nd]
-                self._commit(dirs, base)
+                self._commit(dirs, base, staged)
                 return old
         raise KeyError(f"no partition covers {value}")
 
@@ -175,7 +182,7 @@ class RangePartitionedTable:
             if lo <= value < hi:
                 if not (lo < at < hi):
                     raise ValueError(f"split point {at} outside ({lo},{hi})")
-                src = spark.read.parquet(os.path.join(self.st.root, d))
+                src = self.st.read(spark, base, dirs=[d])
                 d1 = self._dirname(lo, at, base + 1)
                 d2 = self._dirname(at, hi, base + 1)
                 src.filter(F.col(self.key) < at).write.mode("overwrite").parquet(
@@ -185,7 +192,7 @@ class RangePartitionedTable:
                     "overwrite"
                 ).parquet(os.path.join(self.st.root, d2))
                 dirs = [x for x in parts.values() if x != d] + [d1, d2]
-                self._commit(dirs, base)
+                self._commit(dirs, base, src)
                 return
         raise KeyError(f"no partition covers {value}")
 

@@ -66,7 +66,8 @@ def _materialize(df, spark, sf_dir: str, tag: str):
     # near-empty files per round costs more task/commit overhead than
     # the data. At cluster scale pick partitions ~ |state| / 128MB.
     df.coalesce(8).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    # the writer's schema: no footer-reading job to infer it again
+    return spark.read.schema(df.schema).parquet(path)
 
 
 def _checkpoint(df):

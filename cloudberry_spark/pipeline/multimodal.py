@@ -52,6 +52,10 @@ from pyspark.sql.types import (
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.registry import register
 
+#: Media types the decode kernels have a codec for; anything else takes
+#: the codec error path.
+_KNOWN_MEDIA_TYPES = ("image/png", "audio/wav", "video/mp4")
+
 #: Output schema of the decode stage: typed metadata + feature vector.
 DECODED_SCHEMA = StructType(
     [
@@ -89,7 +93,7 @@ def _decode_stub(payload: bytes, media_type: str) -> tuple[int, int, list[float]
     production-shaped. Raises for unknown media types, mirroring a real
     codec error path.
     """
-    if media_type not in ("image/png", "audio/wav", "video/mp4"):
+    if media_type not in _KNOWN_MEDIA_TYPES:
         raise NotImplementedError(f"no codec for {media_type}")
     n = len(payload)
     width = (n % 64) + 1
@@ -157,7 +161,7 @@ def decode_media(media: DataFrame) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            bad = ~pdf["media_type"].isin(("image/png", "audio/wav", "video/mp4"))
+            bad = ~pdf["media_type"].isin(_KNOWN_MEDIA_TYPES)
             if bad.any():  # mirror the stub's codec error path
                 raise NotImplementedError(
                     f"no codec for {pdf['media_type'][bad].iloc[0]}"
@@ -168,9 +172,9 @@ def decode_media(media: DataFrame) -> DataFrame:
                     "doc_id": pdf["doc_id"],
                     "media_type": pdf["media_type"],
                     "n_bytes": pdf["payload"].map(len).astype("int32"),
-                    "width": pd.Series(width),
-                    "height": pd.Series(height),
-                    "features": pd.Series(list(feats)),
+                    "width": pd.Series(width, index=pdf.index),
+                    "height": pd.Series(height, index=pdf.index),
+                    "features": pd.Series(list(feats), index=pdf.index),
                 }
             )
 

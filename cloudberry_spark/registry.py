@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from cloudberry_spark.catalog import ensure_views
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
+#: Registers the temp views a query reads: ``(spark, sf_dir) -> None``.
+ViewSetup = Callable[[SparkSession, str], None]
 
 
 @dataclass(frozen=True)
@@ -37,11 +39,15 @@ def register(
     oracle: str | None = None,
     doc: str = "",
     tags: tuple[str, ...] = (),
+    views: ViewSetup | None = None,
 ) -> Callable[[SparkQuery], SparkQuery]:
     """Decorator: register a (spark, sf_dir) -> DataFrame query.
 
-    The wrapper registers the fixture temp views first, so query bodies
-    may freely use ``spark.sql`` over the canonical table names.
+    The wrapper registers the views the query reads first, so query
+    bodies may freely use ``spark.sql`` over their table names: the
+    fixture temp views by default, or whatever ``views`` registers (a
+    spec-text query reads its prelude's tables instead, and registering
+    the fixture's over the same names first would only be undone).
     """
 
     def deco(fn: SparkQuery) -> SparkQuery:
@@ -49,7 +55,10 @@ def register(
             from cloudberry_spark.session import configure_session
 
             configure_session(spark)
-            ensure_views(spark, sf_dir)
+            if views is None:
+                ensure_views(spark, sf_dir)
+            else:
+                views(spark, sf_dir)
             return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__

@@ -49,19 +49,61 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Arrow for any pandas_udf/mapInPandas path (the only Python hot paths).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Generated class names leave out the whole-stage codegen id. AQE
+    # numbers codegen stages in the order it plans query stages, which
+    # varies between runs of one query, so an unchanged stage came back
+    # under a new class name and missed the codegen cache: every warm
+    # run of dedup_incremental_index_probe over the sf0.001 fixture
+    # recompiled 4-8 such classes.
+    # Plans still show the ids.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
+
+
+#: Confs that query results depend on: timestamp casts and truncations
+#: follow the session time zone, which the DuckDB oracles assume is UTC,
+#: and ``events`` cannot be scanned without nanosAsLong.
+#: Failing to set one of these raises; every other conf in
+#: RUNTIME_CONFS is an optimization or compat knob and stays best-effort.
+REQUIRED_CONFS: frozenset[str] = frozenset(
+    {"spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong"}
+)
+
+#: Janino classes Spark's codegen cache keeps
+#: (``spark.sql.codegen.cache.maxEntries``, a static conf, 100 by
+#: default). Same reason as the JIT code cache below: a long-lived
+#: session runs many different plans. One cold pass of three pipeline
+#: operators (dml_partition_confined_update, ivm_incremental_refresh,
+#: dedup_incremental_index_probe) over an sf0.01 fixture compiled about
+#: 100 classes, driver and executor copies counted. With 100 entries
+#: and those queries run over and over in one order, LRU evicted most
+#: classes before their next use: warm passes recompiled 28-60 of them
+#: (about 1.6 s of compile time per pass). With 1000 entries they
+#: recompiled 0-4, and 0 once class names dropped the stage id
+#: (``useIdInClassName`` above).
+CODEGEN_CACHE_ENTRIES = 1000
+
+
+def require_conf(spark: SparkSession, key: str, value: str) -> None:
+    """Set a conf that query results depend on, or raise."""
+    try:
+        spark.conf.set(key, value)
+    except Exception as ex:
+        raise RuntimeError(
+            f"cannot set {key}={value}, which query results depend on"
+        ) from ex
 
 
 def configure_session(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an existing session (e.g. the driver's)."""
     for k, v in RUNTIME_CONFS.items():
+        if k in REQUIRED_CONFS:
+            require_conf(spark, k, v)
+            continue
         try:
             spark.conf.set(k, v)
         except Exception:
-            # Non-modifiable in this deployment; keep going — every conf
-            # here is an optimization or compat knob, not a correctness
-            # requirement except nanosAsLong (catalog degrades gracefully).
-            pass
+            pass  # not modifiable in this deployment; a knob, not a result
     return spark
 
 
@@ -90,6 +132,7 @@ def get_session(app_name: str = "cloudberry-spark") -> SparkSession:
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.driver.extraJavaOptions", java_opts)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():

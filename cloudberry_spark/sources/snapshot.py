@@ -22,8 +22,17 @@ guarantees and shared by every dml_* operator:
 
 Layout:
     root/_CURRENT             pointer: current version number
-    root/_manifest/v3.json    {"version":3,"parent":2,"dirs":[...]}
+    root/_manifest/v3.json    {"version":3,"parent":2,"dirs":[...],
+                               "schema":{StructType JSON}}
     root/data-v3-rewrite/     immutable parquet fileset(s)
+
+``schema`` is the schema of the frame(s) the version's filesets were
+written from, the way the reference keeps a relation's tuple descriptor
+in its catalog rather than in the heap files. A reader passes it to
+``spark.read.schema`` instead of having Spark start a job to read a
+footer. A commit that adds a fileset whose column names or types differ
+from the table's records no schema, and its readers infer one as
+before.
 
 INSERT is an append commit (new dir ADDED to the manifest's dir list —
 no rewrite of existing data); UPDATE/DELETE/MERGE are rewrite commits
@@ -43,9 +52,10 @@ import json
 import os
 import shutil
 import uuid
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
-
+from pyspark.sql.types import StructType
 
 
 def _fresh(name: str) -> str:
@@ -61,6 +71,20 @@ def _fresh(name: str) -> str:
     are the same discipline every lakehouse format uses.
     """
     return f"{name}-{uuid.uuid4().hex[:8]}"
+
+
+def _schema_after(base: dict, frames: Iterable[DataFrame]) -> dict | None:
+    """The schema a commit that adds filesets written from ``frames`` to
+    the ``base`` manifest records: the base's, while every new fileset
+    has its column names and types (parquet stores every field
+    nullable, so nullability does not count), else none."""
+    schema = base.get("schema")
+    if schema is None:
+        return None
+    shape = StructType.fromJson(schema).simpleString()
+    if all(df.schema.simpleString() == shape for df in frames):
+        return schema
+    return None
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -86,12 +110,20 @@ class SnapshotTable:
         with open(os.path.join(self._manifest_dir, f"v{v}.json")) as f:
             return json.load(f)
 
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
+    def read(
+        self,
+        spark: SparkSession,
+        version: int | None = None,
+        dirs: list[str] | None = None,
+    ) -> DataFrame:
         """Read one immutable snapshot (current, or time-travel to a
-        given version)."""
+        given version), or only the given ``dirs`` of it."""
         m = self.manifest(version)
-        return spark.read.parquet(
-            *[os.path.join(self.root, d) for d in m["dirs"]]
+        reader = spark.read
+        if "schema" in m:
+            reader = reader.schema(StructType.fromJson(m["schema"]))
+        return reader.parquet(
+            *[os.path.join(self.root, d) for d in (dirs or m["dirs"])]
         )
 
     # -- commits ------------------------------------------------------------
@@ -114,18 +146,30 @@ class SnapshotTable:
             df.sparkSession.catalog.refreshByPath(root)
         except Exception:
             pass  # refresh is best-effort; first-time inits have no cache
-        t._write_manifest(0, parent=None, dirs=[d])
+        t._write_manifest(0, parent=None, dirs=[d], schema=df.schema.jsonValue())
         t._flip(0)
         return t
 
     def _write_manifest(
-        self, version: int, parent: int | None, dirs: list[str]
+        self,
+        version: int,
+        parent: int | None,
+        dirs: list[str] | None = None,
+        *,
+        parts: dict[str, str] | None = None,
+        schema: dict | None = None,
     ) -> None:
         """The commit point of the protocol: O_EXCL manifest creation —
-        exactly one writer can own v{version}."""
-        payload = json.dumps(
-            {"version": version, "parent": parent, "dirs": dirs}
-        )
+        exactly one writer can own v{version}. A partitioned table
+        passes ``parts`` and its ``dirs`` are the parts' dirs."""
+        m: dict = {"version": version, "parent": parent}
+        if parts is not None:
+            m["parts"] = parts
+            dirs = sorted(parts.values())
+        m["dirs"] = dirs
+        if schema is not None:
+            m["schema"] = schema
+        payload = json.dumps(m)
         path = os.path.join(self._manifest_dir, f"v{version}.json")
         try:
             fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
@@ -156,7 +200,9 @@ class SnapshotTable:
         new_v = expected_version + 1
         d = _fresh(f"data-v{new_v}-{label}")
         df.write.mode("overwrite").parquet(os.path.join(self.root, d))
-        self._write_manifest(new_v, parent=expected_version, dirs=[d])
+        self._write_manifest(
+            new_v, parent=expected_version, dirs=[d], schema=df.schema.jsonValue()
+        )
         self._flip(new_v)
         return new_v
 
@@ -173,8 +219,13 @@ class SnapshotTable:
         new_v = expected_version + 1
         d = _fresh(f"data-v{new_v}-{label}")
         df.write.mode("overwrite").parquet(os.path.join(self.root, d))
-        dirs = self.manifest(expected_version)["dirs"] + [d]
-        self._write_manifest(new_v, parent=expected_version, dirs=dirs)
+        base = self.manifest(expected_version)
+        self._write_manifest(
+            new_v,
+            parent=expected_version,
+            dirs=base["dirs"] + [d],
+            schema=_schema_after(base, [df]),
+        )
         self._flip(new_v)
         return new_v
 
@@ -249,27 +300,9 @@ class SnapshotTable:
                 os.makedirs(dst, exist_ok=True)
             parts[str(v)] = d
         shutil.rmtree(staging, ignore_errors=True)
-        payload = {"parts": parts}
-        t._write_manifest_payload(0, parent=None, extra=payload)
+        t._write_manifest(0, parent=None, parts=parts, schema=df.schema.jsonValue())
         t._flip(0)
         return t
-
-    def _write_manifest_payload(
-        self, version: int, parent: int | None, extra: dict
-    ) -> None:
-        m = {"version": version, "parent": parent}
-        m.update(extra)
-        if "dirs" not in m:
-            m["dirs"] = sorted(m.get("parts", {}).values())
-        path = os.path.join(self._manifest_dir, f"v{version}.json")
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            raise ConcurrentWriteError(
-                f"version v{version} already committed by another writer"
-            ) from None
-        with os.fdopen(fd, "w") as f:
-            f.write(json.dumps(m))
 
     def commit_partition_rewrite(
         self,
@@ -288,13 +321,17 @@ class SnapshotTable:
                 f"(current is v{self.current_version()})"
             )
         new_v = expected_version + 1
-        parts = dict(self.manifest(expected_version)["parts"])
+        base = self.manifest(expected_version)
+        parts = dict(base["parts"])
         for v, df in updates.items():
             d = _fresh(f"data-v{new_v}-{label}-{v}")
             df.write.mode("overwrite").parquet(os.path.join(self.root, d))
             parts[str(v)] = d
-        self._write_manifest_payload(
-            new_v, parent=expected_version, extra={"parts": parts}
+        self._write_manifest(
+            new_v,
+            parent=expected_version,
+            parts=parts,
+            schema=_schema_after(base, updates.values()),
         )
         self._flip(new_v)
         return new_v

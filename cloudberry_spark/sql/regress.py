@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from cloudberry_spark.registry import register
 from cloudberry_spark.sql.pgcompat import translate_pg_sql
+from cloudberry_spark.sql.scale_fixture import prelude_views, scale_spec_fixture
 
 #: Shared table-building prelude. Both engines prune unreferenced CTEs,
 #: so every query carries the full set.
@@ -432,22 +433,20 @@ def register_regress(
     (sql/scale_fixture.py; identity when the env is unset)."""
     full = _with_prelude(sql, prelude)
     duck = full if oracle == "same" else _with_prelude(oracle, prelude)
+    # parquet-backed prelude views: real stats at scale, and no per-call
+    # prelude re-parse at K=1 (r12 opt); the registry wrapper registers
+    # them in place of the fixture views
+    views = None
+    if scalable and scale_views is not None:
+        views = prelude_views(scale_views[1], scale_views[0])
 
-    @register(name, oracle=duck, doc=doc, tags=("regress",) + tags)
+    @register(name, oracle=duck, doc=doc, tags=("regress",) + tags,
+              views=views)
     def _q(spark: SparkSession, sf_dir: str, _sql: str = full,
            _orig: str = sql) -> DataFrame:
+        if views is not None:
+            return spark.sql(translate_pg_sql(_orig))
         if scalable:
-            from cloudberry_spark.sql.scale_fixture import (
-                scale_factor,
-                scale_spec_fixture,
-                spec_views,
-            )
-
-            if scale_views is not None:
-                # parquet-backed prelude views: real stats at scale,
-                # and no per-call prelude re-parse at K=1 (r12 opt)
-                spec_views(spark, scale_views[1], scale_views[0])
-                return spark.sql(translate_pg_sql(_orig))
             _sql = scale_spec_fixture(_sql)
         return spark.sql(translate_pg_sql(_sql))
 

@@ -118,17 +118,31 @@ def spec_views(spark, prelude: str, tag: str) -> None:
         base = os.path.join(scratch, f"spec_{tag}_k{k}")
     for t in needed:
         path = os.path.join(base, t)
+        reader = spark.read
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
             df = spark.sql(translate_pg_sql(
                 scale_spec_fixture(prelude + f" SELECT * FROM {t}")))
             df.write.mode("overwrite").parquet(path)
             _SPEC_DF_CACHE.pop((base, t), None)
+            # read back with the writer's schema: no footer-reading job
+            reader = reader.schema(df.schema)
         rdf = _SPEC_DF_CACHE.get((base, t))
         if rdf is None or rdf.sparkSession is not spark:
-            rdf = spark.read.parquet(path)
+            rdf = reader.parquet(path)
             _SPEC_DF_CACHE[(base, t)] = rdf
         rdf.createOrReplaceTempView(t)
         VIEW_OWNER[t] = me
+
+
+def prelude_views(prelude: str, tag: str):
+    """The ``views`` hook (registry.register) of a query over a spec
+    prelude: it registers the prelude's tables (spec_views) instead of
+    the fixture's."""
+
+    def views(spark, sf_dir: str) -> None:
+        spec_views(spark, prelude, tag)
+
+    return views
 
 
 def _sweep_stale_pid_dirs(scratch: str, prefix: str) -> None:

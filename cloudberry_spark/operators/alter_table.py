@@ -37,8 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 from cloudberry_spark.sources.snapshot import SnapshotTable
 
 
@@ -170,7 +170,7 @@ def ddl_alter_type_widen_metadata_only(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     t = AlterTable(
-        spark, _scratch(sf_dir, "alter_widen"), "c1 float, c2 float, n int"
+        spark, scratch.path(sf_dir, "alter_widen"), "c1 float, c2 float, n int"
     )
     t.insert([{"c1": "1.25", "c2": "0.5", "n": "1"},
               {"c1": "2.5", "c2": "1.5", "n": "2"},
@@ -216,7 +216,7 @@ def ddl_alter_type_widen_metadata_only(
     tags=("ddl", "alter-table"),
 )
 def ddl_alter_type_rewrite_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = AlterTable(spark, _scratch(sf_dir, "alter_rewrite"), "id int, v int")
+    t = AlterTable(spark, scratch.path(sf_dir, "alter_rewrite"), "id int, v int")
     t.insert([{"id": str(i), "v": str(i * 10)} for i in (1, 2, 10, 11)])
     r1 = t.alter_type("id", "string")
     text_order = t.read().orderBy("id").agg(
@@ -263,7 +263,7 @@ def ddl_alter_type_rewrite_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ddl", "alter-table"),
 )
 def ddl_alter_set_drop_default(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = AlterTable(spark, _scratch(sf_dir, "alter_default"), "a int, f int")
+    t = AlterTable(spark, scratch.path(sf_dir, "alter_default"), "a int, f int")
     t.insert([{"a": "1"}])                      # pre-SET: NULL
     t.set_default("f", "0")
     t.insert([{"a": "2"}])                      # default 0
@@ -299,7 +299,7 @@ def ddl_alter_set_drop_default(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ddl", "alter-table"),
 )
 def ddl_alter_add_check_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = AlterTable(spark, _scratch(sf_dir, "alter_check"), "a int, b int")
+    t = AlterTable(spark, scratch.path(sf_dir, "alter_check"), "a int, b int")
     t.insert([{"a": "1", "b": "20"}, {"a": "2", "b": "30"},
               {"a": "5", "b": "5"}])
     rows: list[tuple[int, str, str]] = []
@@ -348,7 +348,7 @@ def ddl_alter_add_check_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ddl_alter_fk_not_valid_validate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    t = AlterTable(spark, _scratch(sf_dir, "alter_fk"), "a int, b int")
+    t = AlterTable(spark, scratch.path(sf_dir, "alter_fk"), "a int, b int")
     t.insert([{"a": "1", "b": "20"}, {"a": "2", "b": "30"},
               {"a": "5", "b": "50"}])
     referenced = spark.createDataFrame([(1,), (2,), (3,)], "ra int")

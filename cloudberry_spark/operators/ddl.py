@@ -20,9 +20,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 
 
 @register(
@@ -45,7 +45,7 @@ from cloudberry_spark.sources.external import _scratch
 )
 def ddl_ctas_and_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     db = "cb_ddl"
-    loc = os.path.join(os.path.dirname(_scratch(sf_dir, "x")), "ddl_warehouse")
+    loc = scratch.path(sf_dir, "ddl_warehouse")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     tbl = f"{db}.orders_agg_{tag}"
@@ -118,7 +118,7 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ddl_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     db = "cb_ddl"
-    loc = os.path.join(os.path.dirname(_scratch(sf_dir, "x")), "ddl_warehouse")
+    loc = scratch.path(sf_dir, "ddl_warehouse")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     tbl = f"{db}.stats_demo_{tag}"
@@ -209,7 +209,7 @@ def ddl_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ddl_stats_ext_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = load_table(spark, sf_dir, "nation")
     db = "cb_ddl"
-    loc = os.path.join(os.path.dirname(_scratch(sf_dir, "x")), "ddl_warehouse")
+    loc = scratch.path(sf_dir, "ddl_warehouse")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     tbl = f"{db}.stats_ext_{tag}"
@@ -268,7 +268,7 @@ def ddl_storage_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_extendedprice", "l_returnflag", "l_shipdate"
     )
     frames = []
-    base = _scratch(sf_dir, "storage_codecs")
+    base = scratch.path(sf_dir, "storage_codecs")
     for codec in ("gzip", "snappy", "zstd"):
         path = os.path.join(base, codec)
         li.write.mode("overwrite").option("compression", codec).parquet(path)

@@ -22,9 +22,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.registry import register, register_sql
-from cloudberry_spark.sources.external import _scratch
 
 SALT_BUCKETS = 32
 
@@ -97,7 +97,7 @@ def bucket_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     db = "cb_buckets"
     # Keep managed-table storage inside the repo scratch area regardless
     # of the host session's warehouse default.
-    loc = os.path.join(os.path.dirname(_scratch(sf_dir, "x")), "warehouse")
+    loc = scratch.path(sf_dir, "warehouse")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
     tag = re.sub(r"[^a-z0-9]", "_", os.path.basename(os.path.normpath(sf_dir)))
     t_orders, t_lineitem = f"{db}.orders_b_{tag}", f"{db}.lineitem_b_{tag}"
@@ -185,7 +185,7 @@ def ddl_rebucket_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     db = "cb_buckets"
-    loc = os.path.join(os.path.dirname(_scratch(sf_dir, "x")), "warehouse")
+    loc = scratch.path(sf_dir, "warehouse")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
     tag = re.sub(r"[^a-z0-9]", "_", os.path.basename(os.path.normpath(sf_dir)))
     t4, t8 = f"{db}.orders_rb4_{tag}", f"{db}.orders_rb8_{tag}"

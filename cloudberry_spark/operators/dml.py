@@ -28,9 +28,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 from cloudberry_spark.sources.snapshot import SnapshotTable
 
 
@@ -304,7 +304,7 @@ def merge_into_multi(
 )
 def dml_insert_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = load_table(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "dml_orders_ins")
+    path = scratch.path(sf_dir, "dml_orders_ins")
     st = SnapshotTable.init(path, od.filter(F.col("o_orderkey") % 4 == 0))
     insert_into(spark, st, od.filter(F.col("o_orderkey") % 4 == 1))
     return (
@@ -338,7 +338,7 @@ def dml_insert_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dml_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 3 == 0)
-    path = _scratch(sf_dir, "dml_lineitem_ud")
+    path = scratch.path(sf_dir, "dml_lineitem_ud")
     st = SnapshotTable.init(path, li)
     update_table(
         spark,
@@ -386,7 +386,7 @@ def dml_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dml_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
-    path = _scratch(sf_dir, "dml_customer_merge")
+    path = scratch.path(sf_dir, "dml_customer_merge")
     st = SnapshotTable.init(path, cust.filter(F.col("c_custkey") % 3 == 0))
     source = cust.filter(F.col("c_custkey") % 2 == 0).withColumn(
         "c_mktsegment", F.lit("MERGED")
@@ -455,7 +455,7 @@ def dml_merge_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cloudberry_spark.operators.tpch import dsum
 
     orders = load_table(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "dml_orders_merge_del")
+    path = scratch.path(sf_dir, "dml_orders_merge_del")
     st = SnapshotTable.init(
         path,
         orders.filter(F.col("o_orderkey") % 3 == 0).select(
@@ -529,8 +529,8 @@ def dml_cascade_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     doomed = cust.where(F.col("c_custkey") % 17 == 0).select("c_custkey")
 
-    cpath = _scratch(sf_dir, "dml_cascade_cust")
-    opath = _scratch(sf_dir, "dml_cascade_ord")
+    cpath = scratch.path(sf_dir, "dml_cascade_cust")
+    opath = scratch.path(sf_dir, "dml_cascade_ord")
     cst = SnapshotTable.init(cpath, cust)
     ost = SnapshotTable.init(opath, orders)
 
@@ -751,7 +751,7 @@ def dml_insert_on_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    path = _scratch(sf_dir, "dml_upsert_conflict")
+    path = scratch.path(sf_dir, "dml_upsert_conflict")
     st = SnapshotTable.init(path, cust.filter(F.col("c_custkey") % 4 == 0))
     incoming = cust.filter(F.col("c_custkey") % 3 == 0).select(
         "c_custkey",
@@ -840,7 +840,7 @@ def dml_snapshot_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    path = _scratch(sf_dir, "dml_snapshot_lifecycle")
+    path = scratch.path(sf_dir, "dml_snapshot_lifecycle")
     st = SnapshotTable.init(path, orders.filter(F.col("o_orderkey") % 4 == 0))
     insert_into(spark, st, orders.filter(F.col("o_orderkey") % 4 == 1))
     source = orders.filter(F.col("o_orderkey") % 6 == 0).select(
@@ -912,7 +912,7 @@ def dml_partition_confined_update(spark: SparkSession, sf_dir: str) -> DataFrame
         "4-NOT SPECIFIED",
         "5-LOW",
     ]
-    path = _scratch(sf_dir, "dml_part_confined")
+    path = scratch.path(sf_dir, "dml_part_confined")
     st = SnapshotTable.init_partitioned(
         path, orders, "o_orderpriority", prios
     )
@@ -966,7 +966,7 @@ def dml_update_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") % 10 == 0
     ).select("l_orderkey", "l_linenumber", "l_extendedprice", "l_returnflag")
-    path = _scratch(sf_dir, "dml_update_returning")
+    path = scratch.path(sf_dir, "dml_update_returning")
     st = SnapshotTable.init(path, li)
     cond = F.col("l_returnflag") == "R"
     base = st.current_version()
@@ -1024,7 +1024,7 @@ def dml_insert_do_nothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    path = _scratch(sf_dir, "dml_insert_nothing")
+    path = scratch.path(sf_dir, "dml_insert_nothing")
     st = SnapshotTable.init(path, cust.filter(F.col("c_custkey") % 4 == 0))
     incoming = cust.filter(F.col("c_custkey") % 3 == 0).select(
         "c_custkey", F.lit("FRESH").alias("c_mktsegment")
@@ -1076,7 +1076,7 @@ def dml_update_from_delete_using(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     cust = load_table(spark, sf_dir, "customer")
-    path = _scratch(sf_dir, "dml_orders_upd_from")
+    path = scratch.path(sf_dir, "dml_orders_upd_from")
     st = SnapshotTable.init(path, od)
     update_from(
         spark,
@@ -1154,7 +1154,7 @@ def dml_upsert_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    path = _scratch(sf_dir, "dml_upsert_cond")
+    path = scratch.path(sf_dir, "dml_upsert_cond")
     st = SnapshotTable.init(path, cust.filter(F.col("c_custkey") % 4 == 0))
     incoming = cust.filter(F.col("c_custkey") % 3 == 0).select(
         "c_custkey",
@@ -1245,7 +1245,7 @@ def dml_delete_using_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cust = load_table(spark, sf_dir, "customer")
     li = load_table(spark, sf_dir, "lineitem")
-    path = _scratch(sf_dir, "dml_multi_using")
+    path = scratch.path(sf_dir, "dml_multi_using")
     st = SnapshotTable.init(path, od)
     delete_using_multi(
         spark,

@@ -23,13 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.operators.dml import (
     delete_using,
     update_from,
     update_join,
 )
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 from cloudberry_spark.sources.snapshot import SnapshotTable
 from cloudberry_spark.sql.pgcompat import translate_pg_sql
 
@@ -96,7 +96,7 @@ WITH r AS ({_R_SQL}), s AS ({_S_SQL}), after AS (
 )
 def regress_qpdml_join_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = SnapshotTable.init(
-        _scratch(sf_dir, "qpdml_upd"), _fixture(spark, _R_SQL)
+        scratch.path(sf_dir, "qpdml_upd"), _fixture(spark, _R_SQL)
     )
     update_from(
         spark, st, _fixture(spark, _S_SQL), ["a"],
@@ -125,7 +125,7 @@ def regress_qpdml_join_update_values(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     st = SnapshotTable.init(
-        _scratch(sf_dir, "qpdml_updv"), _fixture(spark, _R_SQL)
+        scratch.path(sf_dir, "qpdml_updv"), _fixture(spark, _R_SQL)
     )
     vals = spark.createDataFrame([(100, 21)], "i int, j int")
     update_join(
@@ -155,7 +155,7 @@ WITH r AS ({_R_SQL}), s AS ({_S_SQL}), foo AS (
 )
 def regress_qpdml_join_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     st = SnapshotTable.init(
-        _scratch(sf_dir, "qpdml_del"), _fixture(spark, _R_SQL)
+        scratch.path(sf_dir, "qpdml_del"), _fixture(spark, _R_SQL)
     )
     r = st.read(spark)
     s = _fixture(spark, _S_SQL)
@@ -186,7 +186,7 @@ def regress_qpdml_delete_multi_using(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     st = SnapshotTable.init(
-        _scratch(sf_dir, "qpdml_delm"), _fixture(spark, _R_SQL)
+        scratch.path(sf_dir, "qpdml_delm"), _fixture(spark, _R_SQL)
     )
     s = _fixture(spark, _S_SQL)
     p = _fixture(spark, _P_SQL)

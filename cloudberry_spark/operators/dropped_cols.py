@@ -36,8 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 from cloudberry_spark.sources.snapshot import SnapshotTable
 
 
@@ -81,7 +81,7 @@ def _mpp21090_sequence(
          the reference's SplitUpdate; here a rewrite commit)
       6: after DELETE WHERE col3='c'
     """
-    root = _scratch(sf_dir, f"dropped_cols_{name}")
+    root = scratch.path(sf_dir, f"dropped_cols_{name}")
     seed = spark.createDataFrame(
         [(v_hi, v_hi, "a", v_hi, 0)], "col1 long, col2 long, col3 string, col4 long, col5 long"
     )
@@ -223,7 +223,7 @@ def regress_dropped_cols_dml_sequence_int8(
     tags=("regress", "dropped-cols", "ddl"),
 )
 def regress_dropped_cols_readd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    root = _scratch(sf_dir, "dropped_cols_readd")
+    root = scratch.path(sf_dir, "dropped_cols_readd")
     t = SnapshotTable.init(
         root,
         spark.createDataFrame(
@@ -278,7 +278,7 @@ def regress_dropped_cols_readd(spark: SparkSession, sf_dir: str) -> DataFrame:
 def regress_dropped_cols_join_after_drop(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    root = _scratch(sf_dir, "dropped_cols_join")
+    root = scratch.path(sf_dir, "dropped_cols_join")
     t = SnapshotTable.init(
         root,
         spark.createDataFrame(

@@ -31,8 +31,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 from cloudberry_spark.sources.snapshot import SnapshotTable
 
 
@@ -135,7 +135,7 @@ class GeneratedTable:
 
 def _gtest1(spark: SparkSession, sf_dir: str, tag: str) -> GeneratedTable:
     gt = GeneratedTable.create(
-        spark, _scratch(sf_dir, f"gen_{tag}"), "a int, b int",
+        spark, scratch.path(sf_dir, f"gen_{tag}"), "a int, b int",
         generated={"b": "a * 2"},
     )
     # INSERT INTO gtest1 VALUES (1); (2, DEFAULT); (3, DEFAULT),

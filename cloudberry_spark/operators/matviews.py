@@ -29,9 +29,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 from cloudberry_spark.sources.snapshot import SnapshotTable
 
 
@@ -138,13 +138,13 @@ def regress_matview_datastatus(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("id") + 1).cast("int").alias("b"),
         )
     )
-    st = SnapshotTable.init(_scratch(sf_dir, "matview_t1"), t1_seed)
+    st = SnapshotTable.init(scratch.path(sf_dir, "matview_t1"), t1_seed)
     mv0 = MatView.create(
-        spark, _scratch(sf_dir, "matview_mv0"), st, lambda df: df
+        spark, scratch.path(sf_dir, "matview_mv0"), st, lambda df: df
     )
     mv1 = MatView.create(
         spark,
-        _scratch(sf_dir, "matview_mv1"),
+        scratch.path(sf_dir, "matview_mv1"),
         st,
         lambda df: df.groupBy("a").agg(
             F.count("*").alias("cnt"), F.sum("b").alias("sum_b")
@@ -197,10 +197,10 @@ def regress_matview_no_data_refresh(spark: SparkSession, sf_dir: str) -> DataFra
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
-    st = SnapshotTable.init(_scratch(sf_dir, "matview_orders"), orders)
+    st = SnapshotTable.init(scratch.path(sf_dir, "matview_orders"), orders)
     mv = MatView.create(
         spark,
-        _scratch(sf_dir, "matview_prio"),
+        scratch.path(sf_dir, "matview_prio"),
         st,
         lambda df: df.groupBy("o_orderpriority").agg(F.count("*").alias("n")),
         with_no_data=True,

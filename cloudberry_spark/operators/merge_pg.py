@@ -37,8 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 from cloudberry_spark.sources.snapshot import SnapshotTable
 
 #: WHEN clause: (kind, qualifier SQL over t/s or None, action).
@@ -186,7 +186,7 @@ def _setup(spark: SparkSession, sf_dir: str, tag: str,
            tgt_rows=None, src_rows=None):
     t = spark.createDataFrame(tgt_rows or _TGT, "tid int, balance int")
     s = spark.createDataFrame(src_rows or _SRC, "sid int, delta int")
-    st = SnapshotTable.init(_scratch(sf_dir, f"merge_{tag}"), t)
+    st = SnapshotTable.init(scratch.path(sf_dir, f"merge_{tag}"), t)
     return st, s
 
 
@@ -469,7 +469,7 @@ def _m_source_groupby(spark, sf_dir):
 def _m_wq_default(spark, sf_dir):
     # empty target with the wq_target schema
     t0 = spark.createDataFrame([], "tid int, balance int")
-    st = SnapshotTable.init(_scratch(sf_dir, "merge_wq_default"), t0)
+    st = SnapshotTable.init(scratch.path(sf_dir, "merge_wq_default"), t0)
     s = spark.createDataFrame([(100, 1)], "balance int, sid int")
     merge_pg(spark, st, s, "t.tid = s.sid",
              [("not_matched", None, ("insert", {"tid": "s.sid"}))],
@@ -487,7 +487,7 @@ def _m_wq_default(spark, sf_dir):
 )
 def _m_wq_false(spark, sf_dir):
     t0 = spark.createDataFrame([], "tid int, balance int")
-    st = SnapshotTable.init(_scratch(sf_dir, "merge_wq_false"), t0)
+    st = SnapshotTable.init(scratch.path(sf_dir, "merge_wq_false"), t0)
     s = spark.createDataFrame([(100, 1)], "balance int, sid int")
     merge_pg(spark, st, s, "t.tid = s.sid",
              [("not_matched", "FALSE", ("insert", {"tid": "s.sid"}))],
@@ -507,7 +507,7 @@ def _m_wq_false(spark, sf_dir):
 )
 def _m_wq_chain(spark, sf_dir):
     t0 = spark.createDataFrame([], "tid int, balance int")
-    st = SnapshotTable.init(_scratch(sf_dir, "merge_wq_chain"), t0)
+    st = SnapshotTable.init(scratch.path(sf_dir, "merge_wq_chain"), t0)
     s = spark.createDataFrame([(100, 1)], "balance int, sid int")
     on = "t.tid = s.sid"
     upd = ("update", {"balance": "t.balance + s.balance"})

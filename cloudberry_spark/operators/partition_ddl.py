@@ -39,9 +39,9 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 from cloudberry_spark.sources.snapshot import SnapshotTable, _schema_after
 
 
@@ -248,7 +248,7 @@ def ddl_part_split_exchange(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = orders.filter(F.col("o_orderkey") < 1500)
     t = RangePartitionedTable.create(
-        _scratch(sf_dir, "part_ddl_split_exchange"),
+        scratch.path(sf_dir, "part_ddl_split_exchange"),
         base,
         "o_orderkey",
         [(0, 500), (500, 1000), (1000, 1500)],
@@ -297,7 +297,7 @@ def ddl_part_add_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = orders.filter(F.col("o_orderkey") < 1000)
     t = RangePartitionedTable.create(
-        _scratch(sf_dir, "part_ddl_add_trunc"),
+        scratch.path(sf_dir, "part_ddl_add_trunc"),
         base,
         "o_orderkey",
         [(0, 500), (500, 1000)],

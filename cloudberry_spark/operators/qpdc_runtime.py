@@ -46,7 +46,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cloudberry_spark.sources.external import _scratch
+from cloudberry_spark import scratch
 from cloudberry_spark.sources.snapshot import SnapshotTable
 
 # ---------------------------------------------------------------------------
@@ -609,13 +609,13 @@ def run_scenario(spark: SparkSession, sf_dir: str, name: str,
             continue
         if st.op == "create":
             tables[st.table] = _Table(
-                spark, _scratch(sf_dir, f"qpdc_{name}_{st.table}"),
+                spark, scratch.path(sf_dir, f"qpdc_{name}_{st.table}"),
                 a["cols"], a["dist"], a["partspec"])
             tables[st.table].ins_defaults.update(a.get("defaults") or {})
         elif st.op == "create_like":
             src = tables[a["like"]]
             tables[st.table] = _Table(
-                spark, _scratch(sf_dir, f"qpdc_{name}_{st.table}"),
+                spark, scratch.path(sf_dir, f"qpdc_{name}_{st.table}"),
                 src.cols, None, None)
         elif st.op == "insert_values":
             t = tables[st.table]

@@ -7,8 +7,8 @@ implementations here:
 
 1. ``recursive_union`` — a driver-side fixpoint loop (union-accumulate
    until the step produces no new rows), the SURVEY §7.3 plan. Each
-   iteration is lazy DataFrame algebra; localCheckpoint() every few
-   rounds truncates the lineage so plans don't grow unboundedly —
+   iteration is lazy DataFrame algebra; ``scratch.checkpoint`` every
+   few rounds truncates the lineage so plans don't grow unboundedly —
    required for deep recursions on a real cluster.
 2. Spark 4's native ``WITH RECURSIVE`` where the SQL form suffices.
 """
@@ -20,8 +20,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
-from cloudberry_spark.lineage import truncate_lineage
 from cloudberry_spark.registry import register, register_sql
 
 
@@ -44,9 +44,7 @@ def recursive_union(
     for i in range(max_iterations):
         frontier = step(frontier)
         if (i + 1) % checkpoint_every == 0:
-            # dir-aware: reliable checkpoint() on clusters (survives
-            # executor loss), localCheckpoint only on bare local runs
-            frontier = truncate_lineage(frontier, eager=True)
+            frontier = scratch.checkpoint(frontier)
         if frontier.isEmpty():
             return acc
         acc = acc.unionByName(frontier)

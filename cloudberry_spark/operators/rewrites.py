@@ -25,6 +25,7 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.operators.tpch import dsum_combine, dsum_split
 from cloudberry_spark.registry import register
@@ -177,10 +178,8 @@ def rollup_from_matview(mv: DataFrame, keep_keys: list[str]) -> DataFrame:
 def aqumv_rollup_answer(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from cloudberry_spark.sources.external import _scratch
-
     li = load_table(spark, sf_dir, "lineitem")
-    mv_path = _scratch(sf_dir, "aqumv_mv")
+    mv_path = scratch.path(sf_dir, "aqumv_mv")
     # matview definition: finer grouping with decomposable partials;
     # money partials stored as exact split longs (see rollup_from_matview)
     p_hi, p_lo = dsum_split(F.col("l_extendedprice"), scale=2)
@@ -223,10 +222,8 @@ def aqumv_rollup_answer(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("rewrite", "aqumv", "matview"),
 )
 def aqumv_filter_subsumption(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cloudberry_spark.sources.external import _scratch
-
     orders = load_table(spark, sf_dir, "orders")
-    mv_path = _scratch(sf_dir, "aqumv_filter_mv")
+    mv_path = scratch.path(sf_dir, "aqumv_filter_mv")
     (
         orders.where(F.col("o_totalprice") > 100000)
         .select("o_orderkey", "o_orderpriority", "o_totalprice")

@@ -29,9 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.operators.dml import insert_into, update_table
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 from cloudberry_spark.sources.snapshot import SnapshotTable
 
 #: update_test's column DEFAULTs (update.sql:5-9): a DEFAULT 10, b/c none
@@ -42,7 +42,7 @@ def _seed(spark: SparkSession, sf_dir: str, tag: str) -> SnapshotTable:
     df = spark.createDataFrame(
         [(5, 10, "foo"), (10, 15, None)], "a int, b int, c string"
     )
-    return SnapshotTable.init(_scratch(sf_dir, f"upd_{tag}"), df)
+    return SnapshotTable.init(scratch.path(sf_dir, f"upd_{tag}"), df)
 
 
 def _replay(spark: SparkSession, st: SnapshotTable, upto: int) -> None:
@@ -194,7 +194,7 @@ _INS_DEFAULTS = {"col3": "testing"}
 
 def _ins_seed(spark: SparkSession, sf_dir: str, tag: str) -> SnapshotTable:
     df = spark.createDataFrame([], "col1 int, col2 int, col3 string")
-    return SnapshotTable.init(_scratch(sf_dir, f"ins_{tag}"), df)
+    return SnapshotTable.init(scratch.path(sf_dir, f"ins_{tag}"), df)
 
 
 def _ins(spark: SparkSession, st: SnapshotTable, rows) -> None:

@@ -28,6 +28,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.operators.dml import (
     delete_from,
@@ -35,7 +36,6 @@ from cloudberry_spark.operators.dml import (
     update_table,
 )
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 from cloudberry_spark.sources.snapshot import SnapshotTable
 
 #: constructs that make a view read-only, per
@@ -264,7 +264,7 @@ def _cust_view(
         .select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
         .filter(F.col("c_custkey") % 4 == 0)
     )
-    st = SnapshotTable.init(_scratch(sf_dir, f"dml_view_{tag}"), cust)
+    st = SnapshotTable.init(scratch.path(sf_dir, f"dml_view_{tag}"), cust)
     return UpdatableView.create(spark, ddl, st)
 
 
@@ -527,7 +527,7 @@ class StackedView:
 def _chain_fixture(spark: SparkSession, sf_dir: str, tag: str,
                    check: str) -> "StackedView":
     st = SnapshotTable.init(
-        _scratch(sf_dir, f"uv_chain_{tag}"),
+        scratch.path(sf_dir, f"uv_chain_{tag}"),
         spark.createDataFrame([], "a INT"),
     )
     v1 = UpdatableView(

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.registry import register
 
@@ -1731,9 +1732,7 @@ def ml_text_classifier_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # score passes, the gradient); materialize it once to scratch
     # parquet (same iterative-state pattern as graph_pagerank — file
     # stats keep AQE broadcast planning intact, unlike .persist()).
-    from cloudberry_spark.pipeline.graph import _materialize
-
-    x = _materialize(
+    x = scratch.materialize(
         hashed.groupBy(
             "doc_id", (F.col("hh") % 16).cast("int").alias("dim")
         ).agg(
@@ -1769,11 +1768,9 @@ def ml_text_classifier_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # w2 (16 rows) feeds BOTH the accuracy readout (inside a broadcast)
     # and the output projection; un-materialized, the whole two-epoch
-    # GD chain over the feature table evaluates twice. localCheckpoint:
+    # GD chain over the feature table evaluates twice. A checkpoint:
     # one job, dimension-table-sized state, lineage truncated.
-    from cloudberry_spark.pipeline.graph import _checkpoint
-
-    w2 = _checkpoint(w2)
+    w2 = scratch.checkpoint(w2)
     acc = scores(w2).agg(
         F.round(
             F.avg(

@@ -21,7 +21,7 @@ Scale design (100 TB):
   partitioning and AQE coalesces the small label side as it shrinks.
 - A checkpoint after every round truncates lineage; without it the
   logical plan doubles per iteration and planning time explodes long
-  before data size matters. ``_truncate_lineage`` picks reliable
+  before data size matters. ``scratch.checkpoint`` picks reliable
   ``checkpoint()`` (survives executor loss) whenever a checkpoint dir
   is configured and only falls back to ``localCheckpoint()`` on bare
   local sessions.
@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.pipeline.dedup import (
     lsh_candidate_pairs,
@@ -46,9 +47,6 @@ from cloudberry_spark.pipeline.dedup import (
     lsh_pairs_sql,
 )
 from cloudberry_spark.registry import register
-
-
-from cloudberry_spark.lineage import truncate_lineage as _truncate_lineage
 
 
 def connected_components(
@@ -74,8 +72,8 @@ def connected_components(
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
     )
-    sym = _truncate_lineage(sym)
-    labels = _truncate_lineage(
+    sym = scratch.checkpoint(sym)
+    labels = scratch.checkpoint(
         nodes.select(F.col(id_col).alias("u"), F.col(id_col).alias("label"))
     )
     for _ in range(max_rounds):
@@ -100,7 +98,7 @@ def connected_components(
                 ).alias("label"),
             )
         )
-        proposed = _truncate_lineage(proposed)
+        proposed = scratch.checkpoint(proposed)
         changed = (
             proposed.where(F.col("label") < F.col("old_label")).limit(1).count()
         )

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.pipeline.dedup import (
     N_BANDS,
@@ -82,11 +83,9 @@ def curate(
         # (~5 logical corpus passes; AQE's ReusedExchange dedups only
         # the band exchange above it). One pass computes the survivors;
         # every branch then reads a columnar file relation with real
-        # size stats. Rebuilt inside fn() on every call
-        # (mode=overwrite in _materialize) — never reused across runs.
-        from cloudberry_spark.pipeline.graph import _materialize
-
-        s1 = _materialize(s1, spark, sf_dir, "curate_survivors")
+        # size stats. Rebuilt inside fn() on every call (mode=overwrite
+        # in scratch.materialize) — never reused across runs.
+        s1 = scratch.materialize(s1, spark, sf_dir, "curate_survivors")
     drops = (
         lsh_candidate_pairs(s1, "doc_id", "text")
         .select(F.col("id_b").alias("doc_id"))

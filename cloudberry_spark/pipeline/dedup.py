@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.pipeline.hashing import (
     MERSENNE_P,
@@ -968,8 +969,6 @@ def dedup_edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "dedup", "incremental"),
 )
 def dedup_incremental_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cloudberry_spark.pipeline.graph import _materialize
-
     docs = load_table(spark, sf_dir, "documents")
     # The standing index, ONE Arrow pass + ONE materialization per run
     # (r12 opt; was: separate passes for the even-half signatures, the
@@ -980,7 +979,7 @@ def dedup_incremental_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame
     # probe bands, Jaccard-verify shingle sets) derives map-side from
     # the scratch table. At scale this IS the standing index layout:
     # shingle sets for verify next to signatures for banding.
-    sig = _materialize(
+    sig = scratch.materialize(
         docs.select(
             "doc_id", _SHINGLE_SIG_UDF(F.col("text")).alias("__s")
         ).select(

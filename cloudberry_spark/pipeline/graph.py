@@ -25,67 +25,16 @@ Edges derive from the fixtures: customer→supplier from co-occurring
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.registry import register
+from cloudberry_spark.scratch import materialize as _materialize
 
 #: PageRank damping factor (the canonical 0.85) and iteration count.
 PR_DAMPING = 0.85
-
-def _materialize(df, spark, sf_dir: str, tag: str):
-    """Materialize an iteration-invariant derived table to scratch
-    parquet and read it back. Compared with .persist(): the lineage is
-    truncated the same way, but the planner sees a real file relation
-    with exact size statistics (so AQE's broadcast decisions behave
-    exactly as they would for any table), re-runs are deterministic, and
-    nothing pins executor memory. This is the matview pattern every
-    iterative operator here uses for its derived graph/features.
-    """
-    from cloudberry_spark import planhook
-    from cloudberry_spark.sources.external import _scratch
-    from cloudberry_spark.sql.scale_fixture import _sweep_stale_pid_dirs
-
-    # Per-PID scratch dir: concurrent processes at the same SF (test
-    # shards, parallel bench invocations) must never overwrite a path
-    # another process is mid-read on (FAILED_READ_FILE otherwise).
-    # Same keying + dead-PID sweep as the spec fixture views
-    # (sql/scale_fixture.py); nothing is reused across invocations —
-    # every call still rewrites its own path with mode=overwrite.
-    base = _scratch(sf_dir, f"matpid{os.getpid()}")
-    _sweep_stale_pid_dirs(os.path.dirname(base), "matpid")
-    path = os.path.join(base, tag)
-    # the final plan only shows the post-materialization read; record
-    # this step's plan so tools/plan_report.py counts the real work
-    planhook.record(df)
-    # coalesce: these state tables are node/edge-list sized; writing 32
-    # near-empty files per round costs more task/commit overhead than
-    # the data. At cluster scale pick partitions ~ |state| / 128MB.
-    df.coalesce(8).write.mode("overwrite").parquet(path)
-    # the writer's schema: no footer-reading job to infer it again
-    return spark.read.schema(df.schema).parquet(path)
-
-
-def _checkpoint(df):
-    """Materialize SMALL iteration state in executor memory
-    (localCheckpoint): same lineage truncation as scratch parquet, one
-    job, no write+read round-trip. Use for per-round state that is
-    node-table sized and referenced more than once; keep scratch
-    parquet (_materialize) for the big iteration-invariant relations,
-    where the planner needs real file-size statistics for its join
-    decisions. On a cluster, set SPARK_GRAFT_CHECKPOINT_DIR (session.py)
-    and switch to reliable checkpoints if executor loss must not
-    recompute a round."""
-    from cloudberry_spark import planhook
-
-    planhook.record(df)
-    return df.localCheckpoint(eager=True)
-
-
 PR_ITERS = 3
 
 

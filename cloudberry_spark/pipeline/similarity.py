@@ -22,14 +22,11 @@ to full ANN per the build brief.
 
 from __future__ import annotations
 
-# Module-level so the pandas UDF factory's postponed type hints
-# ("pd.Series" under `from __future__ import annotations`) resolve.
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.registry import register
 
@@ -40,7 +37,7 @@ N_QUERIES = 10  # vec_id < 10 are the query set in the fixture demos
 def dot_expr(a: Column, b: Column) -> Column:
     """Column-expression dot product (Catalyst HOF left fold).
 
-    Kept as the differential pin for the Arrow kernels below — the HOF
+    The reference for any vectorized pair-scoring kernel — the HOF
     lambdas are never whole-stage-codegen'd, so every element walks an
     interpreted eval tree with JIT-dependent wall time (the r12 finding
     that motivated the hashing.py kernels; guide §4.2)."""
@@ -65,90 +62,6 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
-# ---------------------------------------------------------------------------
-# Arrow-vectorized twins of the fold expressions (r13 opt, guide §4.2)
-# ---------------------------------------------------------------------------
-#
-# Bit-exactness argument (mirrors hashing.py's kernels): the Catalyst
-# form is a strict left fold `((0.0 + p1) + p2) + ...` over per-element
-# float64 products. In the kernel, (a) float32 -> float64 widening via
-# numpy astype is the same exact conversion as `.cast("double")`,
-# (b) elementwise *, -, are the identical IEEE-754 double ops, and
-# (c) `np.add.accumulate` is a strict sequential left fold
-# (out[i] = out[i-1] + in[i]) — prepending the fold's 0.0 start
-# reproduces the Catalyst sum bit for bit (including the +0.0 result on
-# an all-(-0.0) input, which bare accumulate would get wrong).
-# sqrt/division are single correctly-rounded IEEE ops on both sides.
-# Differentially pinned in tests/test_pipeline.py over the full fixture
-# embeddings table.
-
-
-def _make_fold_udf(mode: str):
-    """pandas_udf twin of a Catalyst fold. mode: 'dot' (sum a_i*b_i),
-    'l2' (sum (a_i-b_i)^2), or 'cos' (dot / (norm_a * norm_b), composed
-    with exactly cosine_expr's operand order)."""
-    import math
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    def fold_sum(p):
-        # strict left fold from 0.0, exactly F.aggregate's accumulator
-        return np.add.accumulate(np.concatenate(((0.0,), p)))[-1]
-
-    def fold_sum2d(P):
-        # the same strict per-row left fold, whole batch at once:
-        # np.add.accumulate(axis=1) is sequential within each row
-        # (out[i] = out[i-1] + in[i]), and the final `+ 0.0` reproduces
-        # the fold's 0.0 seed on the only input it can differ for (an
-        # all-(-0.0) row) — Catalyst's fold can never yield -0.0.
-        return np.add.accumulate(P, axis=1)[:, -1] + 0.0
-
-    @F.pandas_udf(T.DoubleType())
-    def fold(a: pd.Series, b: pd.Series) -> pd.Series:
-        try:
-            # batch-vectorized path (guide §4.2: whole Arrow batches
-            # through numpy, no per-row Python loop) — equal-length,
-            # null-free vector columns, i.e. every engine call site
-            A = np.vstack(a.to_numpy()).astype(np.float64)
-            B = np.vstack(b.to_numpy()).astype(np.float64)
-        except ValueError:  # ragged/null rows: exact row-wise fallback
-            out = np.empty(len(a), dtype=np.float64)
-            for j in range(len(a)):
-                xv = np.asarray(a.iloc[j], dtype=np.float64)
-                yv = np.asarray(b.iloc[j], dtype=np.float64)
-                if mode == "dot":
-                    out[j] = fold_sum(xv * yv)
-                elif mode == "l2":
-                    d = xv - yv
-                    out[j] = fold_sum(d * d)
-                else:  # cos
-                    dd = fold_sum(xv * yv)
-                    na = math.sqrt(fold_sum(xv * xv))
-                    nb = math.sqrt(fold_sum(yv * yv))
-                    out[j] = dd / (na * nb)
-            return pd.Series(out)
-        if mode == "dot":
-            out = fold_sum2d(A * B)
-        elif mode == "l2":
-            D = A - B
-            out = fold_sum2d(D * D)
-        else:  # cos — exactly cosine_expr's operand order
-            dd = fold_sum2d(A * B)
-            na = np.sqrt(fold_sum2d(A * A))
-            nb = np.sqrt(fold_sum2d(B * B))
-            out = dd / (na * nb)
-        return pd.Series(out)
-
-    return fold
-
-
-_ARROW_DOT = _make_fold_udf("dot")
-_ARROW_L2SQ = _make_fold_udf("l2")
-_ARROW_COS = _make_fold_udf("cos")
-
 # Default entry points: the EXPRESSION forms. Decision record (r13,
 # OPTIMIZATION_r13.md §2): interleaved ABAB at BOTH 8 and 32 cores,
 # across four sessions, had the expression folds beating the Arrow
@@ -160,11 +73,9 @@ _ARROW_COS = _make_fold_udf("cos")
 # partitioning re-inserts) never amortize, and unlike the md5 HOF
 # lambdas (16-20x kernel win, kept in pipeline/hashing.py) the
 # arithmetic interpreters showed no JIT pathology in ~40 measured
-# invocations. The kernels stay bit-identical-pinned
-# (tests/test_pipeline.py) — at real per-task volumes they are the
-# flip-ready option, and sim_ivfpq_search's hot path needs neither:
-# its probed-list scoring is pure codegen lookup arithmetic after the
-# ADC restructure below.
+# invocations, so the kernels were deleted. sim_ivfpq_search's hot path
+# needs neither: its probed-list scoring is pure codegen lookup
+# arithmetic after the ADC restructure below.
 dot = dot_expr
 norm = norm_expr
 cosine = cosine_expr
@@ -964,9 +875,7 @@ def sim_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window) re-runs three times over the corpus. One scratch-parquet
     # materialization (r13 opt, guide §5/§3.3) computes it once and
     # gives the self-join real file statistics; rebuilt per call.
-    from cloudberry_spark.pipeline.graph import _materialize
-
-    assigned = _materialize(
+    assigned = scratch.materialize(
         vecs.crossJoin(F.broadcast(cents))
         .withColumn("dist", d)
         .withColumn("rn", F.row_number().over(w))
@@ -1503,8 +1412,6 @@ RERANK = 3 * K  # ADC shortlist size fed to the exact re-rank stage
     tags=("pipeline", "similarity", "ann"),
 )
 def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cloudberry_spark.pipeline.graph import _materialize
-
     emb = load_table(spark, sf_dir, "embeddings")
     lng = emb.select(
         "vec_id",
@@ -1521,7 +1428,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted (at scale: the standing index tables next to the
     # corpus); search-time plans below touch only these small/coded
     # relations plus the probed inverted list.
-    cb = _materialize(
+    cb = scratch.materialize(
         lng.groupBy(F.col("label").alias("cb_label"), "s", "i").agg(
             F.avg("x").alias("c")
         ),
@@ -1544,7 +1451,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # map-side expression over the probed list, and the search plan
     # loses its largest shuffle (the probed-list-sized exchange feeding
     # the old (query_id, s, code) join + groupBy).
-    codes = _materialize(
+    codes = scratch.materialize(
         d.withColumn("rn", F.row_number().over(wc))
         .where(F.col("rn") == 1)
         .groupBy("vec_id")
@@ -1575,9 +1482,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe (N_QUERIES rows) is consumed by the ADC distance table AND
     # the inverted-list join; un-materialized, each consumer replays
     # the centroid aggregation over the full embeddings table.
-    from cloudberry_spark.pipeline.graph import _checkpoint
-
-    probe = _checkpoint(probe)
+    probe = scratch.checkpoint(probe)
     # ADC distance table: query subvector vs every codebook entry
     dtable = (
         probe.crossJoin(F.broadcast(cb))

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.registry import register
 
@@ -1396,8 +1397,6 @@ def text_inverted_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.window import Window
 
-    from cloudberry_spark.sources.external import _scratch
-
     def _bucket_col(c):
         # md5-prefix bucket: computable identically driver-side (for
         # pruning literals) and executor-side (for writes) — the same
@@ -1410,7 +1409,7 @@ def text_inverted_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     TERMS = ["scan", "filter", "vector"]
     K1, B = 1.2, 0.75
     N_BUCKETS = 32
-    root = _scratch(sf_dir, "text_inv_index")
+    root = scratch.path(sf_dir, "text_inv_index")
     postings_p = os.path.join(root, "postings")
     dl_p = os.path.join(root, "doclen")
     stats_p = os.path.join(root, "stats")

@@ -1,8 +1,9 @@
 """Plan accumulation hook for iterative operators.
 
-Operators that materialize intermediate state to scratch parquet
-(pipeline/graph.py `_materialize` — PageRank rounds, k-core peels, the
-text-classifier feature table) truncate their lineage on purpose: the
+Iterative operators truncate their lineage on purpose through
+scratch.py (``materialize`` to scratch parquet, ``checkpoint`` for small
+per-round state — PageRank rounds, k-core peels, the text-classifier
+feature table, connected-components and recursive-union rounds): the
 final DataFrame's plan shows only the last read, so a plan report that
 inspects just the returned plan under-counts the real shuffle/join work
 by everything that ran inside the materialization steps.

@@ -139,7 +139,7 @@ def get_session(app_name: str = "cloudberry-spark") -> SparkSession:
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    # Reliable-checkpoint dir for iterative operators (lineage.py): on a
+    # Reliable-checkpoint dir for iterative operators (scratch.py): on a
     # cluster point this at HDFS/S3 so truncated lineage survives
     # executor loss; unset => localCheckpoint fallback (local dev).
     ckpt = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")

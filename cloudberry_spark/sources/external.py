@@ -38,18 +38,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.operators.tpch import dsum
 from cloudberry_spark.registry import register
-
-#: Scratch area for sink/roundtrip queries (gitignored, inside the repo).
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch")
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.join(SCRATCH, tag, name)
-
 
 def copy_to(df: DataFrame, path: str, fmt: str = "csv", **options: str) -> None:
     """COPY TO: distributed unload. ``header`` defaults on for CSV."""
@@ -95,7 +87,7 @@ def copy_from(
 )
 def copy_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 7 == 0)
-    path = _scratch(sf_dir, "lineitem_csv")
+    path = scratch.path(sf_dir, "lineitem_csv")
     copy_to(li, path, "csv")
     back = copy_from(spark, path, li.schema, "csv")
     return back.groupBy("l_returnflag").agg(
@@ -121,7 +113,7 @@ def copy_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def copy_jsonl_external(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 5 == 0)
-    path = _scratch(sf_dir, "orders_jsonl")
+    path = scratch.path(sf_dir, "orders_jsonl")
     copy_to(od, path, "json")
     back = copy_from(spark, path, od.schema, "json")
     return back.groupBy("o_orderpriority").agg(
@@ -168,7 +160,7 @@ def copy_reject_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("value")
     )
-    path = _scratch(sf_dir, "lineitem_dirty_csv")
+    path = scratch.path(sf_dir, "lineitem_dirty_csv")
     lines.write.mode("overwrite").text(path)
     parsed = (
         spark.read.schema(REJECT_SCHEMA)
@@ -201,7 +193,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = load_table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate")
     )
-    path = _scratch(sf_dir, "orders_by_year")
+    path = scratch.path(sf_dir, "orders_by_year")
     od.write.mode("overwrite").partitionBy("o_year").parquet(path)
     back = spark.read.parquet(path).filter(F.col("o_year") == 1995)
     return back.groupBy("o_orderpriority").agg(F.count("*").alias("n_orders"))
@@ -224,7 +216,7 @@ def copy_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_quantity"
     )
-    path = _scratch(sf_dir, "lineitem_orc")
+    path = scratch.path(sf_dir, "lineitem_orc")
     li.write.mode("overwrite").option("compression", "zstd").orc(path)
     back = spark.read.orc(path)
     return (
@@ -255,7 +247,7 @@ def scan_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = load_table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate")
     )
-    path = _scratch(sf_dir, "orders_by_year_dpp")
+    path = scratch.path(sf_dir, "orders_by_year_dpp")
     od.write.mode("overwrite").partitionBy("o_year").parquet(path)
     fact = spark.read.parquet(path)
     # The dim must be a file scan (not a LogicalRDD): a parquet-backed dim
@@ -263,7 +255,7 @@ def scan_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcastable and inserts the DPP subquery (reuseBroadcastOnly)
     # deterministically; a createDataFrame dim's unknown size makes the
     # pruningHasBenefit heuristic flip under JVM state.
-    dim_path = _scratch(sf_dir, "dpp_dim_years")
+    dim_path = scratch.path(sf_dir, "dpp_dim_years")
     spark.createDataFrame(
         [(1994, "keep"), (1995, "keep"), (1997, "drop")], ["y", "tag"]
     ).coalesce(1).write.mode("overwrite").parquet(dim_path)
@@ -296,7 +288,7 @@ def sink_range_sorted_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_shipdate", "l_extendedprice"
     )
-    path = _scratch(sf_dir, "lineitem_range_sorted")
+    path = scratch.path(sf_dir, "lineitem_range_sorted")
     (
         li.repartitionByRange(8, "l_shipdate")
         .sortWithinPartitions("l_shipdate")
@@ -335,9 +327,9 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_quantity"
     )
-    frag = _scratch(sf_dir, "lineitem_fragmented")
+    frag = scratch.path(sf_dir, "lineitem_fragmented")
     li.repartition(64).write.mode("overwrite").parquet(frag)
-    compacted = _scratch(sf_dir, "lineitem_compacted")
+    compacted = scratch.path(sf_dir, "lineitem_compacted")
     spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(
         compacted
     )
@@ -380,7 +372,7 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     od = load_table(spark, sf_dir, "orders").select(
         F.year("o_orderdate").alias("o_year"), "o_orderpriority"
     )
-    path = _scratch(sf_dir, "orders_dpo")
+    path = scratch.path(sf_dir, "orders_dpo")
     od.write.mode("overwrite").partitionBy("o_year").parquet(path)
     saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     try:
@@ -425,7 +417,7 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
 )
 def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = load_table(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "orders_evolving")
+    path = scratch.path(sf_dir, "orders_evolving")
     # generation 1: before the ADD COLUMN
     (
         od.where(F.col("o_orderkey") % 2 == 1)
@@ -470,7 +462,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 11 == 0)
-    path = _scratch(sf_dir, "lineitem_4files")
+    path = scratch.path(sf_dir, "lineitem_4files")
     li.select("l_orderkey", "l_quantity").repartition(4).write.mode(
         "overwrite"
     ).parquet(path)
@@ -504,7 +496,7 @@ def scan_glob_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = load_table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate")
     )
-    path = _scratch(sf_dir, "orders_by_year_glob")
+    path = scratch.path(sf_dir, "orders_by_year_glob")
     od.write.mode("overwrite").partitionBy("o_year").parquet(path)
     back = spark.read.option("basePath", path).parquet(
         path + "/o_year={1995,1997}"
@@ -588,8 +580,7 @@ def copy_execute_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _derby_url(sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return f"jdbc:derby:{os.path.join(SCRATCH, tag, 'derbydb')};create=true"
+    return f"jdbc:derby:{scratch.path(sf_dir, 'derbydb')};create=true"
 
 
 _DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
@@ -706,7 +697,7 @@ def sink_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         norm8(F.col("l_partkey"), "p_lo", "p_hi"),
         bits=8,
     )
-    path = _scratch(sf_dir, "lineitem_zorder")
+    path = scratch.path(sf_dir, "lineitem_zorder")
     (
         scaled.withColumn("zkey", z)
         .repartitionByRange(8, "zkey")
@@ -752,7 +743,7 @@ def sink_multilevel_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("o_year", F.year("o_orderdate"))
         .withColumn("o_month", F.month("o_orderdate"))
     )
-    path = _scratch(sf_dir, "orders_by_year_month")
+    path = scratch.path(sf_dir, "orders_by_year_month")
     od.write.mode("overwrite").partitionBy("o_year", "o_month").parquet(path)
     back = spark.read.parquet(path).filter(
         (F.col("o_year") == 1996) & (F.col("o_month").isin(1, 2, 3))
@@ -790,7 +781,7 @@ def sink_multilevel_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def copy_fixedwidth_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = load_table(spark, sf_dir, "nation")
-    path = _scratch(sf_dir, "nation_fixedwidth")
+    path = scratch.path(sf_dir, "nation_fixedwidth")
     lines = nat.select(
         F.format_string(
             "%-5d%-20s%-5d",

@@ -39,8 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from cloudberry_spark import scratch
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 
 
 class RejectLimitReached(RuntimeError):
@@ -118,7 +118,7 @@ MORE_ERRORS = GOOD[:4] + [f"bad{k}" for k in range(6)]  # 6 malformed rows
     tags=("source", "exttab"),
 )
 def regress_exttab_null_as(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(sf_dir, "exttab_null_as")
+    path = scratch.path(sf_dir, "exttab_null_as")
     _write_lines(spark, path, ["1, ,100", "2,7, ", "3,8,300"])
     return (
         spark.read.schema("id int, id1 int, id2 int")
@@ -141,7 +141,7 @@ def regress_exttab_null_as(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "exttab"),
 )
 def regress_exttab_header_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(sf_dir, "exttab_header")
+    path = scratch.path(sf_dir, "exttab_header")
     _write_lines(spark, path, ["i|j", "1|one", "2|two", "3|three"])
     return (
         spark.read.schema("i int, j string")
@@ -167,7 +167,7 @@ def regress_exttab_header_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "exttab"),
 )
 def regress_exttab_fill_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(sf_dir, "exttab_fill")
+    path = scratch.path(sf_dir, "exttab_fill")
     _write_lines(spark, path, ["1|one|10", "2|two", "3"])
     return (
         spark.read.schema("i int, j string, k int")
@@ -196,8 +196,8 @@ def regress_exttab_fill_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def regress_exttab_reject_limit_rows(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    few = _scratch(sf_dir, "exttab_few_errors")
-    more = _scratch(sf_dir, "exttab_more_errors")
+    few = scratch.path(sf_dir, "exttab_few_errors")
+    more = scratch.path(sf_dir, "exttab_more_errors")
     _write_lines(spark, few, FEW_ERRORS)
     _write_lines(spark, more, MORE_ERRORS)
     rows = []
@@ -233,8 +233,8 @@ def regress_exttab_reject_limit_rows(
 def regress_exttab_reject_limit_percent(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    five = _scratch(sf_dir, "exttab_5pct")
-    fifteen = _scratch(sf_dir, "exttab_15pct")
+    five = scratch.path(sf_dir, "exttab_5pct")
+    fifteen = scratch.path(sf_dir, "exttab_15pct")
     _write_lines(
         spark, five,
         [f"{k}|v{k}" for k in range(95)] + [f"bad{k}" for k in range(5)])
@@ -274,8 +274,8 @@ def regress_exttab_reject_limit_percent(
     tags=("source", "exttab", "reject"),
 )
 def regress_exttab_error_log(spark: SparkSession, sf_dir: str) -> DataFrame:
-    more = _scratch(sf_dir, "exttab_more_errors_log")
-    log = _scratch(sf_dir, "exttab_error_log_tbl")
+    more = scratch.path(sf_dir, "exttab_more_errors_log")
+    log = scratch.path(sf_dir, "exttab_error_log_tbl")
     shutil.rmtree(log, ignore_errors=True)
     _write_lines(spark, more, MORE_ERRORS)
     rows = []

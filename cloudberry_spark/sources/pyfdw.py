@@ -29,9 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 
 
 class TextFeedDataSource(DataSource):
@@ -96,7 +96,7 @@ def register_fdw(spark: SparkSession) -> None:
 )
 def fdw_python_textfeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_orderkey") % 3 == 0)
-    feed = _scratch(sf_dir, "textfeed_lineitem")
+    feed = scratch.path(sf_dir, "textfeed_lineitem")
     (
         li.select(
             F.concat_ws(

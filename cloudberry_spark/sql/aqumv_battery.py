@@ -29,9 +29,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cloudberry_spark import scratch
 from cloudberry_spark.operators.aqumv import AqumvCatalog
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 
 _DUCK_T1 = """
 WITH aqumv_t1(c1, c2, c3) AS (
@@ -75,14 +75,14 @@ def _t2(spark: SparkSession) -> DataFrame:
 def _cat1(spark: SparkSession, sf_dir: str, name: str,
           select, where) -> AqumvCatalog:
     cat = AqumvCatalog(spark, _t1(spark), "aqumv_t1")
-    cat.create_mv(name, select, where, _scratch(sf_dir, f"aqumv/{name}"))
+    cat.create_mv(name, select, where, scratch.path(sf_dir, f"aqumv/{name}"))
     return cat
 
 
 def _cat2(spark: SparkSession, sf_dir: str, name: str,
           select, where) -> AqumvCatalog:
     cat = AqumvCatalog(spark, _t2(spark), "aqumv_t2")
-    cat.create_mv(name, select, where, _scratch(sf_dir, f"aqumv/{name}"))
+    cat.create_mv(name, select, where, scratch.path(sf_dir, f"aqumv/{name}"))
     return cat
 
 
@@ -261,15 +261,15 @@ def regress_aqumv_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat = AqumvCatalog(spark, _t1(spark), "aqumv_t1")
     cat.create_mv("cand0", [("mc1", "c1"), ("mc2", "c2"),
                             ("mc3", "abs(c2)")],
-                  ["c1 > 30"], _scratch(sf_dir, "aqumv/cand0"))
+                  ["c1 > 30"], scratch.path(sf_dir, "aqumv/cand0"))
     cat.create_mv("cand1", [("mc1", "c1"), ("mc2", "c2"),
                             ("mc3", "abs(c2)"),
                             ("mc4", "abs(abs(c2) - c1 - 1)")],
-                  ["c1 > 30", "c1 < 40"], _scratch(sf_dir, "aqumv/cand1"))
+                  ["c1 > 30", "c1 < 40"], scratch.path(sf_dir, "aqumv/cand1"))
     cat.create_mv("cand2", [("mc1", "c1"), ("mc2", "c2"),
                             ("mc3", "abs(c2)"),
                             ("mc4", "abs(abs(c2) - c1 - 1)")],
-                  ["c1 > 30", "c1 < 500"], _scratch(sf_dir, "aqumv/cand2"))
+                  ["c1 > 30", "c1 < 500"], scratch.path(sf_dir, "aqumv/cand2"))
     return cat.answer(
         [("e", "sqrt(abs(abs(c2) - c1 - 1) + abs(c2))")],
         where=["c1 > 30", "c1 < 40", "sqrt(abs(c2)) > 5.8"],

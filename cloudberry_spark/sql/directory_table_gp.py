@@ -25,9 +25,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cloudberry_spark import scratch
 from cloudberry_spark.registry import register
 from cloudberry_spark.sources.dirtable import DirectoryTable
-from cloudberry_spark.sources.external import _scratch
 
 #: relative_path -> (payload, tag)
 FIXTURE_FILES = {
@@ -41,7 +41,7 @@ FIXTURE_FILES = {
 
 
 def _dt(spark: SparkSession, sf_dir: str, name: str) -> DirectoryTable:
-    dt = DirectoryTable(spark, name, _scratch(sf_dir, f"dirtable/{name}"))
+    dt = DirectoryTable(spark, name, scratch.path(sf_dir, f"dirtable/{name}"))
     for rel, (payload, tag) in FIXTURE_FILES.items():
         dt.copy_binary(payload, rel, tag=tag)
     return dt

@@ -18,14 +18,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cloudberry_spark import scratch
 from cloudberry_spark.operators.inherit import InheritanceCatalog
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 
 
 def _fixture(spark: SparkSession, sf_dir: str, name: str) -> InheritanceCatalog:
     """inherit.sql:1-28 — the a/b/c/d diamond with six rows each."""
-    cat = InheritanceCatalog(spark, _scratch(sf_dir, f"inherit/{name}"))
+    cat = InheritanceCatalog(spark, scratch.path(sf_dir, f"inherit/{name}"))
     cat.create("a", ["aa"])
     cat.create("b", ["bb"], parents=["a"])
     cat.create("c", ["cc"], parents=["a"])

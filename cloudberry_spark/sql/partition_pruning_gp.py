@@ -33,8 +33,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 
 #: (lo, hi, col3) bands — partition_pruning.sql:57-76 INSERT blocks
 _BANDS = [
@@ -87,7 +87,7 @@ def _oracle_prelude(df_variant: bool) -> str:
 
 def _fixture(spark: SparkSession, sf_dir: str, df_variant: bool) -> DataFrame:
     name = "pt_lt_tab_df" if df_variant else "pt_lt_tab"
-    path = _scratch(sf_dir, f"ppr_{name}")
+    path = scratch.path(sf_dir, f"ppr_{name}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         rows = _rows(_DF_BANDS if df_variant else _BANDS)
         if df_variant:

@@ -673,8 +673,8 @@ WITH q AS (SELECT * FROM (WITH cte AS (SELECT * FROM car) SELECT * FROM car WHER
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from cloudberry_spark import scratch  # noqa: E402
 from cloudberry_spark.registry import register  # noqa: E402
-from cloudberry_spark.sources.external import _scratch  # noqa: E402
 from cloudberry_spark.sources.snapshot import SnapshotTable  # noqa: E402
 from cloudberry_spark.sql.pgcompat import translate_pg_sql  # noqa: E402
 
@@ -756,7 +756,7 @@ def _bhs_spark(spark: SparkSession) -> DataFrame:
 )
 def regress_qpwith_dml_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = SnapshotTable.init(
-        _scratch(sf_dir, "qpwith_bhs_ctas"), _bhs_spark(spark))
+        scratch.path(sf_dir, "qpwith_bhs_ctas"), _bhs_spark(spark))
     return t.read(spark).orderBy("region", "headofstate")
 
 
@@ -776,7 +776,7 @@ def regress_qpwith_dml_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def regress_qpwith_dml_insert_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = SnapshotTable.init(
-        _scratch(sf_dir, "qpwith_bhs_insert"), _bhs_spark(spark))
+        scratch.path(sf_dir, "qpwith_bhs_insert"), _bhs_spark(spark))
     t.commit_append(_bhs_spark(spark), t.current_version(), "insert-with")
     return t.read(spark).orderBy("region", "headofstate")
 
@@ -802,7 +802,7 @@ def regress_qpwith_dml_update_from_cte(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     t = SnapshotTable.init(
-        _scratch(sf_dir, "qpwith_bhs_update"), _bhs_spark(spark))
+        scratch.path(sf_dir, "qpwith_bhs_update"), _bhs_spark(spark))
     cm = spark.sql(translate_pg_sql(_world(_BHS_CM)))
     updated = (
         t.read(spark)
@@ -835,7 +835,7 @@ def regress_qpwith_dml_delete_using_cte(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     t = SnapshotTable.init(
-        _scratch(sf_dir, "qpwith_bhs_delete"), _bhs_spark(spark))
+        scratch.path(sf_dir, "qpwith_bhs_delete"), _bhs_spark(spark))
     cm = spark.sql(translate_pg_sql(_world(_BHS_CM)))
     survivors = t.read(spark).join(
         F.broadcast(cm.select(F.col("region").alias("__cm_region"))),
@@ -891,7 +891,7 @@ def regress_qpwith_dml_delete_notin_subplan(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     t = SnapshotTable.init(
-        _scratch(sf_dir, "qpwith_bhs_delete_notin"), _bhs_spark(spark))
+        scratch.path(sf_dir, "qpwith_bhs_delete_notin"), _bhs_spark(spark))
     t.read(spark).createOrReplaceTempView("__bhs_notin")
     survivors = spark.sql(translate_pg_sql(_world(
         "select avg, region, headofstate from __bhs_notin "

@@ -90,9 +90,9 @@ def spec_views(spark, prelude: str, tag: str) -> None:
     import os
     import re
 
-    from cloudberry_spark.sql.pgcompat import translate_pg_sql
-
+    from cloudberry_spark import scratch
     from cloudberry_spark.catalog import VIEW_OWNER
+    from cloudberry_spark.sql.pgcompat import translate_pg_sql
 
     k = scale_factor()
     me = (f"spec:{tag}:k{k}", spark)
@@ -108,14 +108,7 @@ def spec_views(spark, prelude: str, tag: str) -> None:
     needed = [t for t in names if VIEW_OWNER.get(t) != me]
     if not needed:
         return
-    scratch = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-        ".scratch")
-    if k == 1:
-        base = os.path.join(scratch, f"spec_{tag}_k1_pid{os.getpid()}")
-        _sweep_stale_pid_dirs(scratch, f"spec_{tag}_k1_pid")
-    else:
-        base = os.path.join(scratch, f"spec_{tag}_k{k}")
+    base = scratch.spec_dir(tag, k)
     for t in needed:
         path = os.path.join(base, t)
         reader = spark.read
@@ -143,22 +136,3 @@ def prelude_views(prelude: str, tag: str):
         spec_views(spark, prelude, tag)
 
     return views
-
-
-def _sweep_stale_pid_dirs(scratch: str, prefix: str) -> None:
-    """Best-effort cleanup of per-PID spec fixture dirs left by dead
-    processes (a killed run cannot clean up after itself)."""
-    import os
-    import shutil
-
-    try:
-        for e in os.listdir(scratch):
-            if not e.startswith(prefix):
-                continue
-            pid = e[len(prefix):]
-            if not pid.isdigit() or int(pid) == os.getpid():
-                continue
-            if not os.path.exists(f"/proc/{pid}"):
-                shutil.rmtree(os.path.join(scratch, e), ignore_errors=True)
-    except OSError:
-        pass

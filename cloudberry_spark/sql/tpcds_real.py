@@ -52,6 +52,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cloudberry_spark import scratch
 from cloudberry_spark.operators.rewrites import rewrite_selfjoin_distinct_in
 from cloudberry_spark.registry import register
 from cloudberry_spark.sql.pgcompat import translate_pg_sql
@@ -441,8 +442,8 @@ def _split_single_cte(sql: str) -> tuple[str, str, str] | None:
 
 
 def materialize_hot_cte(
-    spark: SparkSession, sql: str, prelude: str | None, min_refs: int = 3,
-    qname: str = "shared",
+    spark: SparkSession, sf_dir: str, sql: str, prelude: str | None,
+    min_refs: int = 3, qname: str = "shared",
 ) -> DataFrame | None:
     """Build many-referenced CTEs ONCE as scratch-parquet temp views
     and run the remainder against them (the year_total q04/q11/q74
@@ -455,8 +456,6 @@ def materialize_hot_cte(
     each with >= min_refs references downstream is materialized, the
     rest stay inline. Returns None when nothing qualifies, leaving
     the inline path untouched."""
-    import os
-
     kept: list[tuple[str, str]] = []
     made = 0
     remaining = sql
@@ -489,12 +488,10 @@ def materialize_hot_cte(
             # Key the scratch path AND the temp-view name by query so
             # q04/q11/q74 (which share the CTE name year_total but not
             # its definition) can never read each other's
-            # materialization, and parallel runs don't race on one
-            # path (ADVICE r10).
+            # materialization (ADVICE r10); scratch.path keys it by SF
+            # and process too.
             view = f"{qname}__{cte}"
-            path = os.path.join(
-                os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-                ".scratch", "cte_materialized", qname, cte)
+            path = scratch.path(sf_dir, f"cte_materialized/{qname}/{cte}")
             df.write.mode("overwrite").parquet(path)
             spark.read.parquet(path).createOrReplaceTempView(view)
             # downstream TABLE references retarget to the per-query
@@ -555,12 +552,13 @@ def register_tpcds(
         if views is not None:
             if materialize_cte:
                 # empty prelude: the tables already exist as views
-                out = materialize_hot_cte(spark, _orig, "", qname=name)
+                out = materialize_hot_cte(spark, sf_dir, _orig, "", qname=name)
                 if out is not None:
                     return out
             return spark.sql(translate_pg_sql(_orig))
         if materialize_cte:
-            out = materialize_hot_cte(spark, _orig, prelude, qname=name)
+            out = materialize_hot_cte(
+                spark, sf_dir, _orig, prelude, qname=name)
             if out is not None:
                 return out
         return spark.sql(translate_pg_sql(_sql))
@@ -1203,14 +1201,12 @@ limit 100
     tags=("tpcds_real", "q4", "cte_sharing"),
 )
 def tpcds_q04_shared_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cloudberry_spark.sources.external import _scratch
-
     src = _TPCDS_Q04_TEXT
     head = src.index(_Q4_YT_HEAD)
     tail = src.index(_Q4_TAIL_MARK)
     yt_sql = src[head + len(_Q4_YT_HEAD): src.rindex(")", 0, tail)]
     yt = spark.sql(translate_pg_sql(_with_prelude(yt_sql)))
-    path = _scratch(sf_dir, "tpcds_q04_year_total")
+    path = scratch.path(sf_dir, "tpcds_q04_year_total")
     yt.write.mode("overwrite").parquet(path)
     spark.read.parquet(path).createOrReplaceTempView("year_total")
     return spark.sql(translate_pg_sql(src[tail:]))

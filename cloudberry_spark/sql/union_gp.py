@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.registry import register
 from cloudberry_spark.sql.regress import register_regress
 
@@ -261,11 +262,10 @@ def regress_ugp_update_returning_except(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from cloudberry_spark.operators.dml import update_table
-    from cloudberry_spark.sources.external import _scratch
     from cloudberry_spark.sources.snapshot import SnapshotTable
 
     r = spark.range(1, 11).selectExpr("CAST(id AS INT) AS a")
-    st = SnapshotTable.init(_scratch(sf_dir, "ugp_r1240"), r)
+    st = SnapshotTable.init(scratch.path(sf_dir, "ugp_r1240"), r)
     update_table(
         spark, st, F.col("a") < 5, {"a": F.col("a") + F.lit(1)}
     )

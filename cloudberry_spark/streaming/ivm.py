@@ -24,10 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.sources.snapshot import SnapshotTable
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.external import _scratch
 
 #: Matview storage schema: group key(s) + mergeable partials.
 PARTIALS = ("mv_count", "mv_sum")
@@ -109,7 +109,7 @@ def read_matview(spark: SparkSession, path: str) -> DataFrame:
 )
 def ivm_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = load_table(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "mv_orders_rev")
+    path = scratch.path(sf_dir, "mv_orders_rev")
     keys, value = ["o_orderpriority"], "o_totalprice"
     slice_of = lambda k: od.filter(F.col("o_orderkey") % 4 == k)  # noqa: E731
     # seed with ONE scan of the base (isin), not a union of two filtered
@@ -163,7 +163,7 @@ def ivm_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivm_join_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem").where(F.col("l_linenumber") <= 4)
-    path = _scratch(sf_dir, "mv_join_rev")
+    path = scratch.path(sf_dir, "mv_join_rev")
     keys, value = ["o_orderpriority"], "l_extendedprice"
 
     def oslice(k: int) -> DataFrame:
@@ -256,8 +256,8 @@ def refresh_dynamic_table(
 )
 def dyn_table_scheduled_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = load_table(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "dyn_orders_view")
-    meta_path = _scratch(sf_dir, "dyn_orders_meta")
+    path = scratch.path(sf_dir, "dyn_orders_view")
+    meta_path = scratch.path(sf_dir, "dyn_orders_meta")
     keys, value = ["o_orderpriority"], "o_totalprice"
     for tick in range(3):  # the cron loop, driven externally in prod
         batch = od.filter(F.col("o_orderkey") % 3 == tick)
@@ -308,7 +308,7 @@ def dyn_table_scheduled_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ivm_count_distinct_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = load_table(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "mv_orders_distinct")
+    path = scratch.path(sf_dir, "mv_orders_distinct")
     slice_of = lambda k: od.filter(F.col("o_orderkey") % 4 == k)  # noqa: E731
 
     def mult(df: DataFrame, sign: int) -> DataFrame:
@@ -395,7 +395,7 @@ def ivm_topk_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # seed: matview over the initial base (80% of orders)
-    path = _scratch(sf_dir, "ivm_topk_mv")
+    path = scratch.path(sf_dir, "ivm_topk_mv")
     base = orders.where(F.col("o_orderkey") % 5 != 0)
     st = SnapshotTable.init(path, topk(base))
 

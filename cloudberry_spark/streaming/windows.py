@@ -41,6 +41,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.registry import register, register_sql
 
@@ -616,10 +617,8 @@ def events_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_checkpoint_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from cloudberry_spark.sources.external import _scratch
-
-    sink = _scratch(sf_dir, "stream_eo_sink")
-    ckpt = _scratch(sf_dir, "stream_eo_ckpt")
+    sink = scratch.path(sf_dir, "stream_eo_sink")
+    ckpt = scratch.path(sf_dir, "stream_eo_ckpt")
     shutil.rmtree(sink, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
 
@@ -777,13 +776,11 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    from cloudberry_spark.sources.external import _scratch
-
     from cloudberry_spark.sources.snapshot import SnapshotTable
 
-    src = _scratch(sf_dir, "stream_fb_src")
-    state_root = _scratch(sf_dir, "stream_fb_state")
-    ckpt = _scratch(sf_dir, "stream_fb_ckpt")
+    src = scratch.path(sf_dir, "stream_fb_src")
+    state_root = scratch.path(sf_dir, "stream_fb_state")
+    ckpt = scratch.path(sf_dir, "stream_fb_ckpt")
     for p in (src, state_root, ckpt):
         shutil.rmtree(p, ignore_errors=True)
     ptr = os.path.join(state_root, "_CURRENT")
@@ -1807,9 +1804,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         TimestampType,
     )
 
-    from cloudberry_spark.sources.external import _scratch
-
-    src_dir = _scratch(sf_dir, "sslo_src")
+    src_dir = scratch.path(sf_dir, "sslo_src")
     shutil.rmtree(src_dir, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1988,9 +1983,7 @@ def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         TimestampType,
     )
 
-    from cloudberry_spark.sources.external import _scratch
-
-    src_dir = _scratch(sf_dir, "ssfo_src")
+    src_dir = scratch.path(sf_dir, "ssfo_src")
     shutil.rmtree(src_dir, ignore_errors=True)
 
     ev = load_table(spark, sf_dir, "events").select(

@@ -6,17 +6,17 @@ from __future__ import annotations
 
 import pytest
 
+from cloudberry_spark import scratch
 from cloudberry_spark.sources.dirtable import (
     DirectoryTable,
     DirectoryTableError,
 )
-from cloudberry_spark.sources.external import _scratch
 from tests.conftest import SF_DIR
 
 
 @pytest.fixture()
 def dt(spark):
-    t = DirectoryTable(spark, "dt_neg", _scratch(SF_DIR, "dirtable/neg"))
+    t = DirectoryTable(spark, "dt_neg", scratch.path(SF_DIR, "dirtable/neg"))
     t.copy_binary(b"hello\n", "f1", tag="t1")
     return t
 

@@ -15,11 +15,11 @@ import pytest
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.operators.generated_cols import (
     GeneratedColumnError,
     GeneratedTable,
 )
-from cloudberry_spark.sources.external import _scratch
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
@@ -37,7 +37,7 @@ def spark():
 
 def _gt(spark, tag):
     gt = GeneratedTable.create(
-        spark, _scratch(SF_DIR, f"gen_err_{tag}"), "a int, b int",
+        spark, scratch.path(SF_DIR, f"gen_err_{tag}"), "a int, b int",
         generated={"b": "a * 2"},
     )
     gt.insert(spark, spark.createDataFrame([(1, None)], "a int, b int"))
@@ -64,7 +64,7 @@ def test_update_generated_column_rejected(spark):
 def test_generated_referencing_generated_rejected(spark):
     with pytest.raises(GeneratedColumnError, match="generated column"):
         GeneratedTable.create(
-            spark, _scratch(SF_DIR, "gen_err_2b"),
+            spark, scratch.path(SF_DIR, "gen_err_2b"),
             "a int, b int, c int",
             generated={"b": "a * 2", "c": "b * 3"},
         )

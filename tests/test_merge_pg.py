@@ -17,11 +17,11 @@ import os
 import pytest
 from pyspark.sql import SparkSession
 
+from cloudberry_spark import scratch
 from cloudberry_spark.operators.merge_pg import (
     MergeCardinalityError,
     merge_pg,
 )
-from cloudberry_spark.sources.external import _scratch
 from cloudberry_spark.sources.snapshot import SnapshotTable
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
@@ -42,7 +42,7 @@ def _tables(spark, tag, src_rows):
     t = spark.createDataFrame(
         [(1, 10), (2, 20), (3, 30)], "tid int, balance int"
     )
-    st = SnapshotTable.init(_scratch(SF_DIR, f"merge_err_{tag}"), t)
+    st = SnapshotTable.init(scratch.path(SF_DIR, f"merge_err_{tag}"), t)
     s = spark.createDataFrame(src_rows, "sid int, delta int")
     return st, s
 

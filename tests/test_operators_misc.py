@@ -624,7 +624,7 @@ def test_storage_compression_encodings(spark):
     import pyarrow.parquet as pq
 
     from cloudberry_spark.registry import all_queries
-    from cloudberry_spark.sources.external import _scratch
+    from cloudberry_spark import scratch
     from tests.conftest import SF_DIR
     import os
 
@@ -632,7 +632,7 @@ def test_storage_compression_encodings(spark):
     assert [r["codec"] for r in rows] == ["gzip", "snappy", "zstd"]
     assert len({(r["n"], r["price_sum"], r["flags"]) for r in rows}) == 1
 
-    base = os.path.dirname(_scratch(SF_DIR, "storage_codecs") + "/")
+    base = scratch.path(SF_DIR, "storage_codecs")
     for codec in ("gzip", "snappy", "zstd"):
         d = os.path.join(base, codec)
         part = [f for f in os.listdir(d) if f.endswith(".parquet")][0]

@@ -240,7 +240,7 @@ def test_row_ids_unique_and_dense(spark):
 
 def test_connected_components_uses_reliable_checkpoint_when_dir_set(spark, tmp_path):
     """With a checkpoint dir configured (the production posture),
-    _truncate_lineage must take the reliable checkpoint() path — the
+    scratch.checkpoint must take the reliable checkpoint() path — the
     lineage survives executor loss — and the result must be unchanged."""
     from cloudberry_spark.pipeline.components import connected_components
 
@@ -355,62 +355,6 @@ def test_arrow_hash_kernels_match_column_expressions(spark):
     assert mh.where(cond).count() == 0
 
 
-def test_arrow_fold_kernels_match_column_expressions(spark):
-    """The Arrow dot/cosine/l2 kernels (similarity hot path since the
-    r13 optimization round) must be bit-identical to the Catalyst HOF
-    fold expressions they replaced, over every (query, corpus) pair of
-    the fixture embeddings — float comparison with strict equality, no
-    rounding (the same bar the driver's hash comparator sets)."""
-    from pyspark.sql import functions as F
-
-    from cloudberry_spark.catalog import load_table
-    from cloudberry_spark.pipeline.similarity import (
-        _ARROW_COS,
-        _ARROW_DOT,
-        _ARROW_L2SQ,
-        cosine_expr,
-        dot_expr,
-        norm_expr,
-    )
-    from tests.conftest import SF_DIR
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    q = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb")
-    )
-    pairs = emb.crossJoin(F.broadcast(q))
-
-    l2_expr = F.aggregate(
-        F.zip_with(
-            F.transform("embedding", lambda x: x.cast("double")),
-            F.transform("q_emb", lambda x: x.cast("double")),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    checked = pairs.select(
-        _ARROW_DOT("embedding", "q_emb").alias("kd"),
-        dot_expr(F.col("embedding"), F.col("q_emb")).alias("ed"),
-        _ARROW_COS("embedding", "q_emb").alias("kc"),
-        cosine_expr(F.col("embedding"), F.col("q_emb")).alias("ec"),
-        _ARROW_L2SQ("embedding", "q_emb").alias("kl"),
-        l2_expr.alias("el"),
-        F.sqrt(_ARROW_DOT("embedding", "embedding")).alias("kn"),
-        norm_expr(F.col("embedding")).alias("en"),
-    )
-    bad = checked.where(
-        (F.col("kd") != F.col("ed"))
-        | (F.col("kc") != F.col("ec"))
-        | (F.col("kl") != F.col("el"))
-        | (F.col("kn") != F.col("en"))
-        | F.col("kd").isNull()
-        | F.col("kc").isNull()
-        | F.col("kl").isNull()
-    ).count()
-    assert bad == 0
-
-
 def test_materialize_scratch_path_is_per_process(spark, tmp_path):
     """Concurrent processes at the same SF (test shards, parallel bench
     invocations) must not overwrite each other's scratch
@@ -418,17 +362,16 @@ def test_materialize_scratch_path_is_per_process(spark, tmp_path):
     call with the same tag rewrites (not appends) its own path."""
     import os
 
-    from cloudberry_spark.pipeline.graph import _materialize
-    from cloudberry_spark.sources.external import _scratch
+    from cloudberry_spark import scratch
 
     df = spark.range(5).withColumnRenamed("id", "v")
-    out = _materialize(df, spark, str(tmp_path / "sfX"), "ppid_probe")
+    out = scratch.materialize(df, spark, str(tmp_path / "sfX"), "ppid_probe")
     assert out.count() == 5
-    base = _scratch(str(tmp_path / "sfX"), f"matpid{os.getpid()}")
-    path = os.path.join(base, "ppid_probe")
+    path = scratch.path(str(tmp_path / "sfX"), "ppid_probe")
+    assert f"pid{os.getpid()}" in path.split(os.sep)
     assert os.path.exists(os.path.join(path, "_SUCCESS"))
     # overwrite semantics: a second call with different data replaces
-    out2 = _materialize(
+    out2 = scratch.materialize(
         spark.range(3).withColumnRenamed("id", "v"),
         spark, str(tmp_path / "sfX"), "ppid_probe",
     )

@@ -234,11 +234,11 @@ def test_compaction_reduces_file_count(spark):
     import os
 
     from cloudberry_spark.registry import all_queries
-    from cloudberry_spark.sources.external import _scratch
+    from cloudberry_spark import scratch
 
     all_queries()["sink_compact_small_files"].fn(spark, SF_DIR).collect()
-    n_frag = len(glob.glob(os.path.join(_scratch(SF_DIR, "lineitem_fragmented"), "*.parquet")))
-    n_comp = len(glob.glob(os.path.join(_scratch(SF_DIR, "lineitem_compacted"), "*.parquet")))
+    n_frag = len(glob.glob(os.path.join(scratch.path(SF_DIR, "lineitem_fragmented"), "*.parquet")))
+    n_comp = len(glob.glob(os.path.join(scratch.path(SF_DIR, "lineitem_compacted"), "*.parquet")))
     assert n_frag == 64 and n_comp <= 4, (n_frag, n_comp)
 
 
@@ -392,10 +392,10 @@ def test_zorder_files_have_narrow_two_dim_stats(spark):
 
     import pyarrow.parquet as _pq
 
-    from cloudberry_spark.sources.external import _scratch
+    from cloudberry_spark import scratch
 
     all_queries()["sink_zorder_cluster"].fn(spark, SF_DIR)  # writes layout
-    files = _glob.glob(_scratch(SF_DIR, "lineitem_zorder") + "/*.parquet")
+    files = _glob.glob(scratch.path(SF_DIR, "lineitem_zorder") + "/*.parquet")
     assert len(files) >= 4
     spans = {"l_suppkey": [], "l_partkey": []}
     glob_min: dict[str, int] = {}
@@ -1158,7 +1158,7 @@ def test_aqumv_rejects_uncontained_predicate(spark):
         AqumvCatalog,
         NotAnswerable,
     )
-    from cloudberry_spark.sources.external import _scratch
+    from cloudberry_spark import scratch
     from tests.conftest import SF_DIR
 
     base = spark.range(1, 101).selectExpr(
@@ -1166,7 +1166,7 @@ def test_aqumv_rejects_uncontained_predicate(spark):
     )
     cat = AqumvCatalog(spark, base, "aqumv_neg_base")
     cat.create_mv("neg0", [("mc1", "c1"), ("mc2", "c2")],
-                  ["c1 > 50"], _scratch(SF_DIR, "aqumv/neg0"))
+                  ["c1 > 50"], scratch.path(SF_DIR, "aqumv/neg0"))
     with _pytest.raises(NotAnswerable):
         cat.answer([("c1", "c1")], where=["c1 > 10"])  # needs rows 11..50
     with _pytest.raises(NotAnswerable):

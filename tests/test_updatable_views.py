@@ -7,9 +7,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.operators.views import UpdatableView
-from cloudberry_spark.sources.external import _scratch
 from cloudberry_spark.sources.snapshot import SnapshotTable
 
 SF = "/root/testdata/sf0.001"
@@ -22,7 +22,7 @@ def base(spark):
         .select("c_custkey", "c_name", "c_acctbal")
         .limit(20)
     )
-    return SnapshotTable.init(_scratch(SF, "uv_test_base"), df)
+    return SnapshotTable.init(scratch.path(SF, "uv_test_base"), df)
 
 
 @pytest.mark.parametrize(
@@ -89,7 +89,7 @@ def test_check_option_rejects_invisible_rows(spark):
         .select("c_custkey", "c_name", "c_acctbal")
         .limit(20)
     )
-    st = SnapshotTable.init(_scratch(SF, "uv_test_chk"), df)
+    st = SnapshotTable.init(scratch.path(SF, "uv_test_chk"), df)
     v = UpdatableView.create(
         spark,
         "CREATE VIEW v AS SELECT c_custkey AS k, c_acctbal AS bal "

@@ -2,7 +2,7 @@
 
 - Parquet written by the engine is read back with the writer's schema,
   so Spark starts no footer-reading job to infer it: snapshot-table
-  manifests record the schema, ``_materialize`` passes its frame's, and
+  manifests record the schema, ``scratch.materialize`` passes its frame's, and
   ``load_table`` infers each fixture file's schema once per version of
   the file.
 - The codegen cache holds the working set of a pass of the pipeline
@@ -21,26 +21,21 @@ import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
-from cloudberry_spark import catalog
+from cloudberry_spark import catalog, scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.operators.partition_ddl import RangePartitionedTable
-from cloudberry_spark.pipeline.graph import _materialize
 from cloudberry_spark.session import REQUIRED_CONFS, RUNTIME_CONFS, configure_session
-from cloudberry_spark.sources.external import _scratch
 from cloudberry_spark.sources.snapshot import SnapshotTable
 from tests.conftest import SF_DIR
 
 
 @pytest.fixture()
 def mat_sf(tmp_path):
-    """An sf_dir for _materialize whose scratch dir is removed afterwards."""
+    """An sf_dir for scratch.materialize whose scratch dir is removed
+    afterwards."""
     sf = str(tmp_path / f"sf_{uuid.uuid4().hex[:8]}")
     yield sf
-    shutil.rmtree(os.path.dirname(_scratch(sf, "x")), ignore_errors=True)
-
-
-def _materialized_path(sf: str, tag: str) -> str:
-    return os.path.join(_scratch(sf, f"matpid{os.getpid()}"), tag)
+    shutil.rmtree(os.path.join(scratch.ROOT, os.path.basename(sf)), ignore_errors=True)
 
 
 @contextmanager
@@ -124,10 +119,10 @@ def test_materialize_reads_back_with_the_writers_schema(spark, tmp_path, mat_sf)
     with _job_group(spark) as write_jobs:
         df.coalesce(8).write.mode("overwrite").parquet(path)
     with _job_group(spark) as jobs:
-        got = _materialize(df, spark, mat_sf, "m")
+        got = scratch.materialize(df, spark, mat_sf, "m")
     # no job beyond those of the write itself
     assert len(jobs()) == len(write_jobs())
-    inferred = spark.read.parquet(_materialized_path(mat_sf, "m"))
+    inferred = spark.read.parquet(scratch.path(mat_sf, "m"))
     assert got.schema == inferred.schema
     assert sorted(got.collect()) == sorted(inferred.collect()) == sorted(df.collect())
 

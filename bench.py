@@ -101,6 +101,30 @@ EXTRA = {
 }
 
 
+def _time_group(spark, queries, sf_dir: str, group: dict[str, str],
+                n_runs: int, timings: dict, spread: dict) -> None:
+    """Time each query of ``group`` ``n_runs`` times; record the median
+    under its label in ``timings`` and the max-min in ``spread``.
+
+    fn() is timed together with execution: operators that materialize
+    intermediate state eagerly (iterative matviews, DML scenarios) do
+    real work inside fn(), and excluding it would under-report them.
+    The median is robust to one-off GC/scheduler noise in either
+    direction; the spread is persisted so a fleet-wide drift between
+    rounds is attributable to environment vs plan change.
+    """
+    for label, name in group.items():
+        runs = []
+        for _ in range(n_runs):
+            t0 = time.perf_counter()
+            df = queries[name].fn(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            runs.append(time.perf_counter() - t0)
+        runs.sort()
+        timings[label] = round(runs[len(runs) // 2], 3)
+        spread[label] = round(runs[-1] - runs[0], 3)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # SPARK_GRAFT_SUITE subsets the run for scale soaks: "all" (default),
@@ -130,25 +154,7 @@ def main() -> None:
         headline.update(TPCH)
     if suite in ("all", "pipeline"):
         headline.update(PIPELINE)
-    for label, name in headline.items():
-        runs = []
-        for _ in range(n_runs):
-            # Time fn() + execution together: operators that materialize
-            # intermediate state eagerly (iterative matviews, DML
-            # scenarios) do real work inside fn(), and excluding it
-            # would under-report them.
-            t0 = time.perf_counter()
-            df = queries[name].fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        # median-of-3: robust to one-off GC/scheduler noise in either
-        # direction; spread (max-min over the two steady-state runs,
-        # i.e. excluding the cold first run) is persisted so a
-        # fleet-wide drift between rounds is attributable to
-        # environment vs plan change (r4 verdict item).
-        runs.sort()
-        timings[label] = round(runs[len(runs) // 2], 3)
-        spread[label] = round(runs[-1] - runs[0], 3)
+    _time_group(spark, queries, sf_dir, headline, n_runs, timings, spread)
 
     total = round(sum(timings.values()), 3)
     tpch_total = (
@@ -161,16 +167,7 @@ def main() -> None:
     spec: dict[str, str] = (
         {**TPCH_REAL, **TPCDS_REAL} if suite in ("all", "spec") else {}
     )
-    for label, name in spec.items():
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            df = queries[name].fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        runs.sort()
-        timings[label] = round(runs[len(runs) // 2], 3)
-        spread[label] = round(runs[-1] - runs[0], 3)
+    _time_group(spark, queries, sf_dir, spec, n_runs, timings, spread)
     tpch_real_total = (
         round(sum(timings[q] for q in TPCH_REAL), 3) if spec else None
     )
@@ -181,16 +178,7 @@ def main() -> None:
     # Streaming/IVM + multimodal baselines (round 13): timed, reported
     # in `queries`, excluded from the headline `value`.
     if suite in ("all", "pipeline"):
-        for label, name in EXTRA.items():
-            runs = []
-            for _ in range(n_runs):
-                t0 = time.perf_counter()
-                df = queries[name].fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            runs.sort()
-            timings[label] = round(runs[len(runs) // 2], 3)
-            spread[label] = round(runs[-1] - runs[0], 3)
+        _time_group(spark, queries, sf_dir, EXTRA, n_runs, timings, spread)
 
     # Multi-stream throughput (the MPP concurrency story): 4 distinct
     # query streams submitted from 4 threads share the scheduler; wall

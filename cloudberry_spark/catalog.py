@@ -123,11 +123,6 @@ def ensure_views(spark: SparkSession, sf_dir: str | None = None) -> None:
             _VIEW_DF_CACHE[(sf_dir, name)] = df
         df.createOrReplaceTempView(name)
         VIEW_OWNER[name] = me
-    try:
-        # informational only (ownership drives the logic above)
-        spark.conf.set("cloudberry.catalog.dir", sf_dir)
-    except Exception:
-        pass
 
 
 def dim(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -8,11 +8,13 @@ partition-DDL / UPDATE / DELETE sequence with a ``SELECT * ... ORDER
 BY`` checkpoint after every step.
 
 This module provides
-  * ``parse_block``    — the statement parser (shared with
-                         tools/port_qpdc.py, which replays blocks on
-                         DuckDB and keeps only those whose replay
-                         matches the reference's own .out — the same
-                         triangle the tsearch battery closes);
+  * ``parse_block``    — the statement parser (the battery's
+                         generator also replayed each block on DuckDB
+                         and kept only those whose replay matched the
+                         reference's own .out — the same triangle the
+                         tsearch battery closes; the generated module,
+                         sql/qp_dropped_cols_gen.py, is now the source
+                         of record);
   * ``run_scenario``   — the Spark-side executor over SnapshotTable:
                          DROP COLUMN is a catalog-mask edit (files
                          untouched), re-ADD maps to a fresh physical

@@ -6,8 +6,9 @@ Each ported query keeps the reference text verbatim (tables as
 VALUES CTEs carrying the file's exact INSERT rows; outermost
 select list aliased c1..cN and SUM items cast to BIGINT for the
 dtype-sensitive driver hash — the noted uniform adaptations).
-Generated by tools/port_qpdt.py; query ordinals index the
-file's post-ANALYZE statement list.
+Query ordinals index the file's post-ANALYZE statement list.
+Originally generated from the reference tree, which is no longer
+available. The module is the source of record; edit it in place.
 """
 from cloudberry_spark.sql.regress import register_regress  # noqa: E501
 

@@ -1,4 +1,5 @@
-"""qp_dropped_cols.sql battery — GENERATED by tools/port_qpdc.py.
+"""qp_dropped_cols.sql battery, originally generated from the
+reference tree.
 
 Each block below is the reference's own statement text
 (src/test/regress/sql/qp_dropped_cols.sql, cited per query),
@@ -6,7 +7,8 @@ executed by operators/qpdc_runtime.run_scenario over
 SnapshotTable column-mapping state; the oracle is the literal
 (stage, row_text) expected output, verified by the generator
 against BOTH the reference's expected/.out AND a DuckDB replay
-of the same statements. Do not edit by hand; re-run the tool.
+of the same statements. The reference tree is no longer available,
+so this module is the source of record; edit it in place.
 """
 
 from cloudberry_spark.operators.qpdc_runtime import run_scenario

@@ -8,7 +8,8 @@ both engines. Tests over the locale-collation tables
 (tlja/tlja_jp/tlth/tltr) and PG-specific char(n) blank-padding /
 TIME-type behaviors self-exclude during generation (both target
 engines are unpadded binary-UTF-8; see MIGRATION.md COLLATE).
-Generated by tools/port_qpmisc.py — regenerate, never hand-edit.
+Originally generated from the reference tree, which is no longer
+available. The module is the source of record; edit it in place.
 """
 
 from cloudberry_spark.sql.regress import register_regress

@@ -9,7 +9,8 @@ driver keeps the queries whose window functions are deterministic
 under ties (RANK/DENSE_RANK/CUME_DIST/PERCENT_RANK, no ROWS frames);
 an evenly spaced sample of that slice is ported verbatim (outer select
 lists aliased; TO_CHAR numeric templates run natively on Spark and are
-spelled printf in the DuckDB oracle). Generated by tools/port_qpow.py.
+spelled printf in the DuckDB oracle). Originally generated from the
+reference tree, which is no longer available. The module is the source of record; edit it in place.
 """
 
 from cloudberry_spark.sql.regress import register_regress

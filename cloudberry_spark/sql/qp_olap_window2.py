@@ -1,7 +1,9 @@
 """qp_olap_window.sql ports, second densification pass: +30
 evenly spaced deterministic-slice samples beyond the 48 in
-sql/qp_olap_window.py (same selection rules; generated by
-tools/port_qpow2.py, DuckDB-replayed at generation)."""
+sql/qp_olap_window.py (same selection rules; DuckDB-replayed at
+generation). The generator read the reference tree, which is no
+longer available; this module is the source of record, edited in
+place."""
 
 from cloudberry_spark.sql.qp_olap_window import QPOW_PRELUDE
 from cloudberry_spark.sql.regress import register_regress

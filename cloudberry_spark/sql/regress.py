@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from cloudberry_spark.registry import register
 from cloudberry_spark.sql.pgcompat import translate_pg_sql
-from cloudberry_spark.sql.scale_fixture import prelude_views, scale_spec_fixture
+from cloudberry_spark.sql.scale_fixture import prelude_views
 
 #: Shared table-building prelude. Both engines prune unreferenced CTEs,
 #: so every query carries the full set.
@@ -420,7 +420,6 @@ def register_regress(
     tags: tuple[str, ...] = (),
     oracle: str | None = "same",
     prelude: str | None = None,
-    scalable: bool = False,
     scale_views: tuple[str, str] | None = None,
 ) -> None:
     """Register one regress query: Spark side through translate_pg_sql,
@@ -428,16 +427,18 @@ def register_regress(
     or, where DuckDB lacks the construct, an equivalent spelled-out
     oracle (also run with the prelude). ``prelude`` overrides the
     shared fixture prelude for batteries carrying their own tables
-    (e.g. the qp_derived_table T0..T99 ports). ``scalable`` opts the
-    Spark side into the bench-only SPARK_GRAFT_DS_SCALE fact multiplier
-    (sql/scale_fixture.py; identity when the env is unset)."""
+    (e.g. the qp_derived_table T0..T99 ports). ``scale_views`` =
+    ``(tag, prelude)`` runs the Spark side over that prelude's
+    parquet-backed views instead, which follow the bench-only
+    SPARK_GRAFT_DS_SCALE fact multiplier (sql/scale_fixture.py;
+    identity when the env is unset)."""
     full = _with_prelude(sql, prelude)
     duck = full if oracle == "same" else _with_prelude(oracle, prelude)
     # parquet-backed prelude views: real stats at scale, and no per-call
     # prelude re-parse at K=1 (r12 opt); the registry wrapper registers
     # them in place of the fixture views
     views = None
-    if scalable and scale_views is not None:
+    if scale_views is not None:
         views = prelude_views(scale_views[1], scale_views[0])
 
     @register(name, oracle=duck, doc=doc, tags=("regress",) + tags,
@@ -446,8 +447,6 @@ def register_regress(
            _orig: str = sql) -> DataFrame:
         if views is not None:
             return spark.sql(translate_pg_sql(_orig))
-        if scalable:
-            _sql = scale_spec_fixture(_sql)
         return spark.sql(translate_pg_sql(_sql))
 
     _q.__name__ = name

@@ -56,6 +56,7 @@ from cloudberry_spark import scratch
 from cloudberry_spark.operators.rewrites import rewrite_selfjoin_distinct_in
 from cloudberry_spark.registry import register
 from cloudberry_spark.sql.pgcompat import translate_pg_sql
+from cloudberry_spark.sql.regress import _with_prelude
 from cloudberry_spark.sql.scale_fixture import prelude_views
 
 #: Deterministic TPC-DS schema, shared verbatim by both engines.
@@ -411,38 +412,8 @@ t1 AS (
 """
 
 
-def _with_prelude(sql: str, prelude: str | None = None) -> str:
-    """Prepend the TPC-DS prelude, merging a leading WITH clause."""
-    base = TPCDS_PRELUDE if prelude is None else prelude
-    m = re.match(r"\s*WITH\s+", sql, flags=re.I)
-    if not m:
-        return base + sql
-    return base + ",\n" + sql[m.end():]
-
-
-def _split_single_cte(sql: str) -> tuple[str, str, str] | None:
-    """For the ``WITH <name> AS ( <body> ) <rest>`` single-CTE shape,
-    return (name, body, rest); None for anything else."""
-    m = re.match(r"\s*with\s+(\w+)\s+as\s*\(", sql, flags=re.I)
-    if not m:
-        return None
-    depth, i = 1, m.end()
-    while i < len(sql) and depth:
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-        i += 1
-    if depth:
-        return None
-    body, rest = sql[m.end(): i - 1], sql[i:]
-    if re.match(r"\s*,", rest):  # a second CTE follows: not this shape
-        return None
-    return m.group(1), body, rest
-
-
 def materialize_hot_cte(
-    spark: SparkSession, sf_dir: str, sql: str, prelude: str | None,
+    spark: SparkSession, sf_dir: str, sql: str,
     min_refs: int = 3, qname: str = "shared",
 ) -> DataFrame | None:
     """Build many-referenced CTEs ONCE as scratch-parquet temp views
@@ -455,7 +426,8 @@ def materialize_hot_cte(
     one). Handles multi-CTE texts by peeling leading CTEs in order:
     each with >= min_refs references downstream is materialized, the
     rest stay inline. Returns None when nothing qualifies, leaving
-    the inline path untouched."""
+    the inline path untouched. The tables ``sql`` reads must already
+    be registered as views."""
     kept: list[tuple[str, str]] = []
     made = 0
     remaining = sql
@@ -484,7 +456,7 @@ def materialize_hot_cte(
             re.search(rf"\b{k}\b", body, flags=re.I) for k, _ in kept
         )
         if refs >= min_refs and not dependent:
-            df = spark.sql(translate_pg_sql(_with_prelude(body, prelude)))
+            df = spark.sql(translate_pg_sql(body))
             # Key the scratch path AND the temp-view name by query so
             # q04/q11/q74 (which share the CTE name year_total but not
             # its definition) can never read each other's
@@ -510,8 +482,7 @@ def materialize_hot_cte(
     if kept:
         heads = ", ".join(f"{n} as ({b})" for n, b in kept)
         remaining = f"with {heads} {remaining}"
-    # the remainder still needs the dim CTEs -> merge the prelude
-    return spark.sql(translate_pg_sql(_with_prelude(remaining, prelude)))
+    return spark.sql(translate_pg_sql(remaining))
 
 
 def register_tpcds(
@@ -522,12 +493,15 @@ def register_tpcds(
     """``prelude`` overrides the shared fixture (the nullable-FK
     variant for q69/q76); override queries always run CTE-inline —
     the scale soak's parquet views materialize the SHARED prelude.
-    ``materialize_cte`` opts the year_total-class texts into
-    materialize_hot_cte (build-once plan for a CTE referenced >= 4
+    ``materialize_cte`` opts shared-prelude year_total-class texts
+    into materialize_hot_cte (build-once plan for a CTE referenced >= 3
     times). ``rewrite`` (str -> str) transforms the SPARK-side text
     only — the oracle always runs the verbatim spec text, so the
     driver hash-verifies the rewrite is semantics-preserving (the
     q95 pair-explosion elimination rides this)."""
+    shared = prelude is None
+    if shared:
+        prelude = TPCDS_PRELUDE
     oracle_full = _with_prelude(sql, prelude)
     if rewrite is not None:
         rewritten = rewrite(sql)
@@ -542,26 +516,20 @@ def register_tpcds(
     # (facts shuffle, dims broadcast); at K=1 they remove the ~19KB
     # per-call prelude re-parse/re-analyze (25-30% of each spec call)
     # and give the planner file stats.
-    views = None if prelude is not None else prelude_views(TPCDS_PRELUDE, "tpcds")
+    views = prelude_views(TPCDS_PRELUDE, "tpcds") if shared else None
 
     @register(
         name, oracle=oracle_full, doc=doc, tags=("tpcds_real",) + tags,
         views=views)
     def _q(spark: SparkSession, sf_dir: str, _sql: str = full,
            _orig: str = sql) -> DataFrame:
-        if views is not None:
-            if materialize_cte:
-                # empty prelude: the tables already exist as views
-                out = materialize_hot_cte(spark, sf_dir, _orig, "", qname=name)
-                if out is not None:
-                    return out
-            return spark.sql(translate_pg_sql(_orig))
+        if views is None:
+            return spark.sql(translate_pg_sql(_sql))
         if materialize_cte:
-            out = materialize_hot_cte(
-                spark, sf_dir, _orig, prelude, qname=name)
+            out = materialize_hot_cte(spark, sf_dir, _orig, qname=name)
             if out is not None:
                 return out
-        return spark.sql(translate_pg_sql(_sql))
+        return spark.sql(translate_pg_sql(_orig))
 
     _q.__name__ = name
 
@@ -1189,7 +1157,7 @@ t_w_firstyear.year_total else null end
          ,t_s_secyear.customer_last_name
          ,t_s_secyear.customer_login
 limit 100
-"""),
+""", TPCDS_PRELUDE),
     doc="tpcds_q04 with the reference's gp_cte_sharing plan shape made "
     "explicit: Catalyst inlines a 6-times-referenced CTE into six "
     "copies (six scans of each channel at 100 TB), while GPDB's "
@@ -1205,7 +1173,7 @@ def tpcds_q04_shared_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     head = src.index(_Q4_YT_HEAD)
     tail = src.index(_Q4_TAIL_MARK)
     yt_sql = src[head + len(_Q4_YT_HEAD): src.rindex(")", 0, tail)]
-    yt = spark.sql(translate_pg_sql(_with_prelude(yt_sql)))
+    yt = spark.sql(translate_pg_sql(_with_prelude(yt_sql, TPCDS_PRELUDE)))
     path = scratch.path(sf_dir, "tpcds_q04_year_total")
     yt.write.mode("overwrite").parquet(path)
     spark.read.parquet(path).createOrReplaceTempView("year_total")

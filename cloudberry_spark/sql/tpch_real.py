@@ -14,7 +14,8 @@ strict driver hash is stable.
 
 Uniform adaptations: outer select lists aliased; q15's view becomes a
 CTE; q17/q18 constants mapped to the fixture's live value ranges
-(noted per query). Generated by tools/port_tpch_real.py.
+(noted per query). Originally generated from the reference tree,
+which is no longer available. The module is the source of record; edit it in place.
 """
 
 from cloudberry_spark.sql.regress import register_regress
@@ -134,7 +135,7 @@ lineitem AS (
 
 def _t(name, sql, doc):
     register_regress(name, sql, doc, tags=("tpch_real",),
-                     prelude=TPCH_REAL_PRELUDE, scalable=True,
+                     prelude=TPCH_REAL_PRELUDE,
                      scale_views=("tpch_spec", TPCH_REAL_PRELUDE))
 
 _t(

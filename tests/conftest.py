@@ -7,6 +7,7 @@ compared order-insensitively after normalizing floats and timestamps.
 
 from __future__ import annotations
 
+import json
 import math
 import os
 from datetime import date, datetime
@@ -35,6 +36,8 @@ def budget_queries(queries: dict) -> dict:
     correctness sample and (b) the full-suite runs recorded per round
     via SPARK_GRAFT_TEST_FULL=1 / tools/driver_sim.py sharding.
 
+    The keys of the latest committed CORRECTNESS round ride along.
+
     SPARK_GRAFT_TEST_FULL=1 (or SPARK_GRAFT_TEST_MAXQ=0) disables the
     cap; the subset is deterministic for a given tree.
     """
@@ -43,9 +46,16 @@ def budget_queries(queries: dict) -> dict:
     maxq = int(os.environ.get("SPARK_GRAFT_TEST_MAXQ", "300"))
     if maxq <= 0 or maxq >= len(queries):
         return dict(queries)
-    from cloudberry_spark.registry import interleaved_queries
+    from __spark_entry__ import _REPO, _rounds, interleaved_queries
 
     take = [n for n in interleaved_queries() if n in queries][:maxq]
+    # The driver drew its latest sample from the head of this order;
+    # once that round is committed those queries sort behind every
+    # never-sampled one. Keep replaying them until the next round, so
+    # the rotation does not drop what the suite checked a round ago.
+    rounds = _rounds(_REPO)
+    last = json.loads(rounds[-1].read_text()) if rounds else {}
+    take += [n for n in queries if n in last and n not in take]
     return {n: queries[n] for n in take}
 
 

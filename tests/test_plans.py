@@ -588,11 +588,7 @@ def test_interleave_lead_names_all_registered():
     """Every name in the interleaver's lead list must be a registered
     query — a typo would silently drop the intended driver-sample
     priority for that operator."""
-    from cloudberry_spark.registry import (
-        _LEAD,
-        all_queries,
-        interleaved_queries,
-    )
+    from __spark_entry__ import _LEAD, interleaved_queries
 
     names = _LEAD
     registered = set(all_queries())
@@ -660,48 +656,37 @@ def test_merge_multi_action_single_shuffle(spark):
 
 
 def test_driver_prefix_composition():
-    """The driver samples the first 50 of queries(); pin the properties
-    the round-5 rotation established: this round's bug-fix paths
-    (SIMILAR TO/~* operands, array_agg ORDER BY nulls) and additions
-    (cross-level decorrelation, PL/pgSQL, snapshot DML) lead the
-    prefix, every sampled slot is a first-time hash-checkable query
-    (no re-confirmations, no rows-only `no_oracle` rows), so coverage
+    """The driver samples the first 50 of queries(); pin the rotation's
+    properties: the ``_LEAD`` queries lead the prefix, and every
+    sampled slot is a first-time hash-checkable query (no
+    re-confirmations, no rows-only `no_oracle` rows), so coverage
     breadth grows maximally."""
-    from cloudberry_spark.registry import (
-        _DRIVER_SAMPLED,
-        all_queries,
-        interleaved_queries,
-    )
+    from __spark_entry__ import driver_sampled, interleaved_queries
 
     qs = interleaved_queries()
     prefix = list(qs)[:50]
-    # round-13 rotation: the r12 sample is folded into _DRIVER_SAMPLED,
+    # every committed CORRECTNESS round is folded into driver_sampled(),
     # so the prefix must consist ENTIRELY of first-time-confirmable
-    # queries, led by the two round-12 oracle failures fixed this round
-    # (the sample must re-prove them externally), then the never-sampled
-    # queries whose internals the optimization round changed (curate
-    # materialization, vector-fold entry points, IVF-PQ ADC restructure,
-    # semdedup/kmeans raw-float32 + single assignment pass), then the
-    # streaming/IVM + multimodal heads now carrying bench entries
+    # queries, led by the never-sampled queries whose internals changed
+    # since: snapshot-table DML, streaming sinks and checkpoints, and
+    # the per-process scratch writers
     for must in (
-        "regress_tstz_at_time_zone_dst",
-        "regress_dqa_grouping_sets",
-        "pipeline_end_to_end",
-        "pipeline_curate_to_shards",
-        "sim_ivf_multiprobe",
-        "sim_cosine_neardup",
-        "sim_semdedup_clusters",
-        "sim_kmeans_index_build",
-        "sim_embedding_outliers",
-        "ml_kmeans_silhouette",
-        "ml_knn_classifier",
-        "emb_matryoshka_recall",
-        "ivm_join_view_refresh",
-        "stream_tumbling_daily",
-        "multimodal_metadata_stats",
+        "dml_merge",
+        "dml_update_delete",
+        "dml_cascade_delete",
+        "dml_insert_on_conflict",
+        "ddl_part_add_truncate",
+        "regress_matview_no_data_refresh",
+        "regress_qpdc_drop_midcol_dml_int4",
+        "stream_checkpoint_exactly_once",
+        "sink_dynamic_partition_overwrite",
+        "sink_compact_small_files",
+        "copy_orc_roundtrip",
+        "fdw_python_textfeed",
+        "graph_kcore_peel",
     ):
         assert must in prefix, f"{must} fell out of the sampled prefix"
-    never = sum(1 for n in prefix if n not in _DRIVER_SAMPLED)
+    never = sum(1 for n in prefix if n not in driver_sampled())
     assert never == 50, f"only {never} never-sampled queries in prefix"
     rows_only = [n for n in prefix if qs[n].oracle is None]
     assert not rows_only, f"rows-only queries burning slots: {rows_only}"
@@ -776,7 +761,7 @@ def test_q4_shared_cte_materializes_year_total_once(spark):
     )
     assert plan.count("parquet") >= 1
     # round 10: the text-faithful variant ALSO builds year_total once
-    # (materialize_hot_cte fires on >=4-referenced CTEs), so its final
+    # (materialize_hot_cte fires on >=3-referenced CTEs), so its final
     # join plan likewise reads only the materialized relation — the
     # r9 verdict's last weak plan shape is gone
     inline = _plan(spark, "tpcds_q04_real")
@@ -784,6 +769,29 @@ def test_q4_shared_cte_materializes_year_total_once(spark):
         "tpcds_q04_real regressed to inlining year_total"
     )
     assert "cte_materialized" in inline
+
+
+def test_materialize_hot_cte_keeps_a_cold_cte_inline(spark, ddb):
+    """A text whose first CTE is referenced 3 times and whose second is
+    referenced once: the hot one is built once into scratch parquet,
+    the cold one stays inline in the remainder's WITH, and the rows
+    equal the oracle's."""
+    from cloudberry_spark.catalog import ensure_views
+    from cloudberry_spark.sql.tpcds_real import materialize_hot_cte
+    from tests.conftest import assert_matches_oracle
+
+    sql = """
+with hot as (select n_regionkey, count(*) as n from nation group by n_regionkey),
+     cold as (select r_regionkey, r_name from region)
+select r.r_name, a.n, b.n as n2, c.n as n3
+from hot a join hot b on a.n_regionkey = b.n_regionkey
+join hot c on c.n_regionkey = a.n_regionkey
+join cold r on r.r_regionkey = a.n_regionkey
+"""
+    ensure_views(spark, SF_DIR)
+    df = materialize_hot_cte(spark, SF_DIR, sql, qname="hot_cold")
+    assert df is not None, "the 3-times-referenced CTE was not materialized"
+    assert assert_matches_oracle(df, ddb, sql, "hot_cold") == 5
 
 
 def test_partition_join_pruned_filters(spark):

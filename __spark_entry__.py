@@ -67,15 +67,22 @@ def driver_sampled(root: str = _REPO) -> frozenset[str]:
 
     A name counts once some ``CORRECTNESS_r<N>.json`` under ``root``
     records it, unless the latest round recording it saw a hash
-    mismatch (that query is still owed an external pass). No files,
-    no names.
+    mismatch or crashed before a verdict (no ``hash_match`` and an
+    ``err`` other than ``no_oracle``): that query is still owed an
+    external pass. No files, no names.
     """
     latest: dict[str, dict] = {}
     for f in _rounds(root):
         latest.update(json.loads(f.read_text()))
-    return frozenset(
-        n for n, rec in latest.items() if rec.get("hash_match") is not False
-    )
+    return frozenset(n for n, rec in latest.items() if _verdict(rec))
+
+
+def _verdict(rec: dict) -> bool:
+    """Whether a correctness record settles its query: a hash match, or
+    a rows-only check of a query with no oracle."""
+    if rec.get("hash_match") is None:
+        return rec.get("err") == "no_oracle"
+    return rec["hash_match"]
 
 
 def interleaved_queries() -> dict[str, Query]:

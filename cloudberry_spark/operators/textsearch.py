@@ -31,28 +31,6 @@ from cloudberry_spark.registry import register
 # ---------------------------------------------------------------------------
 
 
-def tsvector_col(text: Column | str, dictionary: str | None = None) -> Column:
-    """tsvector lexeme set. ``dictionary=None`` is the 'simple' config
-    (distinct lowercase tokens, dict_simple.c); ``dictionary='english'``
-    applies the snowball stopword file + snowball-lite stemming (see
-    tsvector_lexemes_sql below) and requires ``text`` to be a column
-    name / SQL expression string, since the stemmer is generated SQL
-    shared verbatim with the DuckDB oracle."""
-    if dictionary == "english":
-        if not isinstance(text, str):
-            raise TypeError(
-                "dictionary='english' needs a SQL expression string"
-            )
-        return F.expr(tsvector_lexemes_sql(text, "spark"))
-    if dictionary is not None:
-        raise NotImplementedError(f"no dictionary {dictionary!r}")
-    if isinstance(text, str):
-        text = F.col(text)
-    return F.array_distinct(
-        F.filter(F.split(F.lower(F.trim(text)), r"\s+"), lambda w: w != F.lit(""))
-    )
-
-
 @register(
     "text_tsquery_rank",
     oracle="""

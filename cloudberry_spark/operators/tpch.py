@@ -112,18 +112,6 @@ def dsum_combine(hi_sum, lo_sum, scale: int = 4):
     return total.cast("double") / F.lit(float(10 ** scale))
 
 
-def dsum_sql(expr: str, scale: int = 2) -> str:
-    """Dialect-portable SQL spelling of :func:`dsum` (identical text runs
-    on Spark SQL and DuckDB): exact fixed-point money sum, read back as
-    DOUBLE. Use in register_sql bodies/oracles so both engines sum the
-    same integers — kills accumulation-order hash flakes at the source."""
-    f = 10 ** scale
-    return (
-        f"(CAST(sum(CAST(CAST(round(({expr}) * {f}) AS BIGINT) "
-        f"AS DECIMAL(38,0))) AS DOUBLE) / {f}.0)"
-    )
-
-
 # --------------------------------------------------------------------------
 # q1 — pricing summary report: the flagship full-scan aggregation.
 # --------------------------------------------------------------------------

@@ -74,26 +74,6 @@ def words_col(text: Column) -> Column:
     return F.split(F.trim(F.lower(text)), r"\s+")
 
 
-def shingle_hash_arrays(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, __sha: array<bigint>): per-document 3-word shingle hashes.
-
-    Fully row-local: words → per-word md5 hash → polynomial combine of
-    each consecutive triple, computed by the Arrow-vectorized kernel
-    (pipeline.hashing.make_arrow_shingle_udf — C md5 on whole batches;
-    bit-identical to the spark_word_hashes/spark_shingle_hashes column
-    expressions, whose HOF lambdas are interpreted per word and were
-    the engine's hottest CPU path). No explode/shuffle happens.
-
-    Pure map-side projection — no fan-out repartition: interleaved
-    A/B at sf0.1/32 cores (r12 opt) showed the Arrow kernel saturates
-    fast enough that an up-front exchange of the text payload costs
-    more than the single-task scan it parallelizes, with fatter tails.
-    """
-    return docs.select(
-        F.col(id_col), _SHINGLE_UDF(F.col(text_col)).alias("__sha")
-    )
-
-
 def exploded_shingle_hashes(
     docs: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
@@ -127,11 +107,12 @@ def minhash_signatures(docs: DataFrame, id_col: str, text_col: str) -> DataFrame
     )
 
 
-def lsh_bands(sig: DataFrame, id_col: str) -> DataFrame:
-    """(id, band_idx, band_hash): one row per LSH band.
+def lsh_bands(sig: DataFrame, id_col: str, *keep: str) -> DataFrame:
+    """(id, *keep, band_idx, band_hash): one row per LSH band.
 
     band_hash is md5 of the ':'-joined minhashes in the band — collision-
-    safe and cross-engine portable.
+    safe and cross-engine portable. ``keep`` names per-document columns
+    of ``sig`` that ride along on every band row.
     """
     rows_per_band = N_HASHES // N_BANDS
     bands = []
@@ -144,8 +125,13 @@ def lsh_bands(sig: DataFrame, id_col: str) -> DataFrame:
             )
         )
     return sig.select(
-        id_col, F.explode(F.array(*bands)).alias("band")
-    ).select(id_col, F.col("band.band_idx").alias("band_idx"), F.col("band.band_hash").alias("band_hash"))
+        id_col, *keep, F.explode(F.array(*bands)).alias("band")
+    ).select(
+        id_col,
+        *keep,
+        F.col("band.band_idx").alias("band_idx"),
+        F.col("band.band_hash").alias("band_hash"),
+    )
 
 
 def lsh_candidate_pairs(
@@ -173,7 +159,9 @@ def lsh_candidate_pairs(
     signatures are map-side) and NOT the hazard the cap removes (the
     O(c^2) pair blowup); a production pipeline at 100 TB persists the
     band index once and probes it incrementally —
-    dedup_incremental_index_probe (below) is that path.
+    dedup_incremental_index_probe (below) is that path. The pairs are
+    id pairs only: ngram_jaccard verifies them against each document's
+    shingle array, so no shingle table is exploded for them.
     """
     bands = lsh_bands(minhash_signatures(docs, id_col, text_col), id_col)
     w = Window.partitionBy("band_idx", "band_hash")
@@ -203,33 +191,39 @@ def ngram_jaccard(
 ) -> DataFrame:
     """Exact shingle-set Jaccard for given candidate pairs.
 
-    The verify stage after LSH: joins each side's distinct shingle set,
-    intersects via an equi-join on the shingle hash (never materializes
-    the cross product). ``sh`` lets the caller pass a precomputed
-    (id, h) distinct-shingle table (e.g. materialized once): the three
-    consumers below (both join sides + per-doc sizes) otherwise each
-    re-run the full word-hash -> shingle pipeline from raw text.
+    The verify stage after LSH: each pair meets both documents' shingle
+    arrays (one join per side, on the document id) and scores
+    ``size(array_intersect) / size(array_union)``. Both functions treat
+    their arrays as sets, so a shingle repeated inside one document
+    counts once: the value is the integer-set Jaccard |A∩B| / |A∪B|,
+    the same double as intersection counting over a distinct
+    (id, shingle) table. As with that equi-join, only pairs with at
+    least one common shingle come back; the filter runs before the
+    division, so two empty arrays never divide by zero.
+
+    ``sh`` lets the caller pass a precomputed (id, sha: array<bigint>)
+    table, e.g. a materialized index; otherwise the Arrow shingle
+    kernel builds it from ``text_col``. Columns of ``pairs`` beyond
+    (id_a, id_b) ride through to the output. At scale a pair ships its
+    two arrays, no more bytes than the exploded rows it used to join,
+    and no corpus-wide explode + distinct runs.
     """
     if sh is None:
-        sh = exploded_shingle_hashes(docs, id_col, text_col).distinct()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("h"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("h"))
-    inter = (
-        pairs.join(a, "id_a").join(b, ["id_b", "h"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
+        sh = docs.select(
+            F.col(id_col), _SHINGLE_UDF(F.col(text_col)).alias("sha")
+        )
+    a = sh.select(F.col(id_col).alias("id_a"), F.col("sha").alias("sha_a"))
+    b = sh.select(F.col(id_col).alias("id_b"), F.col("sha").alias("sha_b"))
+    n_common = F.size(F.array_intersect("sha_a", "sha_b"))
     return (
-        inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("n_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("n_b")), "id_b")
+        pairs.join(a, "id_a")
+        .join(b, "id_b")
+        .where(n_common > 0)
         .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            ).alias("jaccard"),
+            *pairs.columns,
+            (n_common / F.size(F.array_union("sha_a", "sha_b"))).alias(
+                "jaccard"
+            ),
         )
     )
 
@@ -957,15 +951,16 @@ def dedup_edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Incremental dedup against a PERSISTED corpus index — the "
     "production growth path (index once, probe every new batch) that "
     "plain all-corpus LSH lacks: one Arrow kernel pass writes the "
-    "standing shingle+signature table to scratch parquet (at scale: "
-    "the standing index — shingle sets for verify next to MinHash "
-    "signatures for banding); the even-doc_id half's bands are the "
+    "standing index to scratch parquet (source, shingle array and "
+    "MinHash signature per doc); the even-doc_id half's bands are the "
     "index, the odd half is the incoming batch whose bands probe it "
-    "with one equi-join, and survivors verify with exact shingle "
-    "Jaccard >= 0.5 joined only on candidates. Reports per-source "
-    "batch size, near-dup count and distinct index docs hit. "
-    "Incoming text never joins the index by content — only 128-bit "
-    "band keys move.",
+    "with one equi-join, and each distinct candidate pair verifies "
+    "with exact shingle Jaccard >= 0.5 on the two docs' shingle arrays "
+    "from that index (no exploded shingle table). One aggregation over "
+    "batch rows and verified pairs reports per-source batch size, "
+    "near-dup count and distinct index docs hit. Incoming text never "
+    "joins the index by content — only 128-bit band keys and the "
+    "candidates' shingle arrays move.",
     tags=("pipeline", "dedup", "incremental"),
 )
 def dedup_incremental_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -976,24 +971,25 @@ def dedup_incremental_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame
     # three text decodes + md5 sweeps and two scratch writes): the
     # combined kernel emits each doc's shingle array AND its MinHash
     # signature together, and every downstream consumer (index bands,
-    # probe bands, Jaccard-verify shingle sets) derives map-side from
-    # the scratch table. At scale this IS the standing index layout:
-    # shingle sets for verify next to signatures for banding.
+    # probe bands, Jaccard-verify shingle arrays, the batch's sources)
+    # reads the scratch table. At scale this IS the standing index
+    # layout: shingle sets for verify next to signatures for banding.
     sig = scratch.materialize(
         docs.select(
-            "doc_id", _SHINGLE_SIG_UDF(F.col("text")).alias("__s")
+            "doc_id", "source", _SHINGLE_SIG_UDF(F.col("text")).alias("__s")
         ).select(
             "doc_id",
+            "source",
             F.col("__s.sha").alias("sha"),
             *[F.col(f"__s.mh{i}").alias(f"mh{i}") for i in range(N_HASHES)],
         ),
         spark, sf_dir, "dedup_shingle_sig_index",
     )
-    batch = docs.filter(F.col("doc_id") % 2 == 1)
+    batch = sig.filter(F.col("doc_id") % 2 == 1)
     index = lsh_bands(sig.filter(F.col("doc_id") % 2 == 0), "doc_id")
-    probe = lsh_bands(
-        sig.filter(F.col("doc_id") % 2 == 1), "doc_id"
-    ).select(F.col("doc_id").alias("id_a"), "band_idx", "band_hash")
+    probe = lsh_bands(batch, "doc_id", "source").withColumnRenamed(
+        "doc_id", "id_a"
+    )
     cand = (
         probe.join(
             index.select(
@@ -1001,32 +997,25 @@ def dedup_incremental_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame
             ),
             ["band_idx", "band_hash"],
         )
-        .select("id_a", "id_b")
+        .select("id_a", "source", "id_b")
         .distinct()
     )
-    # the verify stage's distinct shingle table, map-side off the same
-    # scratch table (read three times: both join sides + sizes)
-    sh = sig.select(
-        "doc_id", F.explode("sha").alias("h")
-    ).distinct()
-    ver = ngram_jaccard(docs, cand, "doc_id", "text", sh=sh).filter(
-        F.col("jaccard") >= 0.5
-    )
-    per_doc = ver.groupBy("id_a").agg(
-        F.countDistinct("id_b").alias("n_hits")
-    )
+    hits = ngram_jaccard(
+        docs, cand, "doc_id", "text", sh=sig.select("doc_id", "sha")
+    ).where(F.col("jaccard") >= 0.5)
+    # one aggregation over batch ∪ hits: a batch row has no id_b, a hit
+    # row is one distinct verified (id_a, id_b) pair
+    rows = batch.select(
+        "source",
+        F.lit(None).cast("bigint").alias("id_a"),
+        F.lit(None).cast("bigint").alias("id_b"),
+    ).unionByName(hits.select("source", "id_a", "id_b"))
     return (
-        batch.select("doc_id", "source")
-        .join(per_doc, batch["doc_id"] == per_doc["id_a"], "left")
-        .groupBy("source")
+        rows.groupBy("source")
         .agg(
-            F.count(F.lit(1)).alias("n_batch"),
-            F.sum(F.when(F.col("id_a").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_dup"),
-            F.sum(F.coalesce(F.col("n_hits"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_index_hits"),
+            F.count(F.when(F.col("id_b").isNull(), 1)).alias("n_batch"),
+            F.countDistinct("id_a").alias("n_dup"),
+            F.count("id_b").alias("n_index_hits"),
         )
         .orderBy("source")
     )

@@ -763,7 +763,7 @@ def sim_kmeans_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def assign(c: DataFrame) -> DataFrame:
-        d = l2sq(F.col("v"), F.col("cv"))  # Arrow twin of the HOF fold
+        d = l2sq(F.col("v"), F.col("cv"))  # JVM-side HOF fold, no Python worker
         pairs = vecs.crossJoin(F.broadcast(c)).withColumn("dist", d)
         w = Window.partitionBy("vec_id").orderBy("dist", "cid")
         return (
@@ -868,7 +868,7 @@ def sim_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = vecs.where(F.col("vec_id") < _KM_K).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
     )
-    d = l2sq(F.col("v"), F.col("cv"))  # Arrow twin of the HOF fold
+    d = l2sq(F.col("v"), F.col("cv"))  # JVM-side HOF fold, no Python worker
     w = Window.partitionBy("vec_id").orderBy("dist", "cid")
     # The assignment feeds BOTH self-join sides and the final grouped
     # readout — un-materialized, the broadcast-K assign pass (and its

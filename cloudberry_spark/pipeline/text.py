@@ -50,12 +50,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     return F.size(F.filter(pieces, lambda p: F.length(p) > 0))
 
 
-def stopword_ratio(text: Column, lang: str) -> Column:
-    stops = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    t = tokens(text)
-    return F.size(F.filter(t, lambda w: F.array_contains(stops, w))) / F.size(t)
-
-
 @register(
     "text_token_stats",
     oracle="""

@@ -449,7 +449,11 @@ def materialize_hot_cte(
         mm = re.match(r"\s*,\s*", rest)
         # re-open the WITH for the next CTE so the loop peels it too
         rest_q = ("with " + rest[mm.end():]) if mm else rest
-        refs = len(re.findall(rf"\b{cte}\b", rest_q, flags=re.I))
+        # the retarget pattern (below) minus qualifiers: count only
+        # table references, not a column qualified by the CTE's name
+        # (cold.r_name), which would push a once-joined CTE to min_refs
+        retarget = rf"(?<![\w.]){cte}\b(?!\s*\()"
+        refs = len(re.findall(retarget + r"(?!\s*\.)", rest_q, flags=re.I))
         # a body referencing a KEPT (still-inline) earlier CTE cannot
         # be materialized independently — keep it inline as well
         dependent = any(
@@ -465,14 +469,16 @@ def materialize_hot_cte(
             view = f"{qname}__{cte}"
             path = scratch.path(sf_dir, f"cte_materialized/{qname}/{cte}")
             df.write.mode("overwrite").parquet(path)
-            spark.read.parquet(path).createOrReplaceTempView(view)
+            # read back with the writer's schema: no footer-inference job
+            spark.read.schema(df.schema).parquet(path).createOrReplaceTempView(
+                view
+            )
             # downstream TABLE references retarget to the per-query
             # view (later CTE bodies included). Qualified column refs
             # (q04's t_s_firstyear.year_total — the CTE exposes a
             # column named like itself) must NOT be rewritten: skip
             # matches preceded by '.' and matches in call position.
-            rest_q = re.sub(
-                rf"(?<![\w.]){cte}\b(?!\s*\()", view, rest_q, flags=re.I)
+            rest_q = re.sub(retarget, view, rest_q, flags=re.I)
             made += 1
         else:
             kept.append((cte, body))

@@ -11,17 +11,18 @@ belongs to an external orchestrator or a Structured Streaming
 lives here.
 
 The algebra: keep the matview in *partial-aggregate* form
-(group, count, sum, …). A delta batch aggregates to the same shape with
-a sign (+1 insert, −1 delete); merging is a groupBy-sum of the union,
-dropping groups whose count reaches zero. Exactly the reference's
-aggregate-delta rules, and exactly Spark's partial/final aggregation
-split — which is why refresh cost is O(|delta| + |groups|), never
-O(|base|). avg/stddev derive from (count, sum, sum_sq) at read time.
+(group, count, sum, …). Each delta row takes the same shape with a
+sign (+1 insert, −1 delete); merging is one groupBy-sum of the stored
+partials and the signed rows, dropping groups whose count reaches
+zero. Exactly the reference's aggregate-delta rules, and exactly
+Spark's partial/final aggregation split — which is why refresh cost is
+O(|delta| + |groups|), never O(|base|). avg/stddev derive from
+(count, sum, sum_sq) at read time.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloudberry_spark import scratch
@@ -33,15 +34,17 @@ from cloudberry_spark.registry import register
 PARTIALS = ("mv_count", "mv_sum")
 
 
-def _partials(df: DataFrame, keys: list[str], value: str, sign: int) -> DataFrame:
+def _sum_value(value: str) -> Column:
     # exact decimal partials: double partial sums make the refreshed view
     # differ from a full recompute in the last ulp (summation order), and
     # the oracle comparison then flakes at rounding boundaries
+    return F.col(value).cast("decimal(18,2)")
+
+
+def _partials(df: DataFrame, keys: list[str], value: str) -> DataFrame:
     return df.groupBy(*keys).agg(
-        (F.lit(sign) * F.count("*")).alias("mv_count"),
-        (F.lit(sign) * F.sum(F.col(value).cast("decimal(18,2)")))
-        .cast("decimal(28,2)")
-        .alias("mv_sum"),
+        F.count("*").alias("mv_count"),
+        F.sum(_sum_value(value)).cast("decimal(28,2)").alias("mv_sum"),
     )
 
 
@@ -52,7 +55,7 @@ def create_matview(
     Matviews ARE tables, so they ride the same SnapshotTable commit
     protocol as every DML writer — each refresh is a versioned commit,
     readers keep snapshot isolation mid-refresh."""
-    SnapshotTable.init(path, _partials(base, keys, value, +1))
+    SnapshotTable.init(path, _partials(base, keys, value))
 
 
 def apply_delta(
@@ -66,11 +69,19 @@ def apply_delta(
     """IVM_ADD (sign=+1) / IVM_SUB (sign=-1): merge a delta batch.
 
     Scans only the stored groups and the delta — the base table is never
-    touched (matview.c:129 delta-propagation contract).
+    touched (matview.c:129 delta-propagation contract). Each delta row
+    enters as a signed partial (count ``sign``, sum ``sign * value``)
+    beside the stored partials, and ONE aggregation merges them: the
+    delta is not pre-aggregated in a shuffle of its own, so a commit
+    waits on one exchange, not two.
     """
     st = SnapshotTable(path)
     base_v = st.current_version()
-    d = _partials(delta, keys, value, sign)
+    d = delta.select(
+        *keys,
+        F.lit(sign).cast("bigint").alias("mv_count"),
+        (F.lit(sign) * _sum_value(value)).cast("decimal(28,2)").alias("mv_sum"),
+    )
     merged = (
         st.read(spark, base_v)
         .unionByName(d)

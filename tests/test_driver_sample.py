@@ -1,7 +1,7 @@
 """The driver's sampled set is derived from the CORRECTNESS_r<N>.json
 records: a query counts as sampled once a round records it, unless the
-latest round recording it saw a hash mismatch. No Spark here: stub
-records in a tmp dir."""
+latest round recording it saw a hash mismatch or crashed before a
+verdict. No Spark here: stub records in a tmp dir."""
 
 from __future__ import annotations
 
@@ -37,6 +37,15 @@ def test_latest_hash_mismatch_is_not_sampled(tmp_path):
 def test_no_oracle_is_sampled(tmp_path):
     _round(tmp_path, 1, {"q": _rec(None, err="no_oracle")})
     assert driver_sampled(str(tmp_path)) == {"q"}
+
+
+def test_crash_without_verdict_is_not_sampled(tmp_path):
+    # a comparator crash leaves no hash verdict; the query is still owed
+    # a pass, whichever round recorded it
+    crash = _rec(None, err="TypeError: unhashable type: 'numpy.ndarray'")
+    _round(tmp_path, 1, {"q": crash, "late": _rec(True)})
+    _round(tmp_path, 2, {"late": crash})
+    assert driver_sampled(str(tmp_path)) == frozenset()
 
 
 def test_no_records_no_names(tmp_path):

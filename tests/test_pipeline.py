@@ -379,3 +379,45 @@ def test_materialize_scratch_path_is_per_process(spark, tmp_path):
     import shutil
 
     shutil.rmtree(path, ignore_errors=True)
+
+
+def test_ngram_jaccard_matches_exploded_set_formula(spark):
+    """The array verify equals |A∩B| / |A∪B| over the exploded distinct
+    shingle sets, on hand-built arrays: duplicates inside an array, a
+    length-1 array, empty arrays and a disjoint pair. Pairs with no
+    common shingle stay absent, and under ANSI two empty arrays raise
+    no divide-by-zero (also with a threshold filter on top)."""
+    from cloudberry_spark.pipeline.dedup import ngram_jaccard
+
+    arrays = {
+        1: [1, 1, 2, 3],  # duplicates count once
+        2: [1, 2, 2, 4],
+        3: [5],  # length 1
+        4: [5, 6],
+        5: [],  # empty
+        6: [],
+        7: [7, 8],  # disjoint from 1
+    }
+    sh = spark.createDataFrame(
+        list(arrays.items()), "doc_id: long, sha: array<bigint>"
+    )
+    cand = [(1, 2), (3, 4), (5, 6), (1, 5), (1, 7)]
+    pairs = spark.createDataFrame(cand, "id_a: long, id_b: long")
+    want = {}
+    for a, b in cand:
+        sa, sb = set(arrays[a]), set(arrays[b])
+        if sa & sb:
+            want[(a, b)] = len(sa & sb) / len(sa | sb)
+    assert want == {(1, 2): 0.5, (3, 4): 0.5}
+
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        out = ngram_jaccard(None, pairs, "doc_id", None, sh=sh)
+        assert out.columns == ["id_a", "id_b", "jaccard"]
+        got = {(r.id_a, r.id_b): r.jaccard for r in out.collect()}
+        kept = out.where(F.col("jaccard") >= 0.5).count()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == want
+    assert kept == 2

@@ -9,6 +9,9 @@ needed columns (aocsam.c), broadcast-vs-redistribute Motion decisions
 
 from __future__ import annotations
 
+import os
+import re
+
 import pytest
 
 from cloudberry_spark.registry import all_queries
@@ -792,6 +795,91 @@ join cold r on r.r_regionkey = a.n_regionkey
     df = materialize_hot_cte(spark, SF_DIR, sql, qname="hot_cold")
     assert df is not None, "the 3-times-referenced CTE was not materialized"
     assert assert_matches_oracle(df, ddb, sql, "hot_cold") == 5
+
+
+def test_materialize_hot_cte_counts_table_references_only(spark, ddb):
+    """A CTE joined once but named by two qualified columns
+    (cold.r_regionkey, cold.r_name) has one table reference, so it stays
+    inline: only the 3-times-joined CTE is written to scratch."""
+    from cloudberry_spark import scratch
+    from cloudberry_spark.catalog import ensure_views
+    from cloudberry_spark.sql.tpcds_real import materialize_hot_cte
+    from tests.conftest import assert_matches_oracle
+
+    sql = """
+with hot as (select n_regionkey, count(*) as n from nation group by n_regionkey),
+     cold as (select r_regionkey, r_name from region)
+select cold.r_name, a.n, b.n as n2, c.n as n3
+from hot a join hot b on a.n_regionkey = b.n_regionkey
+join hot c on c.n_regionkey = a.n_regionkey
+join cold on cold.r_regionkey = a.n_regionkey
+"""
+    ensure_views(spark, SF_DIR)
+    qname = "hot_qualified_cold"
+    df = materialize_hot_cte(spark, SF_DIR, sql, qname=qname)
+    assert df is not None, "the 3-times-referenced CTE was not materialized"
+    made = os.listdir(scratch.path(SF_DIR, f"cte_materialized/{qname}"))
+    assert made == ["hot"]
+    assert assert_matches_oracle(df, ddb, sql, qname) == 5
+
+
+def test_partition_update_reads_only_the_target_fileset(spark, monkeypatch):
+    """dml_partition_confined_update rewrites one of five partitions, and
+    the frame it rewrites from scans only that partition's fileset: one
+    root path, not the table's five."""
+    from cloudberry_spark.sources.snapshot import SnapshotTable
+
+    seen: list[dict] = []
+    commit = SnapshotTable.commit_partition_rewrite
+
+    def spy(self, updates, *a, **kw):
+        seen.append(dict(updates))
+        return commit(self, updates, *a, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "commit_partition_rewrite", spy)
+    all_queries()["dml_partition_confined_update"].fn(spark, SF_DIR)
+    assert len(seen) == 1 and list(seen[0]) == ["1-URGENT"]
+    plan = seen[0]["1-URGENT"]._jdf.queryExecution().executedPlan().toString()
+    scans = re.findall(r"InMemoryFileIndex\((\d+) paths\)", plan)
+    assert scans == ["1"], plan
+
+
+def test_ivm_merge_is_one_aggregation(spark, tmp_path, monkeypatch):
+    """apply_delta merges signed delta rows into the stored partials in
+    one aggregation: its AQE-initial plan has exactly one hash exchange
+    (the delta is not pre-aggregated in a shuffle of its own)."""
+    from pyspark.sql import functions as F
+
+    from cloudberry_spark.catalog import load_table
+    from cloudberry_spark.sources.snapshot import SnapshotTable
+    from cloudberry_spark.streaming.ivm import apply_delta, create_matview
+
+    plans: list[str] = []
+    commit = SnapshotTable.commit_rewrite
+
+    def spy(self, df, *a, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return commit(self, df, *a, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "commit_rewrite", spy)
+    od = load_table(spark, SF_DIR, "orders")
+    path = str(tmp_path / "mv")
+    keys, value = ["o_orderpriority"], "o_totalprice"
+    create_matview(spark, path, od.where(F.col("o_orderkey") % 4 == 0), keys, value)
+    apply_delta(spark, path, od.where(F.col("o_orderkey") % 4 == 1), keys, value, +1)
+    assert len(plans) == 1
+    assert "isFinalPlan=false" in plans[0]
+    assert plans[0].count("Exchange hashpartitioning") == 1, plans[0]
+
+
+def test_index_probe_verifies_on_shingle_arrays(spark):
+    """dedup_incremental_index_probe verifies candidates on the index's
+    shingle arrays: its AQE-initial plan never explodes them (no
+    corpus-wide explode + distinct of the shingle table)."""
+    plan = _plan(spark, "dedup_incremental_index_probe")
+    assert "isFinalPlan=false" in plan
+    assert not re.search(r"Generate explode\(sha", plan), plan
+    assert "array_intersect" in plan
 
 
 def test_partition_join_pruned_filters(spark):

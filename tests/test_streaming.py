@@ -57,3 +57,36 @@ def test_watermark_present_in_plan(spark):
     state at 100 TB/day otherwise."""
     ev = stream_events(spark, SF_DIR, watermark="45 minutes")
     assert "watermark" in ev._jdf.queryExecution().analyzed().toString().lower()
+
+
+def test_ivm_signed_deltas_equal_full_recompute(spark, tmp_path):
+    """Seed, a + delta with a NULL value and two new groups (one holding
+    only a NULL), then a − delta that empties a group: the stored view
+    equals a full recompute of the final row multiset."""
+    from cloudberry_spark.streaming.ivm import apply_delta, create_matview
+
+    schema = "k: string, v: double"
+    seed = [("a", 1.10), ("a", 2.20), ("b", 3.30)]
+    plus = [("a", None), ("c", 4.40), ("d", None)]
+    minus = [("b", 3.30)]
+    keys, value = ["k"], "v"
+    inc = str(tmp_path / "inc")
+    create_matview(spark, inc, spark.createDataFrame(seed, schema), keys, value)
+    apply_delta(spark, inc, spark.createDataFrame(plus, schema), keys, value, +1)
+    apply_delta(spark, inc, spark.createDataFrame(minus, schema), keys, value, -1)
+
+    full = str(tmp_path / "full")
+    final = [("a", 1.10), ("a", 2.20), ("a", None), ("c", 4.40), ("d", None)]
+    create_matview(spark, full, spark.createDataFrame(final, schema), keys, value)
+
+    from cloudberry_spark.sources.snapshot import SnapshotTable
+
+    def rows(path):
+        return sorted(
+            tuple(r) for r in SnapshotTable(path).read(spark).collect()
+        )
+
+    got = rows(inc)
+    assert got == rows(full)
+    assert [r[0] for r in got] == ["a", "c", "d"]  # b emptied and dropped
+    assert got[2][1:] == (1, None)  # a NULL-only group sums to NULL

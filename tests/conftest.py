@@ -1,23 +1,24 @@
 """Shared fixtures: one SparkSession + one DuckDB connection per test run.
 
-Mirrors the driver's correctness harness (and the reference's pg_regress +
-atmsort comparison, /root/reference/src/test/regress/atmsort.pl): rows are
-compared order-insensitively after normalizing floats and timestamps.
+Results are judged by the driver's own comparator
+(``tools/driver_sim.py``: ``canon_frame`` + ``frames_match``), the one
+normalizer that decides pass or fail, as atmsort does for pg_regress:
+columns and rows are sorted, then every value is hashed exactly and
+dtype-sensitively. No float rounding, and an int column never matches a
+float one.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
-from datetime import date, datetime
-from decimal import Decimal
 
 import duckdb
 import pytest
 
 from cloudberry_spark.catalog import TABLES
 from cloudberry_spark.session import get_session
+from tools.driver_sim import canon_frame, frames_match
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -78,57 +79,17 @@ def ddb():
     con.close()
 
 
-def _norm_value(v):
-    """Normalize one cell for cross-engine comparison."""
-    if v is None:
-        return None
-    if isinstance(v, Decimal):
-        v = float(v)
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if math.isinf(v):
-            return "Inf" if v > 0 else "-Inf"
-        if v == 0:
-            return 0.0
-        # 8 significant digits: tolerant of summation-order noise while
-        # still catching real errors.
-        return round(v, 8 - 1 - int(math.floor(math.log10(abs(v)))))
-    if isinstance(v, datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, date):
-        return v.isoformat()
-    if isinstance(v, bool):
-        return bool(v)
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm_value(x) for x in v)
-    return v
-
-
-def normalize_rows(cols: list[str], rows: list[tuple]) -> list[tuple]:
-    """Sort columns by name, normalize cells, totally order the rows."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_norm_value(r[i]) for i in order) for r in rows]
-    return sorted(out, key=lambda r: tuple((x is None, str(x)) for x in r))
-
-
 def assert_matches_oracle(spark_df, ddb, oracle_sql: str, name: str = "?") -> int:
-    """Compare a Spark frame to its DuckDB oracle; returns the row count
-    (so callers can fold in the non-vacuousness check without a second
-    full execution of the query)."""
-    srows = spark_df.collect()
-    scols = spark_df.columns
-    res = ddb.execute(oracle_sql)
-    dcols = [d[0] for d in res.description]
-    drows = res.fetchall()
-    assert len(srows) == len(drows), (
-        f"{name}: row count spark={len(srows)} duckdb={len(drows)}"
+    """Compare a Spark frame to its DuckDB oracle with the driver's
+    comparator; returns the row count (so callers can fold in the
+    non-vacuousness check without a second full execution of the query).
+
+    A ``TypeError`` from an unhashable cell propagates and fails the
+    test, as it errors the driver.
+    """
+    spdf = spark_df.toPandas()
+    problems = frames_match(
+        canon_frame(spdf), canon_frame(ddb.execute(oracle_sql).df())
     )
-    assert sorted(c.lower() for c in scols) == sorted(c.lower() for c in dcols), (
-        f"{name}: columns spark={sorted(scols)} duckdb={sorted(dcols)}"
-    )
-    sn = normalize_rows([c.lower() for c in scols], [tuple(r) for r in srows])
-    dn = normalize_rows([c.lower() for c in dcols], drows)
-    mism = [(a, b) for a, b in zip(sn, dn) if a != b]
-    assert not mism, f"{name}: {len(mism)} mismatched rows; first: {mism[:3]}"
-    return len(srows)
+    assert not problems, f"{name}: {'; '.join(problems)}"
+    return len(spdf)

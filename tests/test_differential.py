@@ -1,22 +1,19 @@
 """Differential test: registered queries vs their DuckDB oracles.
 
-This is the same check the driver runs at sf0.01 (CORRECTNESS_r{N}.json);
-running it at sf0.001 keeps the pytest loop fast. Queries without an
-oracle get a weaker runs-and-returns-rows check.
+This is the check the driver runs at sf0.01 (CORRECTNESS_r{N}.json), with
+its comparator (``tests.conftest.assert_matches_oracle``); running it at
+sf0.001 keeps the pytest loop fast. Queries without an oracle get a
+weaker runs-and-returns-rows check, read through ``toPandas()`` as the
+driver reads them.
 
-Budget contract (r13): the registry is ~1,842 queries and the external
-driver's pytest budget cannot replay it twice per run (the r12 driver
-run truncated unfinished). Two changes keep the default run complete:
-
-* the non-vacuousness guard (every fixture query returns >= 1 row at
-  sf0.001 unless tagged ``may_be_empty``) is folded into the oracle
-  test — the row count is already known from the comparison, so the
-  second full replay pass it used to cost is gone;
-* by default only the ``interleaved_queries()`` prefix runs (see
-  ``tests.conftest.budget_queries`` — never-driver-sampled and
-  recently-changed queries first). SPARK_GRAFT_TEST_FULL=1 restores the
-  full sweep (used for the per-round full verification recorded in
-  OPTIMIZATION_r{N}.md), and SPARK_GRAFT_TEST_SHARD parallelizes it.
+Budget contract: the registry is ~1,842 queries and the external
+driver's pytest budget cannot replay it twice per run. So each query is
+built once, and that frame serves the oracle comparison, the Spark-side
+hash-safety check and the non-vacuousness guard (every fixture query
+returns >= 1 row at sf0.001 unless tagged ``may_be_empty``). By default
+only the ``interleaved_queries()`` prefix runs (see
+``tests.conftest.budget_queries``); SPARK_GRAFT_TEST_FULL=1 restores the
+full sweep, and SPARK_GRAFT_TEST_SHARD parallelizes it.
 """
 
 from __future__ import annotations
@@ -27,6 +24,7 @@ import pytest
 
 from cloudberry_spark.registry import all_queries
 from tests.conftest import SF_DIR, assert_matches_oracle, budget_queries
+from tools.driver_sim import complex_fields
 
 QUERIES = all_queries()
 
@@ -46,11 +44,14 @@ def test_query_matches_oracle(name, spark, ddb):
     q = QUERIES[name]
     df = q.fn(spark, SF_DIR)
     if q.oracle is None:
-        rows = df.collect()
-        assert rows is not None  # runs end-to-end; schema is stable
+        n = len(df.toPandas())  # runs end-to-end and converts via Arrow
         assert len(df.columns) > 0
-        n = len(rows)
     else:
+        cf = complex_fields(df.schema)
+        assert not cf, (
+            f"{name}: complex top-level output columns {cf} would ERROR "
+            "the driver (scalarize on BOTH engines)"
+        )
         n = assert_matches_oracle(df, ddb, q.oracle, name=name)
     # vacuous-oracle guard, folded in (empty-on-both still 'matches'):
     # every fixture query should produce at least one row at sf0.001.

@@ -4,15 +4,11 @@ verified here on deliberately-broken fixtures, not live queries)."""
 
 from __future__ import annotations
 
-import sys
-from pathlib import Path
-
 import pandas as pd
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-
-from driver_sim import canon_frame, frames_match  # noqa: E402
+from tests.conftest import assert_matches_oracle
+from tools.driver_sim import canon_frame, complex_fields, frames_match
 
 
 def test_int_vs_float_dtype_divergence_is_flagged():
@@ -73,3 +69,37 @@ def test_null_vs_empty_string_stays_distinct():
     a = pd.DataFrame({"s": [""]})
     b = pd.DataFrame({"s": [None]})
     assert frames_match(canon_frame(a), canon_frame(b))
+
+
+def test_complex_fields_flags_top_level_array_map_struct():
+    # a STRUCT column arrives as hashable Row cells and passes the hash,
+    # so the schema check is the one place it is caught
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("a", T.ArrayType(T.LongType())),
+            T.StructField("m", T.MapType(T.StringType(), T.LongType())),
+            T.StructField("s", T.StructType([T.StructField("x", T.LongType())])),
+            T.StructField("n", T.LongType()),
+            T.StructField("t", T.StringType()),
+            T.StructField("d", T.DecimalType(12, 2)),
+        ]
+    )
+    assert complex_fields(schema) == [
+        "a:array<bigint>",
+        "m:map<string,bigint>",
+        "s:struct<x:bigint>",
+    ]
+    assert complex_fields(T.StructType(schema.fields[3:])) == []
+
+
+def test_assert_matches_oracle_flags_int_vs_float(spark, ddb):
+    # the suite judges with the driver's comparator: the CORRECTNESS_r05
+    # int-vs-float class fails here too, while a representation-only
+    # difference (Spark Decimal vs DuckDB double) still matches
+    with pytest.raises(AssertionError, match="row-hash mismatches"):
+        assert_matches_oracle(spark.sql("SELECT 1 AS x"), ddb, "SELECT 1.0 AS x")
+    assert assert_matches_oracle(
+        spark.sql("SELECT 1.0 AS x"), ddb, "SELECT 1.0 AS x"
+    ) == 1

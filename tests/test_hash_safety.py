@@ -1,15 +1,13 @@
-"""Driver-hash-safety as a pytest invariant (r5/r6 verdict item).
+"""Driver-hash-safety of the DuckDB oracles' output schemas.
 
 The per-round correctness driver canonicalizes BOTH result frames with
-pandas and hashes them; a top-level ARRAY/MAP/STRUCT output column is
+pandas and hashes them; a top-level LIST/MAP/STRUCT output column is
 unhashable there and records a harness ERROR even when the values are
-right (CORRECTNESS_r01 agg_array_agg; r05: five more). These tests make
-that a build-failing invariant instead of an honor-system audit:
-
-* every oracled query's SPARK schema must be scalar at the top level;
-* every oracled query's DUCKDB oracle schema must be scalar too (the
-  driver canonicalizes the oracle frame as well — ADVICE r6), checked
-  via DESCRIBE so nothing executes.
+right (CORRECTNESS_r01 agg_array_agg; r05: five more). The Spark side
+of that invariant is checked on the frame
+``tests/test_differential.py::test_query_matches_oracle`` already
+builds. This test covers the oracle side for the whole registry, via
+DESCRIBE so nothing executes.
 
 Scalarize offenders on both engines (sorted array_join strings /
 per-element columns — the array_set_operations pattern,
@@ -18,36 +16,10 @@ operators/arrays.py:188).
 
 from __future__ import annotations
 
-from tests.conftest import SF_DIR, budget_queries
-
 from cloudberry_spark.registry import all_queries
-from tools.hash_safety_audit import DUCK_COMPLEX, complex_fields
 
-
-def test_spark_outputs_hash_safe(spark):
-    # fn() is eager for DML/index operators, so replaying all ~1,842
-    # registered queries costs ~20 min — the single largest item in the
-    # driver's overran pytest budget (r12). Default to the interleaved
-    # prefix (new/never-sampled queries first — exactly where a fresh
-    # hash-safety offender would be); SPARK_GRAFT_TEST_FULL=1 sweeps all.
-    offenders: list[str] = []
-    errors: list[str] = []
-    for name, q in sorted(budget_queries(all_queries()).items()):
-        if q.oracle is None:
-            continue
-        try:
-            df = q.fn(spark, SF_DIR)
-        except Exception as ex:  # build failures surface elsewhere too
-            errors.append(f"{name}: build failed: {str(ex)[:120]}")
-            continue
-        cf = complex_fields(df.schema)
-        if cf:
-            offenders.append(f"{name}: {cf}")
-    assert not errors, "query builds failed:\n" + "\n".join(errors)
-    assert not offenders, (
-        "complex top-level output columns would ERROR the driver "
-        "(scalarize on BOTH engines):\n" + "\n".join(offenders)
-    )
+#: DuckDB type-name markers of LIST, STRUCT, MAP and UNION columns.
+DUCK_COMPLEX = ("[]", "STRUCT(", "MAP(", "UNION(")
 
 
 def test_oracle_outputs_hash_safe(ddb):

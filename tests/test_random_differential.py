@@ -132,14 +132,14 @@ def window_queries(draw) -> str:
     rank_fn = draw(st.sampled_from(["row_number()", "rank()", "dense_rank()"]))
     pred = draw(predicates())
     # round(...,4): windowed running sums accumulate cross-engine
-    # float noise beyond the 8-significant-digit normalization, and any
-    # finer discretization sits on boundary cliffs (see the COVERAGE
-    # "discretization at float boundaries" note). 4-decimal absolute
-    # rounding is the comparison-stable middle ground for ROWS frames
-    # over these magnitudes.
+    # float noise, and any finer discretization sits on boundary cliffs
+    # (see the COVERAGE "discretization at float boundaries" note).
+    # 4-decimal absolute rounding is the comparison-stable middle ground
+    # for ROWS frames over these magnitudes. The DOUBLE cast fixes the
+    # output type: round(count(..)) is BIGINT on Spark, DOUBLE on DuckDB.
     return (
         f"SELECT l_orderkey, l_linenumber, "
-        f"round({agg}({col}) OVER w, 4) AS wv, "
+        f"CAST(round({agg}({col}) OVER w, 4) AS DOUBLE) AS wv, "
         f"{rank_fn} OVER (PARTITION BY {part} "
         f"ORDER BY l_orderkey, l_linenumber, l_extendedprice, l_quantity, l_discount) AS rk "
         f"FROM lineitem WHERE {pred} "
@@ -214,11 +214,13 @@ def grouping_sets_queries(draw) -> str:
     agg = draw(st.sampled_from(["sum(l_quantity)", "count(*)", "avg(l_discount)"]))
     # "OR l_orderkey = 1" keeps the input non-empty: on EMPTY input
     # PG/DuckDB emit the global () grouping-set row (SQL standard),
-    # Spark emits 0 rows — documented divergence in COVERAGE.md.
+    # Spark emits 0 rows — documented divergence in COVERAGE.md. The
+    # DOUBLE cast fixes the output type: round(count(*)) is BIGINT on
+    # Spark, DOUBLE on DuckDB.
     return (
         f"SELECT l_returnflag, l_linestatus, "
         f"grouping(l_returnflag) AS g_rf, grouping(l_linestatus) AS g_ls, "
-        f"round({agg}, 4) AS v "
+        f"CAST(round({agg}, 4) AS DOUBLE) AS v "
         f"FROM lineitem WHERE ({pred}) OR l_orderkey = 1 GROUP BY {form}"
     )
 
@@ -289,7 +291,8 @@ def scalar_exprs(draw, depth: int = 0) -> str:
     execExprInterp.c vs Catalyst codegen, value for value. All leaves
     cast to DOUBLE (int overflow wraps in Spark but errors in DuckDB);
     round() excluded (HALF_UP vs half-even on doubles); div-by-zero is
-    NULL on both engines."""
+    NULL on both engines. The caller casts the result to DOUBLE:
+    floor()/ceil() are BIGINT on Spark, DOUBLE on DuckDB."""
     leaves = [
         "CAST(l_quantity AS DOUBLE)",
         "CAST(l_extendedprice AS DOUBLE)",
@@ -328,7 +331,7 @@ def scalar_exprs(draw, depth: int = 0) -> str:
 @given(expr=scalar_exprs())
 def test_random_scalar_expr_matches(expr, spark, ddb):
     sql = (
-        f"SELECT l_orderkey, l_linenumber, {expr} AS v "
+        f"SELECT l_orderkey, l_linenumber, CAST({expr} AS DOUBLE) AS v "
         f"FROM lineitem WHERE l_orderkey < 300 "
         f"ORDER BY l_orderkey, l_linenumber"
     )

@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 
 from cloudberry_spark.registry import all_queries
 from cloudberry_spark.streaming.windows import run_stream_once, stream_events
-from tests.conftest import SF_DIR, assert_matches_oracle, normalize_rows
+from tests.conftest import SF_DIR, assert_matches_oracle
+from tools.driver_sim import canon_frame, frames_match
 
 BATCH_WINDOW_QUERIES = [
     "stream_tumbling_daily",
@@ -47,9 +48,9 @@ def test_streaming_update_mode_subset(spark):
         .groupBy(F.col("win_start").alias("s"))
         .agg(F.sum("n_events").alias("n"))
     )
-    assert normalize_rows(final.columns, [tuple(r) for r in final.collect()]) == (
-        normalize_rows(batch.columns, [tuple(r) for r in batch.collect()])
-    )
+    assert frames_match(
+        canon_frame(final.toPandas()), canon_frame(batch.toPandas())
+    ) == []
 
 
 def test_watermark_present_in_plan(spark):

@@ -15,10 +15,16 @@ driver's pandas canonicalizer:
 * **no float rounding**: values are hashed exactly; Spark/DuckDB must
   agree bit-for-bit (queries must round/cast in SQL where engines
   legitimately differ).
-* **hard error on unhashable cells**: a top-level ARRAY/MAP/STRUCT
+* **hard error on complex output columns**: a top-level ARRAY/MAP
   column raises TypeError inside the hash, which is reported as FAIL —
   the driver records the same situation as a harness ERROR
-  (CORRECTNESS_r01 agg_array_agg; r05: five more).
+  (CORRECTNESS_r01 agg_array_agg; r05: five more). A top-level STRUCT
+  column arrives as hashable ``Row`` cells and passes the hash, so
+  ``complex_fields`` flags it from the Spark schema instead.
+
+``tests/conftest.py::assert_matches_oracle`` judges with the same
+``canon_frame`` + ``frames_match``, so the suite and this replica
+agree on every query.
 
 Usage: python tools/driver_sim.py [sf_dir] [name_filter|first:N]
 Exit code 0 iff everything matches.
@@ -34,17 +40,32 @@ import duckdb
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as e  # noqa: E402
+from cloudberry_spark.catalog import TABLES  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 FILT = sys.argv[2] if len(sys.argv) > 2 else ""
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+COMPLEX = (T.ArrayType, T.MapType, T.StructType)
+
+
+def complex_fields(schema: T.StructType) -> list[str]:
+    """Top-level ARRAY/MAP/STRUCT output columns, as ``name:type``.
+
+    The driver hashes both result frames; such a column errors it or
+    is hashed by its string form. Scalarize on BOTH engines instead
+    (sorted ``array_join`` strings / per-element columns — the
+    array_set_operations pattern, operators/arrays.py).
+    """
+    return [
+        f"{f.name}:{f.dataType.simpleString()}"
+        for f in schema.fields
+        if isinstance(f.dataType, COMPLEX)
+    ]
 
 
 def _row_key(df: pd.DataFrame) -> pd.Series:
@@ -195,6 +216,12 @@ def main() -> int:
                   f"[{time.time()-t0:.1f}s]")
             ok += 1
             continue
+        cf = complex_fields(sdf.schema)
+        if cf:
+            print(f"FAIL {name}: complex top-level columns {cf} "
+                  f"(scalarize on BOTH engines)")
+            bad += 1
+            continue
         try:
             dpdf = con.execute(oracles[name]).df()
         except Exception as ex:
@@ -204,7 +231,7 @@ def main() -> int:
         try:
             problems = frames_match(canon_frame(spdf), canon_frame(dpdf))
         except TypeError as ex:
-            # unhashable cell (ARRAY/MAP/STRUCT output) — the driver
+            # unhashable cell (ARRAY/MAP output) — the driver
             # records this as a harness ERROR; we fail hard
             print(f"FAIL {name}: unhashable cells (driver would ERROR): "
                   f"{str(ex)[:160]}")

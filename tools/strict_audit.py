@@ -2,9 +2,10 @@
 
 The per-round correctness driver compares Spark and DuckDB results by
 hashing pandas frames — dtype-sensitive and bit-exact, with NO float
-normalization. tests/conftest.py's 8-significant-digit comparison is
-deliberately tolerant, which is right for the inner dev loop but hides
-exactly the three failure classes that went red in CORRECTNESS_r02:
+normalization. The tests and tools/driver_sim.py judge with that
+comparator (``canon_frame`` + ``frames_match``); this audit is a second,
+independently written check of the failure classes that went red in
+CORRECTNESS_r02:
 
   1. float accumulation-order drift (Spark partial aggs vs DuckDB order),
   2. int-vs-FLOAT kind divergence (e.g. a Spark BIGINT window sum vs a
@@ -17,6 +18,11 @@ This audit reproduces the stricter bar: for every registered query with
 an oracle, collect BOTH sides as pandas via Arrow, sort columns by name,
 totally order rows, then require (a) identical dtype kinds per column
 and (b) bit-exact values (floats compared with ==, no rounding).
+
+It is stricter than the driver on one pair: a Spark DECIMAL column
+(pandas object of Decimal) against a DuckDB float64 one fails (a) here,
+while the driver accepted it (regress_rngf_multi_unnest_ordinality,
+CORRECTNESS_r12) and ``canon_frame`` unifies it.
 
 Usage: python tools/strict_audit.py [sf_dir] [name_filter...]
 Exit 0 iff everything matches. Prints one line per problem query.

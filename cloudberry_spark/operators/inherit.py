@@ -9,14 +9,15 @@ restricts to the named table, ``tableoid`` exposes which physical
 table each row lives in, and UPDATE/DELETE against a parent route to
 every descendant unless ONLY.
 
-Spark-first: each table in the hierarchy is its own parquet store; a
-scan is the union of the (deduplicated) descendant stores projected
-to the scanned table's column set with a ``relname`` provenance
-literal per branch — Catalyst prunes unreferenced branches and the
-union reads stay partition-parallel per store. DML rewrites each
-affected store through a CASE-expression projection (copy-on-write,
-the same regime SnapshotTable DML uses) — no row-at-a-time driver
-work at any scale.
+Spark-first: each table in the hierarchy is its own snapshot table
+(sources/snapshot.py); a scan is the union of the (deduplicated)
+descendant tables' current snapshots projected to the scanned table's
+column set with a ``relname`` provenance literal per branch — Catalyst
+prunes unreferenced branches and the union reads stay
+partition-parallel per table. DML is the snapshot DML of
+operators/dml.py on each affected table: INSERT an append commit,
+UPDATE a conditional-projection rewrite, DELETE an anti-filter rewrite
+— no row-at-a-time driver work at any scale.
 """
 
 from __future__ import annotations
@@ -28,13 +29,16 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark.operators.dml import delete_from, insert_into, update_table
+from cloudberry_spark.sources.snapshot import SnapshotTable
+
 
 @dataclass
 class InhTable:
     name: str
     columns: list[str]          # full column set (inherited + own)
     parents: list[str]
-    path: str
+    st: SnapshotTable
 
 
 @dataclass
@@ -58,14 +62,13 @@ class InheritanceCatalog:
         for c in own_cols:
             if c not in cols:
                 cols.append(c)
-        self.tables[name] = InhTable(
-            name, cols, list(parents), os.path.join(self.base, name)
-        )
-        # empty store with the full schema (all STRING for the battery)
+        # empty table with the full schema (all STRING for the battery)
         schema = ", ".join(f"{c} STRING" for c in cols)
-        self.spark.createDataFrame([], schema=schema).write.mode(
-            "overwrite"
-        ).parquet(self.tables[name].path)
+        st = SnapshotTable.init(
+            os.path.join(self.base, name),
+            self.spark.createDataFrame([], schema=schema),
+        )
+        self.tables[name] = InhTable(name, cols, list(parents), st)
 
     def _children(self, name: str) -> list[str]:
         return [t.name for t in self.tables.values() if name in t.parents]
@@ -98,38 +101,18 @@ class InheritanceCatalog:
                 for c in t.columns
             ]
         )
-        full.write.mode("append").parquet(t.path)
-
-    def _rewrite(self, t: InhTable, new_df: DataFrame) -> None:
-        tmp = t.path + ".new"
-        new_df.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(t.path)
-        os.rename(tmp, t.path)
+        insert_into(self.spark, t.st, full)
 
     def update(self, name: str, set_exprs: dict[str, str],
                where: str | None = None, only: bool = False) -> None:
-        targets = [name] if only else self.descendants(name)
-        cond = where or "true"
-        for tn in targets:
-            t = self.tables[tn]
-            df = self.spark.read.parquet(t.path)
-            proj = [
-                F.expr(
-                    f"CASE WHEN {cond} THEN ({set_exprs[c]}) "
-                    f"ELSE {c} END"
-                ).alias(c) if c in set_exprs else F.col(c)
-                for c in t.columns
-            ]
-            self._rewrite(t, df.select(*proj))
+        sets = {c: F.expr(e) for c, e in set_exprs.items()}
+        for tn in [name] if only else self.descendants(name):
+            update_table(self.spark, self.tables[tn].st, F.expr(where or "true"), sets)
 
     def delete(self, name: str, where: str | None = None,
                only: bool = False) -> None:
-        targets = [name] if only else self.descendants(name)
-        cond = where or "true"
-        for tn in targets:
-            t = self.tables[tn]
-            df = self.spark.read.parquet(t.path)
-            self._rewrite(t, df.where(f"NOT ({cond})"))
+        for tn in [name] if only else self.descendants(name):
+            delete_from(self.spark, self.tables[tn].st, F.expr(where or "true"))
 
     # -- scans ---------------------------------------------------------
 
@@ -139,7 +122,7 @@ class InheritanceCatalog:
         t = self.tables[name]
         parts = []
         for tn in ([name] if only else self.descendants(name)):
-            src = self.spark.read.parquet(self.tables[tn].path)
+            src = self.tables[tn].st.read(self.spark)
             parts.append(
                 src.select(
                     F.lit(tn).alias("relname"),

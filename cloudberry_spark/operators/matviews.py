@@ -8,13 +8,15 @@ changes rows (INSERT of zero rows keeps it fresh — matview_data.sql:43
 unpopulated matview (CREATE ... WITH NO DATA, matview.c) cannot be
 scanned until refreshed.
 
-Spark-first analog: the matview materializes its defining query over a
-SnapshotTable base into a scratch fileset and records the base's
-manifest version at refresh time. ``datastatus`` is then a pure
-metadata comparison — current base version vs refreshed-at version —
-the same O(1) check the reference's aux table provides. Zero-row
-appends skip the commit entirely (SnapshotTable versions move only
-when data moves), which reproduces the reference's zero-row-insert
+Spark-first analog: the matview is itself a snapshot table, created
+empty with its defining query's columns (PG creates the heap even WITH
+NO DATA). REFRESH commits the defining query's result over the
+SnapshotTable base as a rewrite, so a reader of the old contents is
+never torn, and records the base's manifest version. ``datastatus`` is
+then a pure metadata comparison — current base version vs refreshed-at
+version — the same O(1) check the reference's aux table provides.
+Zero-row appends skip the commit entirely (SnapshotTable versions move
+only when data moves), which reproduces the reference's zero-row-insert
 freshness rule with no content hashing.
 
 At 100 TB: refresh cost is the defining query itself; staleness checks
@@ -42,14 +44,13 @@ class UnpopulatedMatviewError(RuntimeError):
 class MatView:
     def __init__(
         self,
-        root: str,
+        table: SnapshotTable,
         base: SnapshotTable,
         define: Callable[[DataFrame], DataFrame],
     ):
-        self.root = root
+        self.table = table
         self.base = base
         self.define = define
-        self.populated = False
         self.refreshed_at: int | None = None
 
     @classmethod
@@ -61,32 +62,31 @@ class MatView:
         define: Callable[[DataFrame], DataFrame],
         with_no_data: bool = False,
     ) -> "MatView":
-        mv = cls(root, base, define)
+        empty = define(base.read(spark)).limit(0)
+        mv = cls(SnapshotTable.init(root, empty), base, define)
         if not with_no_data:
             mv.refresh(spark)
         return mv
 
     def refresh(self, spark: SparkSession) -> None:
         v = self.base.current_version()
-        self.define(self.base.read(spark)).write.mode("overwrite").parquet(
-            self.root
-        )
+        rows = self.define(self.base.read(spark, v))
+        self.table.commit_rewrite(rows, self.table.current_version(), "refresh")
         self.refreshed_at = v
-        self.populated = True
 
     def datastatus(self) -> str:
         """'x' unpopulated | 'u' up to date | 'e' expired — the
         gp_matview_aux.datastatus analog as a version comparison."""
-        if not self.populated:
+        if self.refreshed_at is None:
             return "x"
         return "u" if self.base.current_version() == self.refreshed_at else "e"
 
     def read(self, spark: SparkSession) -> DataFrame:
-        if not self.populated:
+        if self.refreshed_at is None:
             raise UnpopulatedMatviewError(
                 "materialized view has not been populated"
             )
-        return spark.read.parquet(self.root)
+        return self.table.read(spark)
 
 
 def _append_nonempty(spark: SparkSession, st: SnapshotTable, rows: DataFrame) -> None:

@@ -8,24 +8,28 @@ metadata surgery on the partition catalog plus (for SPLIT only) a
 rewrite of the ONE affected leaf; sibling leaves are never touched
 (cdbpartition.c).
 
-Spark-first analog: a range-partitioned lakehouse table whose manifest
-maps each range [lo, hi) to an immutable parquet fileset dir, riding
-SnapshotTable's optimistic-commit protocol (sources/snapshot.py). The
-operations preserve the reference's cost model exactly:
+Spark-first analog: a range-partitioned snapshot table
+(sources/snapshot.py) whose manifest ``parts`` map each range [lo, hi),
+keyed ``<lo>_<hi>``, to an immutable parquet fileset. Every operation
+is one snapshot commit, so it rides the same optimistic protocol, and
+vacuum reclaims the filesets it drops. The operations preserve the
+reference's cost model exactly:
 
-- ADD:      one new dir written + a manifest commit; siblings untouched.
-- EXCHANGE: the staged table's fileset becomes the partition's dir, the
-            old dir is returned as a standalone table (PG swaps the two
+- CREATE:   one write splits the seed rows into every range's fileset.
+- ADD:      one new fileset written + a manifest commit; siblings
+            untouched.
+- EXCHANGE: the staged table's fileset becomes the partition's, the
+            old one is returned as a standalone table (PG swaps the two
             relfilenodes); zero data rewritten beyond the staged write.
-- SPLIT:    the one affected dir is re-read and written as two dirs
-            filtered at the split point; siblings byte-identical.
-- TRUNCATE: manifest drops the dir — catalog-only; the files stay on
+- SPLIT:    the one affected fileset is re-read and written, in one
+            write, as the two halves' filesets; siblings byte-identical.
+- TRUNCATE: manifest drops the part — catalog-only; the files stay on
             disk for old-version readers (time travel) until vacuum,
             like PG keeping the old relfilenode until commit.
 
 Readers prune at the manifest: a key predicate resolves to the covering
-range dirs only (the planner-level PartitionSelector analog — at 100 TB
-a point lookup opens one fileset, never the table).
+range's fileset only (the planner-level PartitionSelector analog — at
+100 TB a point lookup opens one fileset, never the table).
 
 tests/test_partition_ddl.py pins the untouched-siblings, catalog-only
 truncate, and time-travel properties at the filesystem level.
@@ -33,22 +37,24 @@ truncate, and time-travel properties at the filesystem level.
 
 from __future__ import annotations
 
-import os
-import re
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.registry import register
-from cloudberry_spark.sources.snapshot import SnapshotTable, _schema_after
+from cloudberry_spark.sources.snapshot import SnapshotTable
+
+
+def _range(key: str) -> tuple[int, int]:
+    """The range [lo, hi) of the part key ``<lo>_<hi>``."""
+    lo, hi = key.split("_")
+    return int(lo), int(hi)
 
 
 class RangePartitionedTable:
-    """Range partitioning [lo, hi) on one integer key over a
-    SnapshotTable manifest: each manifest dir is ``part-<lo>_<hi>-v<n>``.
-    """
+    """Range partitioning [lo, hi) on one integer key over a partitioned
+    SnapshotTable: the manifest's ``parts`` are keyed ``<lo>_<hi>``."""
 
     def __init__(self, st: SnapshotTable, key: str):
         self.st = st
@@ -56,30 +62,29 @@ class RangePartitionedTable:
 
     # -- helpers --------------------------------------------------------
 
-    @staticmethod
-    def _dirname(lo: int, hi: int, version: int) -> str:
-        return f"part-{lo}_{hi}-v{version}"
-
-    _DIR_RE = re.compile(r"^part-(-?\d+)_(-?\d+)-v\d+$")
-
-    @classmethod
-    def _bounds(cls, d: str) -> tuple[int, int]:
-        m = cls._DIR_RE.match(d)
-        if not m:
-            raise ValueError(f"unparseable partition dir name: {d!r}")
-        return int(m.group(1)), int(m.group(2))
-
     def _parts(self) -> dict[tuple[int, int], str]:
-        return {self._bounds(d): d for d in self.st.manifest()["dirs"]}
+        """(lo, hi) -> fileset dir of every range of the current version."""
+        return {_range(k): d for k, d in self.st.manifest()["parts"].items()}
 
-    def _commit(self, dirs: list[str], base: int, *written: DataFrame) -> None:
-        """Commit ``dirs`` as version base+1; ``written`` are the frames
-        this change wrote its new filesets from."""
-        schema = _schema_after(self.st.manifest(base), written)
-        self.st._write_manifest(
-            base + 1, parent=base, dirs=sorted(dirs), schema=schema
-        )
-        self.st._flip(base + 1)
+    def _covering(self, version: int | None, value: int) -> tuple[str, dict]:
+        """The key of the part whose range covers ``value``, and the
+        version's parts."""
+        parts = self.st.manifest(version)["parts"]
+        for k in parts:
+            lo, hi = _range(k)
+            if lo <= value < hi:
+                return k, parts
+        raise KeyError(f"no partition covers {value}")
+
+    def _split(
+        self, df: DataFrame, bounds: list[tuple[int, int]]
+    ) -> tuple[DataFrame, Column, list[str]]:
+        """The split write of ``df`` into one part per range of ``bounds``."""
+        k = F.col(self.key)
+        by = F.lit(None).cast("string")
+        for lo, hi in bounds:
+            by = F.when((k >= lo) & (k < hi), f"{lo}_{hi}").otherwise(by)
+        return df, by, [f"{lo}_{hi}" for lo, hi in bounds]
 
     # -- lifecycle ------------------------------------------------------
 
@@ -92,25 +97,12 @@ class RangePartitionedTable:
         bounds: list[tuple[int, int]],
     ) -> "RangePartitionedTable":
         """CREATE TABLE ... PARTITION BY RANGE (key) (START..END..):
-        routes the seed rows to one fileset per declared range; rows
-        outside every range are rejected implicitly (no default)."""
-        import shutil
-
-        shutil.rmtree(root, ignore_errors=True)
-        st = SnapshotTable(root)
-        os.makedirs(st._manifest_dir, exist_ok=True)
-        dirs = []
-        for lo, hi in bounds:
-            d = cls._dirname(lo, hi, 0)
-            df.filter((F.col(key) >= lo) & (F.col(key) < hi)).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(root, d))
-            dirs.append(d)
-        st._write_manifest(
-            0, parent=None, dirs=sorted(dirs), schema=df.schema.jsonValue()
-        )
-        st._flip(0)
-        return cls(st, key)
+        routes the seed rows to one fileset per declared range, in one
+        write; rows outside every range are rejected implicitly (no
+        default)."""
+        t = cls(SnapshotTable(root), key)
+        t.st._commit(None, "create", {}, split=t._split(df, bounds))
+        return t
 
     def read(self, spark: SparkSession) -> DataFrame:
         return self.st.read(spark)
@@ -118,27 +110,22 @@ class RangePartitionedTable:
     def read_pruned(self, spark: SparkSession, value: int) -> DataFrame:
         """Point read: opens ONLY the covering range's fileset (manifest
         pruning — the PartitionSelector analog)."""
-        for (lo, hi), d in self._parts().items():
-            if lo <= value < hi:
-                return self.st.read(spark, dirs=[d])
-        raise KeyError(f"no partition covers {value}")
+        k, parts = self._covering(None, value)
+        return self.st.read(spark, dirs=[parts[k]])
 
     def add_partition(self, lo: int, hi: int, df: DataFrame) -> None:
         """ALTER TABLE ... ADD PARTITION START(lo) END(hi): new fileset +
         manifest commit; overlap with an existing range is an error (PG
         overlapping-partition check)."""
         base = self.st.current_version()
-        parts = self._parts()
-        for plo, phi in parts:
+        parts = self.st.manifest(base)["parts"]
+        for plo, phi in map(_range, parts):
             if lo < phi and plo < hi:
                 raise ValueError(
                     f"partition [{lo},{hi}) overlaps existing [{plo},{phi})"
                 )
-        d = self._dirname(lo, hi, base + 1)
-        df.filter((F.col(self.key) >= lo) & (F.col(self.key) < hi)).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self.st.root, d))
-        self._commit(list(parts.values()) + [d], base, df)
+        rows = df.filter((F.col(self.key) >= lo) & (F.col(self.key) < hi))
+        self.st._commit(base, "add", {**parts, f"{lo}_{hi}": rows})
 
     def exchange_partition(
         self, spark: SparkSession, value: int, staged: DataFrame
@@ -149,68 +136,46 @@ class RangePartitionedTable:
         swaps relfilenodes both ways). Rows in the staged table outside
         the partition's range are a validation error."""
         base = self.st.current_version()
-        parts = self._parts()
-        for (lo, hi), d in parts.items():
-            if lo <= value < hi:
-                bad = staged.filter(
-                    (F.col(self.key) < lo) | (F.col(self.key) >= hi)
-                ).count()
-                if bad:
-                    raise ValueError(
-                        f"{bad} staged rows violate range [{lo},{hi}) "
-                        "(PG exchange validation scan)"
-                    )
-                # the displaced fileset is immutable and survives the
-                # commit (time travel), so a lazy reader over it is safe
-                old = self.st.read(spark, base, dirs=[d])
-                nd = self._dirname(lo, hi, base + 1)
-                staged.write.mode("overwrite").parquet(
-                    os.path.join(self.st.root, nd)
-                )
-                dirs = [x for x in parts.values() if x != d] + [nd]
-                self._commit(dirs, base, staged)
-                return old
-        raise KeyError(f"no partition covers {value}")
+        k, parts = self._covering(base, value)
+        lo, hi = _range(k)
+        bad = staged.filter(
+            (F.col(self.key) < lo) | (F.col(self.key) >= hi)
+        ).count()
+        if bad:
+            raise ValueError(
+                f"{bad} staged rows violate range [{lo},{hi}) "
+                "(PG exchange validation scan)"
+            )
+        # the displaced fileset is immutable and survives the commit
+        # (time travel), so a lazy reader over it is safe
+        old = self.st.read(spark, base, dirs=[parts[k]])
+        self.st._commit(base, "exchange", {**parts, k: staged})
+        return old
 
     def split_partition(self, spark: SparkSession, value: int, at: int) -> None:
         """ALTER TABLE ... SPLIT PARTITION FOR(value) AT (at) INTO (a, b)
-        (partition.sql:141): rewrite the ONE covering fileset into
-        [lo, at) and [at, hi); every sibling fileset is untouched."""
+        (partition.sql:141): rewrite the ONE covering fileset, in one
+        write, into [lo, at) and [at, hi); every sibling fileset is
+        untouched."""
         base = self.st.current_version()
-        parts = self._parts()
-        for (lo, hi), d in parts.items():
-            if lo <= value < hi:
-                if not (lo < at < hi):
-                    raise ValueError(f"split point {at} outside ({lo},{hi})")
-                src = self.st.read(spark, base, dirs=[d])
-                d1 = self._dirname(lo, at, base + 1)
-                d2 = self._dirname(at, hi, base + 1)
-                src.filter(F.col(self.key) < at).write.mode("overwrite").parquet(
-                    os.path.join(self.st.root, d1)
-                )
-                src.filter(F.col(self.key) >= at).write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(self.st.root, d2))
-                dirs = [x for x in parts.values() if x != d] + [d1, d2]
-                self._commit(dirs, base, src)
-                return
-        raise KeyError(f"no partition covers {value}")
+        k, parts = self._covering(base, value)
+        lo, hi = _range(k)
+        if not (lo < at < hi):
+            raise ValueError(f"split point {at} outside ({lo},{hi})")
+        src = self.st.read(spark, base, dirs=[parts.pop(k)])
+        split = self._split(src, [(lo, at), (at, hi)])
+        self.st._commit(base, "split", parts, split=split)
 
     def truncate_partition(self, value: int) -> None:
         """ALTER TABLE ... TRUNCATE PARTITION FOR(value): manifest-only —
-        the dir leaves the current snapshot but stays on disk for
+        the fileset leaves the current snapshot but stays on disk for
         time-travel readers (vacuum reclaims it later)."""
         base = self.st.current_version()
-        parts = self._parts()
-        for (lo, hi), d in parts.items():
-            if lo <= value < hi:
-                dirs = [x for x in parts.values() if x != d]
-                if not dirs:
-                    raise ValueError("cannot truncate the only partition")
-                self._commit(dirs, base)
-                return
-        raise KeyError(f"no partition covers {value}")
-
+        k, parts = self._covering(base, value)
+        del parts[k]
+        if not parts:
+            raise ValueError("cannot truncate the only partition")
+        self.st._commit(base, "truncate", parts)
 
 
 

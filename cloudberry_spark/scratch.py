@@ -13,14 +13,17 @@ Layout (the root is gitignored, inside the repo)::
                                                 checkpoints, materialize()
     .scratch/spec_<tag>_k1_pid<N>/              spec_dir() at K=1
     .scratch/spec_<tag>_k<K>/                   spec_dir() at K>1
+    <dir>/_staging_pid<N>/                      staging(): writes renamed
+                                                into <dir>
 
 Every process gets its own ``pid<N>`` dir, so two processes at the same
 SF (test shards, a bench run beside a test run) never overwrite a path
 the other is mid-read on. A killed process cannot clean up after itself:
 the first ``path`` call per (process, SF) removes the ``pid<N>`` dirs of
-dead processes. The K>1 spec dirs are the one shared cache: their
-``_SUCCESS`` marker makes a half-written fileset invisible, and every
-process at that K builds the same data.
+dead processes. The K>1 spec dirs are the one shared cache, and every
+process at that K builds the same data: a process writes a view under
+its own ``staging()`` dir and renames it into place, so no process ever
+writes where another reads.
 
 Two ways to cut an iterative operator's lineage:
 
@@ -96,6 +99,14 @@ def spec_dir(tag: str, k: int) -> str:
         _sweep_dead_pids(ROOT, f"spec_{tag}_k1_pid")
         return os.path.join(ROOT, f"spec_{tag}_k1_pid{os.getpid()}")
     return os.path.join(ROOT, f"spec_{tag}_k{k}")
+
+
+def staging(parent: str) -> str:
+    """This process's staging dir inside ``parent``: write there, then
+    ``os.rename`` into place, so another process never sees a partial
+    write."""
+    _sweep_dead_pids(parent, "_staging_pid")
+    return os.path.join(parent, f"_staging_pid{os.getpid()}")
 
 
 def materialize(df, spark, sf_dir: str, tag: str):

@@ -95,7 +95,12 @@ def require_conf(spark: SparkSession, key: str, value: str) -> None:
 
 
 def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (e.g. the driver's)."""
+    """Apply runtime confs to an existing session (e.g. the driver's).
+
+    Shuffle partitions are the core count, at least 8, unless the
+    session set its own: Spark's default of 200 ran a few-row stateful
+    stream stage as 200 tasks (stream_dedup_watermark: 30-38 s vs 2 s).
+    """
     for k, v in RUNTIME_CONFS.items():
         if k in REQUIRED_CONFS:
             require_conf(spark, k, v)
@@ -104,15 +109,20 @@ def configure_session(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass  # not modifiable in this deployment; a knob, not a result
+    key = "spark.sql.shuffle.partitions"
+    try:
+        if spark.conf.get(key, None) is None:  # None only while unset
+            spark.conf.set(key, str(max(spark.sparkContext.defaultParallelism, 8)))
+    except Exception:
+        pass  # a knob, as above
     return spark
 
 
 def get_session(app_name: str = "cloudberry-spark") -> SparkSession:
     """Build (or fetch) the engine session.
 
-    ``SPARK_GRAFT_CPUS`` sets local parallelism; shuffle partitions default
-    to the core count (AQE coalesces down at runtime, so oversizing is
-    cheap; undersizing caps parallelism).
+    ``SPARK_GRAFT_CPUS`` sets local parallelism; ``configure_session``
+    sets shuffle partitions from it.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     # JIT code cache: a long-lived analytics session compiles one or more
@@ -129,7 +139,6 @@ def get_session(app_name: str = "cloudberry-spark") -> SparkSession:
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.driver.extraJavaOptions", java_opts)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))

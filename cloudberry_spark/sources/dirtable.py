@@ -11,10 +11,12 @@ relation whose rows ARE files —
     SELECT remove_file('dt', 'relative/name');
 
 Spark-first mapping: a directory table is a managed directory plus a
-parquet metadata catalog. COPY BINARY stages the file bytes under the
-directory (md5/size/tag recorded at ingest; duplicate relative_path
-is a loud error, matching the reference's "file already exists");
-the metadata relation is the catalog parquet; the content-bearing
+metadata catalog that is a snapshot table (sources/snapshot.py), empty
+at CREATE. COPY BINARY stages the file bytes under the directory and
+INSERTs the file's metadata row (md5/size/tag recorded at ingest;
+duplicate relative_path is a loud error, matching the reference's
+"file already exists"); remove_file DELETEs it. The metadata relation
+is the catalog's current snapshot; the content-bearing
 ``directory_table()`` form joins the catalog to Spark's distributed
 ``binaryFile`` source over the same directory — at 100 TB the listing
 and the byte reads are executor-parallel (one task per file /
@@ -33,6 +35,10 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import functions as F
+
+from cloudberry_spark.operators.dml import delete_from, insert_into
+from cloudberry_spark.sources.snapshot import SnapshotTable
 
 
 class DirectoryTableError(ValueError):
@@ -52,9 +58,11 @@ class DirectoryTable:
         self.spark = spark
         self.name = name
         self.files_dir = os.path.join(base, "files")
-        self.meta_dir = os.path.join(base, "meta")
         shutil.rmtree(base, ignore_errors=True)
         os.makedirs(self.files_dir, exist_ok=True)
+        self.meta = SnapshotTable.init(
+            os.path.join(base, "meta"), spark.createDataFrame([], _META_SCHEMA)
+        )
 
     # -- DML ---------------------------------------------------------------
 
@@ -102,7 +110,7 @@ class DirectoryTable:
             "relative_path", "size",
             "current_timestamp() AS last_modified", "md5", "tag",
         )
-        df.write.mode("append").parquet(self.meta_dir)
+        insert_into(self.spark, self.meta, df)
 
     def remove_file(self, relative_path: str) -> None:
         """remove_file('<dt>', '<relative_path>') utility."""
@@ -113,18 +121,13 @@ class DirectoryTable:
                 f"table '{self.name}'"
             )
         os.remove(dest)
-        kept = self.metadata().where(
-            f"relative_path <> '{relative_path}'"
-        )
-        kept.write.mode("overwrite").parquet(self.meta_dir + ".new")
-        shutil.rmtree(self.meta_dir)
-        os.rename(self.meta_dir + ".new", self.meta_dir)
+        delete_from(self.spark, self.meta, F.col("relative_path") == relative_path)
 
     # -- reads ---------------------------------------------------------
 
     def metadata(self) -> DataFrame:
         """The directory table relation: one metadata row per file."""
-        return self.spark.read.schema(_META_SCHEMA).parquet(self.meta_dir)
+        return self.meta.read(self.spark)
 
     def directory_table(self) -> DataFrame:
         """The content-bearing directory_table('<dt>') form: catalog

@@ -6,44 +6,53 @@ MVCC snapshots (/root/reference/src/backend/executor/nodeModifyTable.c:
 writers race on the commit record. Spark has no in-place mutation, so
 the lakehouse equivalent is optimistic copy-on-write over immutable
 filesets — this module is that protocol, reduced to its two essential
-guarantees and shared by every dml_* operator:
+guarantees and shared by every table the engine rewrites:
 
 1. **Snapshot isolation for readers**: a reader resolves `_CURRENT` →
    manifest v{N} → fileset list once; every file it then reads is
    immutable, so a concurrent commit can never show it a torn mix.
-2. **First-writer-wins for writers**: a commit writes its new fileset,
-   then creates `_manifest/v{N+1}.json` with O_CREAT|O_EXCL — the
-   filesystem arbitrates exactly one winner per version (Delta's
-   optimistic-concurrency step, simplified) — and only then flips
-   `_CURRENT` via atomic rename. A writer whose base version is stale
-   (someone else already committed v{N+1}) gets ConcurrentWriteError
-   and must re-read + retry, exactly like a serialization failure in
-   the reference.
+2. **First-writer-wins for writers**: the O_CREAT|O_EXCL create of
+   the next manifest arbitrates exactly one winner per version (Delta's
+   optimistic-concurrency step, simplified). A writer whose base
+   version is stale gets ConcurrentWriteError and must re-read + retry,
+   exactly like a serialization failure in the reference.
 
 Layout:
     root/_CURRENT             pointer: current version number
     root/_manifest/v3.json    {"version":3,"parent":2,"dirs":[...],
                                "schema":{StructType JSON}}
-    root/data-v3-rewrite/     immutable parquet fileset(s)
+    root/data-v3-rewrite-<id>/  immutable parquet fileset(s)
 
-``schema`` is the schema of the frame(s) the version's filesets were
-written from, the way the reference keeps a relation's tuple descriptor
-in its catalog rather than in the heap files. A reader passes it to
+A partitioned table's manifest also has ``"parts": {key: dir}``, and
+its ``dirs`` are the parts' dirs. A key is ``str(value)`` of the
+partition column (``init_partitioned``) or ``<lo>_<hi>`` of a range
+[lo, hi) (operators/partition_ddl.py).
+
+Every version of every table is committed by ``SnapshotTable._commit``,
+in this order (the steps a writer can die between):
+
+1. the stale-base check, or for v0 the reset of the root;
+2. each new fileset written to a ``_fresh`` ``data-v{N}-<label>`` dir
+   (a split write renames several out of one partitionBy write);
+3. the commit point, ``_write_manifest``: the O_EXCL claim of
+   ``_manifest/v{N}.json``;
+4. ``_flip``: the atomic rename of ``_CURRENT`` to N.
+
+``schema`` is the schema the version's filesets were written with, the
+way the reference keeps a relation's tuple descriptor in its catalog
+rather than in the heap files; a fileset kept from the base counts as
+written with the base's schema. A reader passes it to
 ``spark.read.schema`` instead of having Spark start a job to read a
-footer. A commit that adds a fileset whose column names or types differ
-from the table's records no schema, and its readers infer one as
-before.
+footer. A version whose filesets differ in column names or types
+records no schema, and its readers infer one as before.
 
 INSERT is an append commit (new dir ADDED to the manifest's dir list —
 no rewrite of existing data); UPDATE/DELETE/MERGE are rewrite commits
-(new manifest points at the rewritten fileset). Old versions remain
-readable (time travel) until vacuumed.
-
-At 100 TB: the manifest is O(#filesets) driver-side metadata; data
-moves only through ordinary distributed writes. A partition-confined
-rewrite would list per-partition dirs in the manifest and swap only
-the touched ones — same protocol, narrower fileset, mirroring how the
-reference prunes ModifyTable to leaf partitions.
+(new manifest points at the rewritten fileset); a partition-confined
+rewrite swaps only the touched parts, as the reference prunes
+ModifyTable to leaf partitions. Old versions remain readable (time
+travel) until vacuumed. At 100 TB the manifest is O(#filesets)
+driver-side metadata; data moves only through distributed writes.
 """
 
 from __future__ import annotations
@@ -52,9 +61,9 @@ import json
 import os
 import shutil
 import uuid
-from collections.abc import Iterable
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
@@ -71,20 +80,6 @@ def _fresh(name: str) -> str:
     are the same discipline every lakehouse format uses.
     """
     return f"{name}-{uuid.uuid4().hex[:8]}"
-
-
-def _schema_after(base: dict, frames: Iterable[DataFrame]) -> dict | None:
-    """The schema a commit that adds filesets written from ``frames`` to
-    the ``base`` manifest records: the base's, while every new fileset
-    has its column names and types (parquet stores every field
-    nullable, so nullability does not count), else none."""
-    schema = base.get("schema")
-    if schema is None:
-        return None
-    shape = StructType.fromJson(schema).simpleString()
-    if all(df.schema.simpleString() == shape for df in frames):
-        return schema
-    return None
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -128,27 +123,93 @@ class SnapshotTable:
 
     # -- commits ------------------------------------------------------------
 
-    @classmethod
-    def init(cls, root: str, df: DataFrame) -> "SnapshotTable":
-        """Create (or reset) a table at v0 from a seed DataFrame.
+    def _commit(
+        self,
+        base: int | None,
+        label: str,
+        filesets: list[DataFrame | str] | dict[str, DataFrame | str],
+        split: tuple[DataFrame, Column, list[str]] | None = None,
+    ) -> int:
+        """Commit the next version: the one commit sequence of the module
+        docstring. Returns the committed version.
 
-        Re-initing a root that was already read in this session must
-        drop Spark's shared FileStatusCache entries for it: the old
-        listing names files the rmtree just deleted, and a later scan
-        through the cached listing dies with FAILED_READ_FILE
-        (surfaced by regress_merge_self_merge under the full suite)."""
-        shutil.rmtree(root, ignore_errors=True)
-        t = cls(root)
-        os.makedirs(t._manifest_dir, exist_ok=True)
-        d = _fresh("data-v0-seed")
-        df.write.mode("overwrite").parquet(os.path.join(root, d))
-        try:
-            df.sparkSession.catalog.refreshByPath(root)
-        except Exception:
-            pass  # refresh is best-effort; first-time inits have no cache
-        t._write_manifest(0, parent=None, dirs=[d], schema=df.schema.jsonValue())
-        t._flip(0)
-        return t
+        ``base`` is the version the writer read, or None to reset the
+        root and commit v0. ``filesets`` lists the new version's
+        filesets, or maps a partitioned table's keys to them: a frame is
+        written as a new fileset, a dir name is kept from the base.
+        ``split`` = (df, by, keys) adds one part per key, written from
+        the rows of ``df`` whose ``by`` equals it, in one write.
+        """
+        listed = list(filesets.values() if isinstance(filesets, dict) else filesets)
+        frames = [f for f in listed if not isinstance(f, str)]
+        if split is not None:
+            frames.append(split[0])
+        schemas = [df.schema for df in frames]
+        if any(isinstance(f, str) for f in listed):  # kept from the base
+            kept = self.manifest(base).get("schema")
+            schemas.insert(0, kept and StructType.fromJson(kept))
+        if base is None:
+            shutil.rmtree(self.root, ignore_errors=True)
+            os.makedirs(self._manifest_dir)
+            # a root read before in this session may sit in Spark's
+            # cached plans under files the rmtree just deleted
+            frames[0].sparkSession.catalog.refreshByPath(self.root)
+        elif self.current_version() != base:
+            raise ConcurrentWriteError(
+                f"base v{base} is stale (current is v{self.current_version()})"
+            )
+        version = 0 if base is None else base + 1
+
+        def write(f: DataFrame | str) -> str:
+            if isinstance(f, str):
+                return f
+            d = _fresh(f"data-v{version}-{label}")
+            f.write.mode("overwrite").parquet(os.path.join(self.root, d))
+            return d
+
+        # parquet stores every field nullable, so nullability does not
+        # count; the first schema (the base's, if a fileset is kept) wins
+        same = len({s and s.simpleString() for s in schemas}) == 1
+        schema = schemas[0].jsonValue() if same and schemas[0] else None
+        if isinstance(filesets, dict):
+            parts = {k: write(f) for k, f in filesets.items()}
+            if split is not None:
+                parts.update(self._split_write(version, label, *split))
+            self._write_manifest(version, base, parts=parts, schema=schema)
+        else:
+            dirs = [write(f) for f in filesets]
+            self._write_manifest(version, base, dirs, schema=schema)
+        self._flip(version)
+        return version
+
+    def _split_write(
+        self, version: int, label: str, df: DataFrame, by: Column, keys: list[str]
+    ) -> dict[str, str]:
+        """Step 2 for many parts at once: ONE scan and one distributed
+        write (not one filtered scan + write job per key). partitionBy
+        on a duplicate key column (__p) keeps every real column in the
+        data files, so each emitted directory is a self-contained
+        fileset, renamed into the table; a key no row has gets an empty
+        fileset, and rows of no key are dropped."""
+        staging = os.path.join(self.root, _fresh(f"_staging-v{version}"))
+        df.withColumn("__p", by).write.mode("overwrite").partitionBy(
+            "__p"
+        ).parquet(staging)
+        emitted = {
+            unquote(e[len("__p=") :]): e
+            for e in os.listdir(staging)
+            if e.startswith("__p=")
+        }
+        parts = {}
+        for key in keys:
+            parts[key] = d = _fresh(f"data-v{version}-{label}")
+            dst = os.path.join(self.root, d)
+            if key in emitted:
+                os.rename(os.path.join(staging, emitted[key]), dst)
+            else:
+                os.makedirs(dst)
+        shutil.rmtree(staging, ignore_errors=True)
+        return parts
 
     def _write_manifest(
         self,
@@ -187,47 +248,60 @@ class SnapshotTable:
             f.write(str(version))
         os.replace(tmp, self._pointer)  # atomic: readers see old or new
 
+    @classmethod
+    def init(cls, root: str, df: DataFrame) -> "SnapshotTable":
+        """Create (or reset) a table at v0 from a seed DataFrame."""
+        t = cls(root)
+        t._commit(None, "seed", [df])
+        return t
+
+    @classmethod
+    def init_partitioned(
+        cls, root: str, df: DataFrame, part_col: str, values: list
+    ) -> "SnapshotTable":
+        """Create a PARTITIONED table at v0: one immutable fileset per
+        partition value, tracked individually in the manifest
+        (``parts``: str(value) -> dir), all written by one split write.
+        This is what makes partition-confined DML possible — the
+        reference prunes ModifyTable to leaf partitions
+        (execPartition.c); here a predicate confined to a partition
+        rewrites only that fileset and the commit swaps only its
+        manifest entry. Values the seed doesn't contain become empty
+        filesets."""
+        t = cls(root)
+        by = df[part_col].cast("string")
+        t._commit(None, part_col, {}, split=(df, by, [str(v) for v in values]))
+        return t
+
     def commit_rewrite(
         self, df: DataFrame, expected_version: int, label: str = "rewrite"
     ) -> int:
-        """Full copy-on-write commit (UPDATE/DELETE/MERGE): write the
-        rewritten fileset, claim the next version, flip."""
-        if self.current_version() != expected_version:
-            raise ConcurrentWriteError(
-                f"base v{expected_version} is stale "
-                f"(current is v{self.current_version()})"
-            )
-        new_v = expected_version + 1
-        d = _fresh(f"data-v{new_v}-{label}")
-        df.write.mode("overwrite").parquet(os.path.join(self.root, d))
-        self._write_manifest(
-            new_v, parent=expected_version, dirs=[d], schema=df.schema.jsonValue()
-        )
-        self._flip(new_v)
-        return new_v
+        """Full copy-on-write commit (UPDATE/DELETE/MERGE): the new
+        version is the one rewritten fileset."""
+        return self._commit(expected_version, label, [df])
 
     def commit_append(
         self, df: DataFrame, expected_version: int, label: str = "append"
     ) -> int:
         """INSERT commit: add a fileset, keep existing dirs — no rewrite
         of standing data (the reference's plain INSERT path)."""
-        if self.current_version() != expected_version:
-            raise ConcurrentWriteError(
-                f"base v{expected_version} is stale "
-                f"(current is v{self.current_version()})"
-            )
-        new_v = expected_version + 1
-        d = _fresh(f"data-v{new_v}-{label}")
-        df.write.mode("overwrite").parquet(os.path.join(self.root, d))
-        base = self.manifest(expected_version)
-        self._write_manifest(
-            new_v,
-            parent=expected_version,
-            dirs=base["dirs"] + [d],
-            schema=_schema_after(base, [df]),
-        )
-        self._flip(new_v)
-        return new_v
+        base = self.manifest(expected_version)["dirs"]
+        return self._commit(expected_version, label, base + [df])
+
+    def commit_partition_rewrite(
+        self,
+        updates: dict,
+        expected_version: int,
+        label: str = "part-rewrite",
+    ) -> int:
+        """Partition-confined UPDATE/DELETE/MERGE: rewrite ONLY the
+        given partitions' filesets ({value: new DataFrame}); every
+        untouched partition keeps its existing immutable fileset —
+        the manifest entry (and the files on disk) are byte-identical
+        across the commit."""
+        parts = self.manifest(expected_version)["parts"]
+        parts.update({str(v): df for v, df in updates.items()})
+        return self._commit(expected_version, label, parts)
 
     # -- maintenance ---------------------------------------------------------
 
@@ -255,83 +329,3 @@ class SnapshotTable:
                 os.remove(os.path.join(self._manifest_dir, mf))
         return deleted
 
-    # -- partitioned tables --------------------------------------------------
-
-    @classmethod
-    def init_partitioned(
-        cls, root: str, df: DataFrame, part_col: str, values: list
-    ) -> "SnapshotTable":
-        """Create a PARTITIONED table at v0: one immutable fileset per
-        partition value, tracked individually in the manifest
-        (``parts``: value -> dir). This is what makes partition-confined
-        DML possible — the reference prunes ModifyTable to leaf
-        partitions (execPartition.c); here a predicate confined to a
-        partition rewrites only that fileset and the commit swaps only
-        its manifest entry."""
-        shutil.rmtree(root, ignore_errors=True)
-        t = cls(root)
-        os.makedirs(t._manifest_dir, exist_ok=True)
-        # ONE scan + one distributed write for all partitions (was: one
-        # filtered scan+write job per value — N full passes over the
-        # seed). partitionBy on a duplicate key column (__p) keeps the
-        # real partition column in the data files, so each emitted
-        # directory is a self-contained fileset; the dirs are then
-        # renamed into the manifest's per-partition layout. Values the
-        # seed doesn't contain become empty filesets, as before.
-        from urllib.parse import unquote
-
-        staging = os.path.join(root, _fresh("_staging-v0"))
-        df.withColumn("__p", df[part_col].cast("string")).write.mode(
-            "overwrite"
-        ).partitionBy("__p").parquet(staging)
-        emitted = {
-            unquote(e[len("__p=") :]): e
-            for e in os.listdir(staging)
-            if e.startswith("__p=")
-        }
-        parts = {}
-        for v in values:
-            d = _fresh(f"data-v0-{part_col}-{v}")
-            dst = os.path.join(root, d)
-            src = emitted.get(str(v))
-            if src is not None:
-                os.rename(os.path.join(staging, src), dst)
-            else:
-                os.makedirs(dst, exist_ok=True)
-            parts[str(v)] = d
-        shutil.rmtree(staging, ignore_errors=True)
-        t._write_manifest(0, parent=None, parts=parts, schema=df.schema.jsonValue())
-        t._flip(0)
-        return t
-
-    def commit_partition_rewrite(
-        self,
-        updates: dict,
-        expected_version: int,
-        label: str = "part-rewrite",
-    ) -> int:
-        """Partition-confined UPDATE/DELETE/MERGE: rewrite ONLY the
-        given partitions' filesets ({value: new DataFrame}); every
-        untouched partition keeps its existing immutable fileset —
-        the manifest entry (and the files on disk) are byte-identical
-        across the commit. Same O_EXCL + pointer-flip protocol."""
-        if self.current_version() != expected_version:
-            raise ConcurrentWriteError(
-                f"base v{expected_version} is stale "
-                f"(current is v{self.current_version()})"
-            )
-        new_v = expected_version + 1
-        base = self.manifest(expected_version)
-        parts = dict(base["parts"])
-        for v, df in updates.items():
-            d = _fresh(f"data-v{new_v}-{label}-{v}")
-            df.write.mode("overwrite").parquet(os.path.join(self.root, d))
-            parts[str(v)] = d
-        self._write_manifest(
-            new_v,
-            parent=expected_version,
-            parts=parts,
-            schema=_schema_after(base, updates.values()),
-        )
-        self._flip(new_v)
-        return new_v

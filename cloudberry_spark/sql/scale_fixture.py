@@ -89,6 +89,7 @@ def spec_views(spark, prelude: str, tag: str) -> None:
     global _CTE_NAME_RE
     import os
     import re
+    import shutil
 
     from cloudberry_spark import scratch
     from cloudberry_spark.catalog import VIEW_OWNER
@@ -115,7 +116,14 @@ def spec_views(spark, prelude: str, tag: str) -> None:
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
             df = spark.sql(translate_pg_sql(
                 scale_spec_fixture(prelude + f" SELECT * FROM {t}")))
-            df.write.mode("overwrite").parquet(path)
+            # K>1 dirs are shared: a rename that loses to another
+            # process's copy drops ours
+            staged = os.path.join(scratch.staging(base), t)
+            df.write.mode("overwrite").parquet(staged)
+            try:
+                os.rename(staged, path)
+            except OSError:
+                shutil.rmtree(staged, ignore_errors=True)
             _SPEC_DF_CACHE.pop((base, t), None)
             # read back with the writer's schema: no footer-reading job
             reader = reader.schema(df.schema)

@@ -781,9 +781,8 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = scratch.path(sf_dir, "stream_fb_src")
     state_root = scratch.path(sf_dir, "stream_fb_state")
     ckpt = scratch.path(sf_dir, "stream_fb_ckpt")
-    for p in (src, state_root, ckpt):
+    for p in (src, ckpt):
         shutil.rmtree(p, ignore_errors=True)
-    ptr = os.path.join(state_root, "_CURRENT")
 
     # Source prep: events as (event_id, user_id, value, ts_us-long), split
     # into two files so maxFilesPerTrigger=1 yields two real batches.
@@ -805,18 +804,24 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
+    # state table IS a SnapshotTable: the same manifest + O_EXCL commit
+    # + pointer flip every dml_* operator rides — the streaming MERGE is
+    # just commit_rewrite per micro-batch, the first one included, since
+    # the table starts out empty
+    st = SnapshotTable.init(
+        state_root,
+        spark.createDataFrame(
+            [],
+            "user_id BIGINT, n_events BIGINT, "
+            "last STRUCT<ts_us: BIGINT, event_id: BIGINT, value: DOUBLE>",
+        ),
+    )
+
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        # state table IS a SnapshotTable: the same manifest + O_EXCL
-        # commit + pointer flip every dml_* operator rides — the
-        # streaming MERGE is just commit_rewrite per micro-batch
         delta = batch.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.max(F.struct("ts_us", "event_id", "value")).alias("last"),
         )
-        if not os.path.exists(ptr):
-            SnapshotTable.init(state_root, delta)
-            return
-        st = SnapshotTable(state_root)
         base = st.current_version()
         merged = (
             st.read(batch.sparkSession, base)
@@ -844,8 +849,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_once()
     run_once()  # restart: committed offsets => no-op, counts must not double
 
-    state = SnapshotTable(state_root).read(spark)
-    return state.select(
+    return st.read(spark).select(
         "user_id",
         "n_events",
         F.col("last.event_id").alias("last_event_id"),

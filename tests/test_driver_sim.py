@@ -4,11 +4,15 @@ verified here on deliberately-broken fixtures, not live queries)."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pandas as pd
 import pytest
+from py4j.protocol import Py4JNetworkError
 
+from cloudberry_spark.session import require_conf
 from tests.conftest import assert_matches_oracle
-from tools.driver_sim import canon_frame, complex_fields, frames_match
+from tools.driver_sim import canon_frame, complex_fields, frames_match, lost_session
 
 
 def test_int_vs_float_dtype_divergence_is_flagged():
@@ -103,3 +107,18 @@ def test_assert_matches_oracle_flags_int_vs_float(spark, ddb):
     assert assert_matches_oracle(
         spark.sql("SELECT 1.0 AS x"), ddb, "SELECT 1.0 AS x"
     ) == 1
+
+
+class _DeadConf:
+    def set(self, key, value):
+        raise ConnectionRefusedError(111, "Connection refused")
+
+
+def test_lost_session_is_found_under_a_conf_failure():
+    # a dead JVM surfaces as require_conf's RuntimeError, raised from the
+    # refused connection: that is one lost session, not a failed query
+    with pytest.raises(RuntimeError) as info:
+        require_conf(SimpleNamespace(conf=_DeadConf()), "spark.sql.session.timeZone", "UTC")
+    assert isinstance(lost_session(info.value), ConnectionRefusedError)
+    assert isinstance(lost_session(Py4JNetworkError("gateway gone")), Py4JNetworkError)
+    assert lost_session(RuntimeError("cannot resolve column")) is None

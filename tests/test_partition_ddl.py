@@ -37,8 +37,8 @@ def table(spark, tmp_path):
 
 def test_split_touches_only_covering_fileset(spark, table):
     root = table.st.root
-    sib = {d: _file_state(root, d) for d in table.st.manifest()["dirs"]
-           if not d.startswith("part-300_600")}
+    sib = {d: _file_state(root, d)
+           for k, d in table.st.manifest()["parts"].items() if k != "300_600"}
     table.split_partition(spark, value=300, at=450)
     for d, before in sib.items():
         assert _file_state(root, d) == before, f"sibling {d} was touched"
@@ -51,8 +51,8 @@ def test_exchange_returns_displaced_rows_and_moves_no_sibling_bytes(
     spark, table
 ):
     root = table.st.root
-    sib = {d: _file_state(root, d) for d in table.st.manifest()["dirs"]
-           if not d.startswith("part-600_900")}
+    sib = {d: _file_state(root, d)
+           for k, d in table.st.manifest()["parts"].items() if k != "600_900"}
     staged = spark.range(600, 900).select(
         F.col("id").cast("int").alias("k"), F.lit(-1.0).alias("v")
     )
@@ -82,8 +82,7 @@ def test_add_overlap_rejected(spark, table):
 def test_truncate_is_manifest_only_and_time_travels(spark, table):
     root = table.st.root
     v0 = table.st.current_version()
-    dropped = [d for d in table.st.manifest()["dirs"]
-               if d.startswith("part-0_300")][0]
+    dropped = table.st.manifest()["parts"]["0_300"]
     table.truncate_partition(0)
     # catalog-only: the fileset is still on disk ...
     assert os.path.isdir(os.path.join(root, dropped))
@@ -96,5 +95,14 @@ def test_truncate_is_manifest_only_and_time_travels(spark, table):
 def test_pruned_point_read_opens_one_fileset(spark, table):
     df = table.read_pruned(spark, 450)
     files = {os.path.dirname(f) for f in df.inputFiles()}
-    assert len(files) == 1 and "part-300_600" in files.pop()
+    d = table.st.manifest()["parts"]["300_600"]
+    assert len(files) == 1 and d in files.pop()
     assert df.count() == 300
+
+
+def test_vacuum_reclaims_a_truncated_partition(spark, table):
+    dropped = table.st.manifest()["parts"]["0_300"]
+    table.truncate_partition(0)
+    assert table.st.vacuum(keep_versions=1) == [dropped]
+    assert not os.path.exists(os.path.join(table.st.root, dropped))
+    assert table.read(spark).count() == 600

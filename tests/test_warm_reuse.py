@@ -113,6 +113,14 @@ def test_snapshot_readbacks_use_the_recorded_schema(spark, tmp_path):
     _check_readback(spark, rp.st)
 
 
+def test_range_partitioned_create_writes_every_range_in_one_job(spark, tmp_path):
+    with _job_group(spark) as jobs:
+        RangePartitionedTable.create(
+            str(tmp_path / "r"), _typed(spark, 0, 9), "k", [(0, 3), (3, 6), (6, 9)]
+        )
+    assert len(jobs()) == 1
+
+
 def test_materialize_reads_back_with_the_writers_schema(spark, tmp_path, mat_sf):
     df = _typed(spark)
     path = str(tmp_path / "written")
@@ -203,6 +211,19 @@ def test_configure_session_skips_refused_knobs():
     stub = _StubSession(knobs)
     configure_session(stub)
     assert set(stub.conf.applied) == REQUIRED_CONFS
+
+
+def test_configure_session_sets_shuffle_partitions_unless_set(spark):
+    key = "spark.sql.shuffle.partitions"
+    try:
+        spark.conf.unset(key)
+        configure_session(spark)
+        assert spark.conf.get(key) == str(max(spark.sparkContext.defaultParallelism, 8))
+        spark.conf.set(key, "5")
+        configure_session(spark)
+        assert spark.conf.get(key) == "5"
+    finally:
+        spark.conf.set(key, "8")
 
 
 def test_load_events_raises_when_nanos_conf_is_refused():

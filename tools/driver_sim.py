@@ -27,7 +27,8 @@ driver's pandas canonicalizer:
 agree on every query.
 
 Usage: python tools/driver_sim.py [sf_dir] [name_filter|first:N]
-Exit code 0 iff everything matches.
+Exit code 0 iff everything matches. A lost Spark session stops the run
+at the query that found it, with exit code 2.
 """
 
 from __future__ import annotations
@@ -39,6 +40,7 @@ from pathlib import Path
 import duckdb
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JNetworkError
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
@@ -154,6 +156,16 @@ def frames_match(sdf: pd.DataFrame, ddf: pd.DataFrame) -> list[str]:
     return problems
 
 
+def lost_session(ex: BaseException | None) -> BaseException | None:
+    """The lost connection to the Spark JVM in ``ex``'s ``__cause__``
+    chain, if there is one. ``session.require_conf`` raises its
+    RuntimeError from the refused connection, so a dead JVM would
+    otherwise read as a conf failure of every later query."""
+    while ex is not None and not isinstance(ex, (ConnectionError, Py4JNetworkError)):
+        ex = ex.__cause__
+    return ex
+
+
 def main() -> int:
     import os
 
@@ -192,22 +204,23 @@ def main() -> int:
         _, k, n = FILT.split(":")
         names = names[int(k) :: int(n)]
     # comma-separated filters are substring alternatives (OR)
-    alts = [f for f in FILT.split(",") if f] if "," in FILT else None
-    for name in names:
-        if alts is not None:
-            if not any(f in name for f in alts):
-                continue
-        elif (
-            FILT
-            and not FILT.startswith(("first:", "shard:"))
-            and FILT not in name
-        ):
-            continue
+    if "," in FILT:
+        alts = [f for f in FILT.split(",") if f]
+        names = [n for n in names if any(f in n for f in alts)]
+    elif FILT and not FILT.startswith(("first:", "shard:")):
+        names = [n for n in names if FILT in n]
+    for i, name in enumerate(names):
         t0 = time.time()
         try:
             sdf = qs[name](spark, SF_DIR)
             spdf = sdf.toPandas()
         except Exception as ex:
+            lost = lost_session(ex)
+            if lost is not None:
+                print(f"LOST {name}: the Spark session is gone "
+                      f"({type(lost).__name__}: {str(lost)[:120]}); "
+                      f"{len(names) - i - 1} queries not run")
+                return 2
             print(f"FAIL {name}: spark error {str(ex)[:200]}")
             bad += 1
             continue

@@ -51,6 +51,13 @@ _LEAD: list[str] = [
     "copy_orc_roundtrip",
     "fdw_python_textfeed",
     "graph_kcore_peel",
+    # inheritance and directory-table writes now commit through
+    # SnapshotTable._commit
+    "regress_inh_scan_mid_level",
+    "regress_inh_only_scans",
+    "regress_inh_update_child_propagates",
+    "regress_dirtable_tag_filter",
+    "regress_dirtable_md5_lookup",
 ]
 
 

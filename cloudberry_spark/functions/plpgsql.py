@@ -42,6 +42,7 @@ import re
 from pyspark.sql import SparkSession
 
 from cloudberry_spark.sql.pgcompat import translate_pg_sql
+from cloudberry_spark.sql.sqltext import iter_top, match_paren, split_top
 
 __all__ = ["compile_plpgsql", "create_plpgsql_function"]
 
@@ -120,35 +121,13 @@ class _Parser:
         keyword or ';'. Keywords only stop at paren depth 0."""
         self._skip_ws()
         start = self.pos
-        depth = 0
-        while self.pos < len(self.text):
-            c = self.text[self.pos]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif depth == 0:
-                if c == ";" and ";" in stop_kws:
-                    break
-                matched = False
-                for kw in stop_kws:
-                    if kw == ";":
-                        continue
-                    pat = r"\s+".join(re.escape(w) for w in kw.split())
-                    if re.match(
-                        rf"(?i:{pat})\b", self.text[self.pos :]
-                    ) and (
-                        self.pos == 0
-                        or not (
-                            self.text[self.pos - 1].isalnum()
-                            or self.text[self.pos - 1] == "_"
-                        )
-                    ):
-                        matched = True
-                        break
-                if matched:
-                    break
-            self.pos += 1
+        stop = "|".join(
+            ";" if kw == ";"
+            else r"(?<!\w)(?i:%s)\b" % r"\s+".join(map(re.escape, kw.split()))
+            for kw in stop_kws
+        )
+        m = next(iter_top(self.text, stop, start), None)
+        self.pos = m.start() if m else len(self.text)
         return self.text[start : self.pos].strip()
 
     def expect(self, token: str) -> None:
@@ -446,12 +425,17 @@ def _apply_query_loop(
         # into top-level signed terms: record terms ride sum(), free
         # terms ride count(*) * term — sum(A + B) = sum(A) + count(*)*B
         # for record-free B. Terms the splitter cannot see through stay
-        # in the sum and fail loudly if Spark cannot plan them.
-        rec_terms, free_terms = [], []
-        for sign, term in _split_terms(step):
-            (rec_terms if "__rec" in term else free_terms).append(
-                (sign, term)
-            )
+        # in the sum and fail loudly if Spark cannot plan them. A '-'
+        # that looks like a unary minus (start of the step or right after
+        # another operator) binds to its term.
+        terms, start, sign = [], 0, "+"
+        for m in iter_top(step, "[+-]"):
+            if m.lastgroup == "hit" and step[start : m.start()].strip():
+                terms.append((sign, step[start : m.start()].strip()))
+                sign, start = m.group(), m.end()
+        terms.append((sign, step[start:].strip()))
+        rec_terms = [t for t in terms if "__rec" in t[1]]
+        free_terms = [t for t in terms if "__rec" not in t[1]]
         parts = []
         if rec_terms:
             rec_expr = _join_terms(rec_terms)
@@ -471,27 +455,6 @@ def _apply_query_loop(
         env = {**env, acc: f"({env.get(acc, acc)} + {agg})"}
         accs.append(acc)
     return env
-
-
-def _split_terms(expr: str) -> list[tuple[str, str]]:
-    """Split an expression into (sign, term) at depth-0 +/- operators.
-    A '-' that looks like a unary minus (start of expression or right
-    after another operator) binds to its term."""
-    terms: list[tuple[str, str]] = []
-    depth, start, sign = 0, 0, "+"
-    i = 0
-    while i < len(expr):
-        ch = expr[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "+-" and expr[start:i].strip():
-            terms.append((sign, expr[start:i].strip()))
-            sign, start = ch, i + 1
-        i += 1
-    terms.append((sign, expr[start:].strip()))
-    return terms
 
 
 def _join_terms(terms: list[tuple[str, str]]) -> str:
@@ -980,18 +943,8 @@ def compile_plpgsql(create_stmt: str) -> tuple[str, str, str, str]:
         sel_list, rec, rest = sm.group(1), sm.group(2).lower(), sm.group(3)
         if rec not in record_vars:
             return sm.group(0)
-        items, depth, start = [], 0, 0
-        for j, ch in enumerate(sel_list):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                items.append(sel_list[start:j])
-                start = j + 1
-        items.append(sel_list[start:])
         outs = []
-        for it in items:
+        for it in split_top(sel_list):
             it = it.strip()
             am = re.match(r"(.+?)\s+(?:AS\s+)?([A-Za-z_]\w*)$", it, re.I | re.S)
             fld = (
@@ -1172,19 +1125,6 @@ def compile_plpgsql_setof(create_stmt: str) -> tuple[str, str, str, str]:
     )
 
 
-def _match_paren_str(s: str, i: int) -> int:
-    """Index of the ')' matching the '(' at i, or -1."""
-    depth = 0
-    for j in range(i, len(s)):
-        if s[j] == "(":
-            depth += 1
-        elif s[j] == ")":
-            depth -= 1
-            if depth == 0:
-                return j
-    return -1
-
-
 def create_plpgsql_function(
     spark: SparkSession, create_stmt: str, table_form: bool = False
 ) -> str:
@@ -1214,22 +1154,14 @@ def create_plpgsql_function(
         # subqueries of a SQLTableFunction body, but resolves them
         # fine in the body's top-level WHERE/LIMIT
         q = expr.strip()
-        while q.startswith("(") and _match_paren_str(q, 0) == len(q) - 1:
+        while q.startswith("(") and match_paren(q, 0) == len(q) - 1:
             q = q[1:-1].strip()
         if re.match(r"SELECT\b", q, re.I):
-            fm, depth = None, 0
-            for i, ch in enumerate(q):
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif depth == 0 and q[i : i + 4].upper() == "FROM":
-                    fm = i
-                    break
+            fm = next(iter_top(q, "(?i:FROM)"), None)
             if fm is not None:
-                item = q[len("SELECT") : fm].strip()
+                item = q[len("SELECT") : fm.start()].strip()
                 if "," not in item:
-                    body = f"SELECT ({item}) AS {name} {q[fm:]}"
+                    body = f"SELECT ({item}) AS {name} {q[fm.start():]}"
         spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "
             f"RETURNS TABLE ({name} {ret}) RETURN {body}"

@@ -41,6 +41,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cloudberry_spark.sql.sqltext import split_top
+
 
 def _analyzed_exprs(df: DataFrame):
     return df._jdf.queryExecution().analyzed().expressions()
@@ -183,7 +185,7 @@ class AqumvCatalog:
                         _strip_grouping(group_by)
                     )
                 for e in probe_exprs:
-                    for part in _split_list(e):
+                    for part in filter(None, map(str.strip, split_top(e))):
                         self._rewrite_expr(mv, part)
             except NotAnswerable as exc:
                 errors.append(str(exc))
@@ -199,7 +201,8 @@ class AqumvCatalog:
 
         def rw(e: str) -> str:
             return ", ".join(
-                self._rewrite_expr(mv, p) for p in _split_list(e)
+                self._rewrite_expr(mv, p)
+                for p in filter(None, map(str.strip, split_top(e)))
             )
 
         proj = ", ".join(f"{rw(e)} AS {a}" for a, e in select)
@@ -215,7 +218,7 @@ class AqumvCatalog:
             sql.append(f"HAVING ({rw(having)})")
         if order_by:
             items = []
-            for it in _split_list(order_by):
+            for it in filter(None, map(str.strip, split_top(order_by))):
                 expr_part, _, suffix = _split_order_item(it)
                 items.append((rw(expr_part) + " " + suffix).strip())
             sql.append("ORDER BY " + ", ".join(items))
@@ -237,24 +240,6 @@ def _split_order_item(item: str) -> tuple[str, None, str]:
     return m.group(1).strip(), None, m.group(2).strip()
 
 
-def _split_list(text: str) -> list[str]:
-    """Split a comma-separated expression list at paren depth 0."""
-    parts, depth, cur = [], 0, []
-    for ch in text:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur and "".join(cur).strip():
-        parts.append("".join(cur).strip())
-    return parts
-
-
 def _strip_grouping(group_by: str) -> str:
     """The flat item list of a grouping clause (plain / GROUPING SETS /
     ROLLUP / CUBE) — for derivability probing."""
@@ -266,10 +251,10 @@ def _strip_grouping(group_by: str) -> str:
     )
     body = m.group(2) if m else group_by
     items: list[str] = []
-    for it in _split_list(body):
+    for it in split_top(body):
         it = it.strip()
         if it.startswith("(") and it.endswith(")"):
-            items.extend(_split_list(it[1:-1]))
+            items.extend(p.strip() for p in split_top(it[1:-1]))
         elif it:
             items.append(it)
     return ", ".join(i for i in items if i)
@@ -288,10 +273,8 @@ def _rewrite_grouping(group_by: str, rw) -> str:
         return rw(group_by)
     kw, body = m.group(1), m.group(2)
     # body items may be parenthesized tuples
-    items = _split_list(body)
     out = []
-    for it in items:
-        it = it.strip()
+    for it in filter(None, map(str.strip, split_top(body))):
         if it.startswith("("):
             out.append("(" + rw(it[1:-1]) + ")")
         else:

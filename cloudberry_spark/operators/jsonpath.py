@@ -32,10 +32,11 @@ from __future__ import annotations
 
 import re
 
+from cloudberry_spark.sql.sqltext import depth_at, split_top
+
 __all__ = [
     "compile_jsonpath",
     "jsonb_path_query_array",
-    "jsonb_path_query_first",
     "jsonb_path_exists",
 ]
 
@@ -127,12 +128,12 @@ def _compile_pred(pred: str, var: str) -> str:
     pred = pred.strip()
     # || then && (lowest precedence first)
     for sep, sql_op in (("||", " OR "), ("&&", " AND ")):
-        parts = _split_top(pred, sep)
+        parts = split_top(pred, sep)
         if len(parts) > 1:
             return "(" + sql_op.join(_compile_pred(p, var) for p in parts) + ")"
     if pred.startswith("(") and pred.endswith(")"):
         inner = pred[1:-1]
-        if inner.count("(") == inner.count(")"):
+        if depth_at(inner, len(inner)) == 0:
             return _compile_pred(inner, var)
     m = re.match(r"^exists\s*\((?P<e>.+)\)$", pred, re.I)
     if m:
@@ -180,24 +181,6 @@ def _compile_pred(pred: str, var: str) -> str:
     if rhs.lower() in ("true", "false"):
         return f"(variant_get({operand}, '$', 'boolean') {op} {rhs})"
     raise NotImplementedError(f"jsonpath comparison rhs {rhs!r}")
-
-
-def _split_top(s: str, sep: str) -> list[str]:
-    parts, depth, start, i = [], 0, 0, 0
-    while i < len(s):
-        c = s[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and s.startswith(sep, i):
-            parts.append(s[start:i])
-            i += len(sep)
-            start = i
-            continue
-        i += 1
-    parts.append(s[start:])
-    return parts
 
 
 def compile_jsonpath(json_expr: str, path: str) -> _Value:
@@ -325,18 +308,6 @@ def jsonb_path_query_array(
     if v.done:
         return v.expr
     return f"transform({v.expr}, x -> variant_get(x, '$', '{elem_type}'))"
-
-
-def jsonb_path_query_first(
-    json_expr: str, path: str, out_type: str = "string"
-) -> str:
-    """jsonb_path_query_first(j, path) — first result item, typed."""
-    v = compile_jsonpath(json_expr, path)
-    if v.done:
-        return f"element_at({v.expr}, 1)" if v.is_seq else v.expr
-    if v.is_seq:
-        return f"variant_get(element_at({v.expr}, 1), '$', '{out_type}')"
-    return f"variant_get({v.expr}, '$', '{out_type}')"
 
 
 def jsonb_path_exists(json_expr: str, path: str) -> str:

@@ -38,8 +38,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from cloudberry_spark.registry import register
+from cloudberry_spark.sql.sqltext import split_top
 
 _OPEN = object()
+_OR_RE = re.compile(" or ", re.I)
 
 
 @dataclass
@@ -156,28 +158,6 @@ class DeclPartTable:
 
     # -- pruning --------------------------------------------------------
 
-    @staticmethod
-    def _or_arms(pred: str) -> list[str]:
-        """Top-level OR arms (depth-0 split); a non-OR predicate is
-        its own single arm."""
-        arms, depth, cur, i = [], 0, [], 0
-        low = pred.lower()
-        while i < len(pred):
-            ch = pred[i]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if depth == 0 and low.startswith(" or ", i):
-                arms.append("".join(cur).strip())
-                cur = []
-                i += 4
-                continue
-            cur.append(ch)
-            i += 1
-        arms.append("".join(cur).strip())
-        return arms
-
     def prune(self, predicate: str,
               literal_pool: dict[str, set] | None = None) -> list[str]:
         """Leaf names a planner scan of ``predicate`` cannot exclude.
@@ -189,7 +169,8 @@ class DeclPartTable:
         ``a = 1 OR b = 'ab'`` case: the a-arm never reaches the
         b-keyed level under rlp3's [15,20) bound)."""
         grid = self._grid(literal_pool or {})
-        arms = self._or_arms(predicate)
+        # top-level OR arms; a non-OR predicate is its own single arm
+        arms = [a.strip() for a in split_top(predicate, _OR_RE)]
         flagged = grid.selectExpr(
             *self.cols,
             *[f"coalesce(CAST(({a}) AS BOOLEAN), false) AS __arm{i}"

@@ -45,16 +45,21 @@ for EVERY, tablespace/appendonly clauses, CTAS-over-partition-spec.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import date, timedelta
 from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloudberry_spark.sql.sqltext import match_paren, split_top
+
 
 class PartitionSpecError(Exception):
     """Raised with the reference's own error wording."""
+
+
+_UNBALANCED = "unbalanced parens in partition spec"
 
 
 # ---------------------------------------------------------------------------
@@ -166,50 +171,6 @@ class RangePart:
         self.sub_entries: str | None = None
 
 
-@dataclass
-class ListPart:
-    name: str | None
-    values: list = field(default_factory=list)
-    sub_entries: str | None = None
-
-
-def _split0(text: str) -> list[str]:
-    parts, depth, cur, q = [], 0, [], False
-    for ch in text:
-        if ch == "'":
-            q = not q
-        if not q:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if ch == "," and depth == 0:
-                parts.append("".join(cur).strip())
-                cur = []
-                continue
-        cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        parts.append(tail)
-    return parts
-
-
-def _matchp(s: str, i: int) -> int:
-    depth, q = 0, False
-    for j in range(i, len(s)):
-        if s[j] == "'":
-            q = not q
-        if q:
-            continue
-        if s[j] == "(":
-            depth += 1
-        elif s[j] == ")":
-            depth -= 1
-            if depth == 0:
-                return j
-    raise PartitionSpecError("unbalanced parens in partition spec")
-
-
 class _Level:
     def __init__(self, kind: str, key: str):
         self.kind = kind.upper()
@@ -228,7 +189,9 @@ def _parse_entry_range(txt: str, kind_word: str) -> RangePart:
         m = re.match(r"\s*(start|end|every|values)\s*\(", txt[pos:], re.I)
         if m:
             o = pos + m.end() - 1
-            c = _matchp(txt, o)
+            c = match_paren(txt, o)
+            if c < 0:
+                raise PartitionSpecError(_UNBALANCED)
             word = m.group(1).lower()
             inner = txt[o + 1 : c]
             pos = c + 1
@@ -243,7 +206,7 @@ def _parse_entry_range(txt: str, kind_word: str) -> RangePart:
             if word == "every":
                 p.every = _parse_value(inner)
                 continue
-            vals = _split0(inner)
+            vals = [v.strip() for v in split_top(inner) if v.strip()]
             if len(vals) != 1:
                 raise PartitionSpecError(
                     f"number of {word.upper()} values should cover "
@@ -261,7 +224,9 @@ def _parse_entry_range(txt: str, kind_word: str) -> RangePart:
         sm = re.match(r"\s*\(", txt[pos:])
         if sm:
             o = pos + sm.end() - 1
-            c = _matchp(txt, o)
+            c = match_paren(txt, o)
+            if c < 0:
+                raise PartitionSpecError(_UNBALANCED)
             p.sub_entries = txt[o + 1 : c]
             pos = c + 1
             continue
@@ -314,13 +279,17 @@ class GpPartitionedTable:
             rest = rest[sm.end():]
             tm = re.match(r"subpartition\s+template\s*\(", rest, re.I)
             if tm:
-                c = _matchp(rest, tm.end() - 1)
+                c = match_paren(rest, tm.end() - 1)
+                if c < 0:
+                    raise PartitionSpecError(_UNBALANCED)
                 lvl2.template = rest[tm.end() : c]
                 rest = rest[c + 1 :].strip()
         bm = re.match(r"\s*\(", rest)
         if not bm:
             raise PartitionSpecError("no partition spec body")
-        c = _matchp(rest, bm.end() - 1)
+        c = match_paren(rest, bm.end() - 1)
+        if c < 0:
+            raise PartitionSpecError(_UNBALANCED)
         body = rest[bm.end() : c]
         parts = self._parse_level(body, lvl1, "partition")
         for leaf, pred, sub in parts:
@@ -338,7 +307,7 @@ class GpPartitionedTable:
 
     def _parse_level(self, body: str, lvl: _Level, word: str):
         """-> [(leaf_name, predicate, sub_entries|None)]"""
-        entries = _split0(body)
+        entries = [e.strip() for e in split_top(body) if e.strip()]
         out = []
         if lvl.kind == "LIST":
             seen_names: set[str] = set()
@@ -363,16 +332,21 @@ class GpPartitionedTable:
                         f"invalid LIST partition entry: {e[:40]}")
                 name = em.group(1)
                 o = em.end() - 1
-                c = _matchp(e, o)
+                c = match_paren(e, o)
+                if c < 0:
+                    raise PartitionSpecError(_UNBALANCED)
                 vals = [
-                    _coerce(_parse_value(v),
+                    _coerce(_parse_value(v.strip()),
                             self.dtypes.get(lvl.key, "string"))
-                    for v in _split0(e[o + 1 : c])
+                    for v in split_top(e[o + 1 : c]) if v.strip()
                 ]
                 tail = e[c + 1 :].strip()
                 sub = None
                 if tail.startswith("("):
-                    sub = tail[1:_matchp(tail, 0)]
+                    sc = match_paren(tail, 0)
+                    if sc < 0:
+                        raise PartitionSpecError(_UNBALANCED)
+                    sub = tail[1:sc]
                 if name is None:
                     anon += 1
                     name = str(anon)

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from cloudberry_spark import scratch
 from cloudberry_spark.sources.snapshot import SnapshotTable
+from cloudberry_spark.sql.sqltext import match_paren, split_top
 
 # ---------------------------------------------------------------------------
 # type mapping
@@ -96,59 +97,6 @@ class Stmt:
     args: dict = field(default_factory=dict)
 
 
-def _split_statements(text: str) -> list[str]:
-    """Split on top-level semicolons (quote-aware); drop comments."""
-    out, buf, in_str = [], [], False
-    for ch in text:
-        if in_str:
-            buf.append(ch)
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-            buf.append(ch)
-        elif ch == ";":
-            out.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    if "".join(buf).strip():
-        out.append("".join(buf))
-    cleaned = []
-    for s in out:
-        s = re.sub(r"--[^\n]*", "", s).strip()
-        if s:
-            cleaned.append(s)
-    return cleaned
-
-
-def _split_top(s: str) -> list[str]:
-    """Split an argument/column list on top-level commas."""
-    parts, depth, in_str, buf = [], 0, False, []
-    for ch in s:
-        if in_str:
-            buf.append(ch)
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-            buf.append(ch)
-        elif ch == "(":
-            depth += 1
-            buf.append(ch)
-        elif ch == ")":
-            depth -= 1
-            buf.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-    if "".join(buf).strip():
-        parts.append("".join(buf).strip())
-    return parts
-
-
 _PART_RANGE_RE = re.compile(
     r"partition\s+(\w+)\s+start\s*\(([^)]*)\)\s+end\s*\(([^)]*)\)", re.I
 )
@@ -166,7 +114,7 @@ def _parse_partspec(kind: str, col: str, body: str) -> dict:
             )
     else:
         for m in _PART_LIST_RE.finditer(body):
-            vals = [v.strip() for v in _split_top(m.group(2))]
+            vals = [v.strip() for v in split_top(m.group(2)) if v.strip()]
             parts.append({"name": m.group(1).lower(), "values": vals})
     dm = _PART_DEFAULT_RE.search(body)
     return {
@@ -181,8 +129,8 @@ def parse_block(text: str) -> list[Stmt]:
     """Parse one -- TEST block into statements; raises
     UnsupportedStatement on anything outside the supported grammar."""
     stmts: list[Stmt] = []
-    for raw in _split_statements(text):
-        s = re.sub(r"\s+", " ", raw).strip()
+    for raw in split_top(text, ";"):
+        s = re.sub(r"\s+", " ", re.sub(r"--[^\n]*", "", raw)).strip()
         low = s.lower()
         if not s:
             continue
@@ -207,19 +155,13 @@ def parse_block(text: str) -> list[Stmt]:
         if m and not low.startswith("create table" + " as"):
             name = m.group(1).lower()
             # split column list vs table options: the first top-level ')'
-            depth, i0 = 0, low.index("(")
-            end = None
-            for i in range(i0, len(s)):
-                if s[i] == "(":
-                    depth += 1
-                elif s[i] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        end = i
-                        break
+            i0 = low.index("(")
+            end = match_paren(s, i0)
+            if end < 0:
+                raise UnsupportedStatement(f"unbalanced column list: {s!r}")
             coldefs, rest = s[i0 + 1:end], s[end + 1:]
             cols, coldefaults = [], {}
-            for cd in _split_top(coldefs):
+            for cd in filter(str.strip, split_top(coldefs)):
                 cm = re.match(r"(\w+)\s+(.+)", cd.strip())
                 if not cm:
                     raise UnsupportedStatement(f"coldef: {cd!r}")
@@ -261,11 +203,13 @@ def parse_block(text: str) -> list[Stmt]:
         if m:
             rows = []
             body = m.group(4).strip()
-            for tup in _split_top(body):
+            for tup in filter(str.strip, split_top(body)):
                 tm = re.match(r"\((.*)\)$", tup.strip(), flags=re.S)
                 if not tm:
                     raise UnsupportedStatement(f"values tuple: {tup!r}")
-                rows.append([v.strip() for v in _split_top(tm.group(1))])
+                rows.append(
+                    [v.strip() for v in split_top(tm.group(1)) if v.strip()]
+                )
             cols = ([c.strip().lower() for c in m.group(3).split(",")]
                     if m.group(3) else None)
             stmts.append(
@@ -286,7 +230,7 @@ def parse_block(text: str) -> list[Stmt]:
         m = re.match(r"update (\w+) set (.*?)(?: where (.*))?$", s, flags=re.I | re.S)
         if m:
             sets = []
-            for a in _split_top(m.group(2)):
+            for a in filter(str.strip, split_top(m.group(2))):
                 am = re.match(r"(\w+)\s*=\s*(.+)$", a.strip(), flags=re.S)
                 if not am:
                     raise UnsupportedStatement(f"set clause: {a!r}")
@@ -337,7 +281,8 @@ def parse_block(text: str) -> list[Stmt]:
             stmts.append(
                 Stmt("add_partition", m.group(1),
                      {"name": m.group(2),
-                      "values": [v.strip() for v in _split_top(m.group(3))]})
+                      "values": [v.strip() for v in split_top(m.group(3))
+                                 if v.strip()]})
             )
             continue
         m = re.match(

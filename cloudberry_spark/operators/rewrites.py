@@ -29,6 +29,7 @@ from cloudberry_spark import scratch
 from cloudberry_spark.catalog import load_table
 from cloudberry_spark.operators.tpch import dsum_combine, dsum_split
 from cloudberry_spark.registry import register
+from cloudberry_spark.sql.sqltext import depth_at, open_parens
 
 
 def eager_agg_join(
@@ -414,20 +415,13 @@ def rewrite_selfjoin_distinct_in(sql: str) -> str:
     # every CTE reference must live inside an IN (...) subquery
     for ref in re.finditer(rf"\b{cte}\b", rest, flags=re.I):
         before = rest[: ref.start()].lower()
-        depth = before.count("(") - before.count(")")
+        depth = depth_at(before, len(before))
         if depth < 1 or before.rstrip().rfind("in") < 0:
             return sql
-        opens = [i for i, ch in enumerate(before) if ch == "("]
-        # the innermost unclosed paren must be an IN (select ...) —
-        # walk unclosed opens and require one introduced by IN
-        unclosed, d = [], 0
-        for i, ch in enumerate(before):
-            if ch == "(":
-                unclosed.append(i)
-            elif ch == ")" and unclosed:
-                unclosed.pop()
+        # one of the unclosed parens must be an IN (select ...)
         if not any(
-            re.search(r"\bin\s*$", before[:i].rstrip()) for i in unclosed
+            re.search(r"\bin\s*$", before[:i].rstrip())
+            for i in open_parens(before, len(before))
         ):
             return sql
     repl = (

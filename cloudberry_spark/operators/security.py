@@ -197,11 +197,6 @@ class AclTable:
                else {p.strip().upper() for p in privs.split(",")})
         self.acl.setdefault(role, set()).update(got)
 
-    def revoke(self, privs: str, role: str) -> None:
-        got = (set(self.PRIVS) if privs.upper() == "ALL"
-               else {p.strip().upper() for p in privs.split(",")})
-        self.acl.setdefault(role, set()).difference_update(got)
-
     # -- membership closure ----------------------------------------------
 
     def _roles_of(self, role: str) -> set[str]:

@@ -37,6 +37,7 @@ from cloudberry_spark.operators.dml import (
 )
 from cloudberry_spark.registry import register
 from cloudberry_spark.sources.snapshot import SnapshotTable
+from cloudberry_spark.sql.sqltext import split_top
 
 #: constructs that make a view read-only, per
 #: rewriteHandler.c view_query_is_auto_updatable
@@ -113,17 +114,7 @@ class UpdatableView:
                 "view definition"
             )
         cols: dict[str, str] = {}
-        depth, start, items = 0, 0, []
-        for i, ch in enumerate(sel):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                items.append(sel[start:i])
-                start = i + 1
-        items.append(sel[start:])
-        for it in items:
+        for it in split_top(sel):
             it = it.strip()
             am = re.match(r"(.+?)\s+AS\s+([A-Za-z_]\w*)$", it, re.I)
             if am:

@@ -40,6 +40,14 @@ from __future__ import annotations
 import functools
 import re
 
+from cloudberry_spark.sql.sqltext import (
+    STRING_OR_COMMENT_RE,
+    depth_at,
+    iter_top,
+    match_paren,
+    split_top,
+)
+
 #: PG type name -> Spark type name (used after :: and CAST(.. AS ..)).
 _TYPE_MAP = {
     "text": "string",
@@ -56,13 +64,6 @@ _TYPE_MAP = {
 }
 
 _STRING_RE = re.compile(r"'(?:[^']|'')*'")
-#: String literals and SQL comments in ONE alternation, so a left-to-
-#: right scan resolves nesting the way the PG lexer does: an apostrophe
-#: inside `-- don't ...` or /* ... */ never pairs with a later quote,
-#: and a `--` inside 'a -- b' stays literal text.
-_STRING_OR_COMMENT_RE = re.compile(
-    r"'(?:[^']|'')*'|--[^\n]*|/\*(?:[^*]|\*(?!/))*\*/"
-)
 _PH = "\x01{}\x02"
 _PH_RE = re.compile("\x01(\\d+)\x02")
 
@@ -82,21 +83,16 @@ def _rewrite_cast_as_type(seg: str, pg: str, sp: str) -> str:
             out.append(seg[pos:])
             break
         o = seg.index("(", m.end() - 1)
-        c = _match_paren(seg, o)
+        c = match_paren(seg, o)
         if c < 0:
             out.append(seg[pos:])
             break
         inner = seg[o + 1 : c]
         # last top-level AS in the cast argument
-        depth, last_as = 0, -1
-        for am in re.finditer(r"\(|\)|\bAS\b", inner, flags=re.I):
-            tok = am.group(0)
-            if tok == "(":
-                depth += 1
-            elif tok == ")":
-                depth -= 1
-            elif depth == 0:
-                last_as = am.start()
+        last_as = max(
+            (am.start() for am in iter_top(inner, r"(?i:\bAS\b)")),
+            default=-1,
+        )
         if last_as >= 0:
             head, tail = inner[:last_as], inner[last_as:]
             tail = type_re.sub(rf"AS {sp}", tail, count=1)
@@ -127,30 +123,16 @@ def _rewrite_selectlist_srf(seg: str) -> str:
             r"\bSELECT\b(?:\s+(?:DISTINCT|ALL)\b)?", seg, re.I
         ):
             start = m.end()
-            depth = 0
-            end = len(seg)
-            i = start
-            while i < len(seg):
-                c = seg[i]
-                if c == "(":
-                    depth += 1
-                elif c == ")":
-                    if depth == 0:
-                        end = i
-                        break
-                    depth -= 1
-                elif depth == 0:
-                    km = _SELECT_SPAN_END_RE.match(seg, i)
-                    if km:
-                        end = i
-                        break
-                i += 1
+            end = next(
+                (e.start() for e in iter_top(seg, _SELECT_SPAN_END_RE, start)),
+                len(seg),
+            )
             span = seg[start:end]
             sites = [
                 (s, o, c)
                 for s, o, c in _call_sites(span, "generate_series")
                 # top-level item: not inside any parens within the span
-                if span[:s].count("(") == span[:s].count(")")
+                if depth_at(span, s) == 0
             ]
             if len(sites) != 1:
                 continue
@@ -207,15 +189,7 @@ def _rewrite_subscripts(seg: str) -> str:
         if j < 0:
             return seg
         if seg[j] == ")":
-            depth, k = 0, j
-            while k >= 0:
-                if seg[k] == ")":
-                    depth += 1
-                elif seg[k] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k -= 1
+            k = match_paren(seg, j)
             if k < 0:
                 return seg
             nm = re.search(r"[A-Za-z_][\w.]*\s*$", seg[:k])
@@ -325,7 +299,7 @@ def _rewrite_masked(seg: str) -> str:
         if not sites:
             break
         s_, o, c = sites[0]
-        args = _split_args(seg[o + 1 : c])
+        args = split_top(seg[o + 1 : c])
         body = (
             f"{args[1].strip()}, {args[0].strip()}"
             if len(args) == 2
@@ -606,7 +580,7 @@ def _rewrite_masked(seg: str) -> str:
     # (GROUPING_ID_COLUMN_MISMATCH) — so expand to
     # grouping(a)*2^(n-1) + ... + grouping(z), identical semantics.
     def _grouping_bits(m: re.Match) -> str:
-        args = [a.strip() for a in _split_args(m.group(1)) if a.strip()]
+        args = [a.strip() for a in split_top(m.group(1)) if a.strip()]
         n = len(args)
         terms = [
             f"grouping({a})" + (f" * {1 << (n - 1 - i)}" if n - 1 - i else "")
@@ -636,7 +610,7 @@ def _rewrite_masked(seg: str) -> str:
     for _ in range(50):
         done = True
         for s, o, c in _call_sites(seg, "array_length"):
-            args = _split_args(seg[o + 1 : c])
+            args = split_top(seg[o + 1 : c])
             if len(args) == 2 and args[1].strip() == "1":
                 seg = seg[:s] + f"size({args[0].strip()})" + seg[c + 1 :]
                 done = False
@@ -651,7 +625,7 @@ def _call_sites(seg: str, name: str):
     call at any depth (masked text — no string literals to trip on)."""
     for m in re.finditer(rf"\b{name}\s*\(", seg, flags=re.I):
         o = seg.index("(", m.end() - 1)
-        c = _match_paren(seg, o)
+        c = match_paren(seg, o)
         if c >= 0:
             yield m.start(), o, c
 
@@ -666,7 +640,7 @@ def _rewrite_left_right(seg: str) -> str:
         for _ in range(50):  # bounded: each pass removes one call site
             target = None
             for s, o, c in _call_sites(seg, fname):
-                args = _split_args(seg[o + 1 : c])
+                args = split_top(seg[o + 1 : c])
                 if len(args) == 2 and not re.fullmatch(
                     r"\s*\d+\s*", args[1]
                 ):
@@ -707,7 +681,7 @@ def _rewrite_substr_nonpositive(seg: str) -> str:
         for _ in range(50):
             target = None
             for s, o, c in _call_sites(seg, fname):
-                args = _split_args(seg[o + 1 : c])
+                args = split_top(seg[o + 1 : c])
                 # substring(x FROM ...) keyword form handled elsewhere;
                 # greatest( start marks an already-rewritten call; a
                 # masked string literal (\x01N\x02) as the second arg is
@@ -782,24 +756,16 @@ def _rewrite_overlaps(seg: str) -> str:
         lclose = seg.rfind(")", 0, m.start())
         if lclose < 0:
             return seg
-        depth, lopen = 0, -1
-        for i in range(lclose, -1, -1):
-            if seg[i] == ")":
-                depth += 1
-            elif seg[i] == "(":
-                depth -= 1
-                if depth == 0:
-                    lopen = i
-                    break
+        lopen = match_paren(seg, lclose)
         ropen = seg.find("(", m.end())
         if lopen < 0 or ropen < 0:
             return seg
-        rclose = _match_paren(seg, ropen)
+        rclose = match_paren(seg, ropen)
         if rclose < 0:
             return seg
         pairs = []
         for body in (seg[lopen + 1 : lclose], seg[ropen + 1 : rclose]):
-            args = _split_args(body)
+            args = split_top(body)
             if len(args) != 2:
                 return seg  # not the OVERLAPS row shape; leave loud
             a, b = args[0].strip(), args[1].strip()
@@ -862,7 +828,7 @@ def _rewrite_row_constructors(seg: str) -> str:
             return seg
         start = pos + m.start()
         o1 = seg.index("(", pos + m.end() - 1)
-        c1 = _match_paren(seg, o1)
+        c1 = match_paren(seg, o1)
         if c1 < 0:
             return seg
         m2 = re.match(
@@ -873,11 +839,11 @@ def _rewrite_row_constructors(seg: str) -> str:
             pos = start + len("struct(")
             continue
         o2 = seg.index("(", c1 + 1 + m2.end() - 1)
-        c2 = _match_paren(seg, o2)
+        c2 = match_paren(seg, o2)
         if c2 < 0:
             return seg
-        a = [x.strip() for x in _split_args(seg[o1 + 1 : c1])]
-        b = [x.strip() for x in _split_args(seg[o2 + 1 : c2])]
+        a = [x.strip() for x in split_top(seg[o1 + 1 : c1])]
+        b = [x.strip() for x in split_top(seg[o2 + 1 : c2])]
         if len(a) != len(b) or not a:
             pos = c1 + 1
             continue
@@ -887,6 +853,9 @@ def _rewrite_row_constructors(seg: str) -> str:
 
 
 _CASE_TOK_RE = re.compile(r"\b(CASE|END|WHEN|THEN|ELSE)\b", re.I)
+#: CASE ... END nest like parens; WHEN/THEN are the arms' delimiters
+_CASE_BRACKETS = (r"(?i:\bCASE\b)", r"(?i:\bEND\b)")
+_WHEN_THEN_RE = re.compile(r"\b(?:WHEN|THEN)\b", re.I)
 _WHEN_ISND_RE = re.compile(
     r"\bWHEN\s+IS\s+NOT\s+DISTINCT\s+FROM\b", re.I
 )
@@ -921,25 +890,18 @@ def _rewrite_case_isnotdistinct(seg: str) -> str:
         case_start = open_cases[-1]
         # walk this CASE's tokens at depth 0 (relative to it), finding
         # the operand span and each arm's WHEN..THEN condition span
-        depth = 0
         head_end = None  # first depth-0 WHEN => end of operand
         arms: list[tuple[int, int]] = []  # (when_kw_end, then_start)
         pending_when = None
-        case_end = len(seg)
-        for tm in _CASE_TOK_RE.finditer(seg, case_start + 4):
-            t = tm.group(1).upper()
-            if t == "CASE":
-                depth += 1
-            elif t == "END":
-                if depth == 0:
-                    case_end = tm.start()
-                    break
-                depth -= 1
-            elif depth == 0 and t == "WHEN":
+        for tm in iter_top(
+            seg, _WHEN_THEN_RE, case_start + 4, _CASE_BRACKETS
+        ):
+            t = tm.group().upper()
+            if t == "WHEN":
                 if head_end is None:
                     head_end = tm.start()
                 pending_when = tm.end()
-            elif depth == 0 and t == "THEN" and pending_when is not None:
+            elif t == "THEN" and pending_when is not None:
                 arms.append((pending_when, tm.start()))
                 pending_when = None
         if head_end is None:
@@ -1024,7 +986,7 @@ def _strip_value_fn_frames(seg: str) -> str:
         )
         if users and all(u.lower() in _FRAME_IGNORING_FNS for u in users):
             o = seg.index("(", m.end() - 1)
-            c = _match_paren(seg, o)
+            c = match_paren(seg, o)
             if c > 0:
                 body = _FRAME_TAIL_RE.sub("", seg[o + 1 : c]).rstrip()
                 seg = seg[: o + 1] + body + seg[c:]
@@ -1047,7 +1009,7 @@ def _rewrite_window_filter(seg: str) -> str:
         else:
             new_args = ", ".join(
                 f"CASE WHEN {pred} THEN {a.strip()} END"
-                for a in _split_args(args)
+                for a in split_top(args)
             )
         return f"{name}({new_args}) "
 
@@ -1055,9 +1017,9 @@ def _rewrite_window_filter(seg: str) -> str:
 
 
 _GROUP_BY_RE = re.compile(r"\bGROUP\s+BY\b", re.I)
-#: keywords that terminate a GROUP BY clause at paren depth 0
-_GB_END_RE = re.compile(
-    r"\b(HAVING|WINDOW|ORDER|LIMIT|OFFSET|UNION|INTERSECT|EXCEPT|FETCH)\b",
+#: a GROUP BY item separator, or a keyword that ends the clause
+_GB_SPLIT_RE = re.compile(
+    r",|\b(HAVING|WINDOW|ORDER|LIMIT|OFFSET|UNION|INTERSECT|EXCEPT|FETCH)\b",
     re.I,
 )
 
@@ -1082,36 +1044,14 @@ def _strip_empty_grouping(seg: str) -> str:
         out.append(seg[pos : m.start()])
         # scan the clause: split on depth-0 commas, stop at depth-0
         # terminator keyword or the subquery's closing paren
-        i = m.end()
-        depth = 0
         items: list[str] = []
-        cur = i
-        end = len(seg)
-        while i < len(seg):
-            c = seg[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                if depth == 0:
-                    end = i
-                    break
-                depth -= 1
-            elif c == "," and depth == 0:
-                items.append(seg[cur:i])
-                cur = i + 1
-            elif depth == 0 and c.isalpha():
-                km = _GB_END_RE.match(seg, i)
-                if km:
-                    end = i
-                    break
-                # skip the rest of this word so HAVINGx never matches
-                while i + 1 < len(seg) and (
-                    seg[i + 1].isalnum() or seg[i + 1] == "_"
-                ):
-                    i += 1
-            i += 1
-        else:
-            end = len(seg)
+        cur, end = m.end(), len(seg)
+        for t in iter_top(seg, _GB_SPLIT_RE, m.end()):
+            if t.group() != ",":
+                end = t.start()
+                break
+            items.append(seg[cur : t.start()])
+            cur = t.end()
         items.append(seg[cur:end])
         kept = [it for it in items if it.strip() != "()"]
         if kept:
@@ -1263,30 +1203,6 @@ _SIMILAR_RE = re.compile(
 )
 
 
-def _split_args(args: str) -> list[str]:
-    """Split an argument list on top-level commas (quote- and
-    paren-aware)."""
-    parts, depth, in_str, start = [], 0, False, 0
-    i = 0
-    while i < len(args):
-        c = args[i]
-        if in_str:
-            if c == "'":
-                in_str = False
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(args[start:i])
-            start = i + 1
-        i += 1
-    parts.append(args[start:])
-    return parts
-
-
 _REGEXP_FN_RE = re.compile(
     r"\b(regexp_replace|regexp_like|regexp_count|regexp_instr|"
     r"regexp_substr|regexp_extract|rx_split__)\s*\(",
@@ -1341,12 +1257,12 @@ def _fix_regex_literals(sql: str) -> str:
             break
         fn = m.group(1).lower()
         o = sql.index("(", m.end() - 1)
-        c = _match_paren(sql, o)
+        c = match_paren(sql, o)
         if c < 0:
             res.append(sql[i : m.end()])
             i = m.end()
             continue
-        args = _split_args(sql[o + 1 : c])
+        args = split_top(sql[o + 1 : c])
         if len(args) >= 2 and _STR_LIT_RE.fullmatch(args[1].strip()):
             args[1] = " " + args[1].strip().replace("\\", "\\\\")
         if fn == "regexp_replace" and len(args) >= 3:
@@ -1407,7 +1323,7 @@ def _rewrite_restored(sql: str) -> str:
     for _ in range(100):  # each hit renames to rr_first__; bounded
         changed = False
         for s_, o, c in _call_sites(sql, "regexp_replace"):
-            args = _split_args(sql[o + 1 : c])
+            args = split_top(sql[o + 1 : c])
             flags = (
                 args[3].strip().strip("'").lower() if len(args) == 4 else ""
             )
@@ -1437,7 +1353,7 @@ def _rewrite_restored(sql: str) -> str:
     sql = sql.replace("rr_first__(", "regexp_replace(")
 
     def _rr_flags(m: re.Match) -> str:
-        args, flags = _split_args(m.group(1)), m.group(2).lower()
+        args, flags = split_top(m.group(1)), m.group(2).lower()
         if len(args) < 3:
             return m.group(0)  # 3-arg call: 'g' was the replacement
         if "i" in flags:
@@ -1625,7 +1541,7 @@ def _rewrite_distinct_on(masked: str) -> str:
         changed = False
         for m in _DISTINCT_ON_START_RE.finditer(out):
             prefix = out[: m.start()]
-            if prefix.count("(") == prefix.count(")"):
+            if depth_at(out, m.start()) == 0:
                 r = _DISTINCT_ON_RE.match(out[m.start() :])
                 if not r:
                     continue
@@ -1636,16 +1552,9 @@ def _rewrite_distinct_on(masked: str) -> str:
                     f" AS rn__ FROM {src}) WHERE rn__ = 1"
                 )
             # nested: find the close paren of the enclosing subquery
-            depth, end = 0, None
-            for i in range(m.start(), len(out)):
-                ch = out[i]
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    if depth == 0:
-                        end = i
-                        break
-                    depth -= 1
+            end = next(
+                (c.start() for c in iter_top(out, None, m.start())), None
+            )
             if end is None:
                 continue
             r = _DISTINCT_ON_RE.match(out[m.start() : end])
@@ -1722,14 +1631,12 @@ def _rewrite_date_bin(seg: str, lits: list[str] | None = None) -> str:
         if m is None:
             out.append(seg[pos:])
             return "".join(out)
-        depth, i = 1, m.end()
-        while i < len(seg) and depth:
-            if seg[i] == "(":
-                depth += 1
-            elif seg[i] == ")":
-                depth -= 1
-            i += 1
-        args = _split_depth0(seg[m.end():i - 1])
+        c = match_paren(seg, m.end() - 1)
+        if c < 0:
+            out.append(seg[pos:])
+            return "".join(out)
+        i = c + 1
+        args = [a.strip() for a in split_top(seg[m.end() : c]) if a.strip()]
         lit = None
         if len(args) == 3:
             arg0 = args[0].strip()
@@ -1761,23 +1668,6 @@ _MULTI_UNNEST_RE = re.compile(
 )
 
 
-def _split_depth0(text: str) -> list[str]:
-    parts, depth, cur = [], 0, []
-    for ch in text:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if "".join(cur).strip():
-        parts.append("".join(cur).strip())
-    return parts
-
-
 def _rewrite_multi_unnest(seg: str) -> str:
     """``unnest(a1, a2, ..) [WITH ORDINALITY] AS t(c1, .., [ord])`` ->
     posexplode(arrays_zip(..)) over struct fields "0".."n-1"
@@ -1789,15 +1679,12 @@ def _rewrite_multi_unnest(seg: str) -> str:
         if m is None:
             out.append(seg[pos:])
             return "".join(out)
-        # find matching close paren
-        depth, i = 1, m.end()
-        while i < len(seg) and depth:
-            if seg[i] == "(":
-                depth += 1
-            elif seg[i] == ")":
-                depth -= 1
-            i += 1
-        args = _split_depth0(seg[m.end():i - 1])
+        c = match_paren(seg, m.end() - 1)
+        if c < 0:
+            out.append(seg[pos:])
+            return "".join(out)
+        i = c + 1
+        args = [a.strip() for a in split_top(seg[m.end() : c]) if a.strip()]
         tail = re.match(
             r"\s*(WITH\s+ORDINALITY\s+)?(?:AS\s+)?(\w+)\s*\(([^()]*)\)",
             seg[i:], flags=re.I,
@@ -1807,7 +1694,8 @@ def _rewrite_multi_unnest(seg: str) -> str:
             pos = m.end()
             continue
         with_ord = bool(tail.group(1))
-        alias, cols = tail.group(2), _split_depth0(tail.group(3))
+        alias = tail.group(2)
+        cols = [x.strip() for x in split_top(tail.group(3)) if x.strip()]
         ncols = len(cols) - (1 if with_ord else 0)
         if ncols != len(args):
             out.append(seg[pos:m.end()])
@@ -1844,11 +1732,11 @@ def _rewrite_rows_from(seg: str) -> str:
         if m is None:
             return seg
         o = m.end() - 1
-        c = _match_paren(seg, o)
+        c = match_paren(seg, o)
         if c < 0:
             return seg
         arrays: list[str] = []
-        for arg in _split_args(seg[o + 1 : c]):
+        for arg in split_top(seg[o + 1 : c]):
             am = re.fullmatch(
                 r"\s*unnest\s*\((.*)\)\s*", arg, re.I | re.S
             )
@@ -1859,7 +1747,7 @@ def _rewrite_rows_from(seg: str) -> str:
                 # multi-argument unnest zips its arrays — one output
                 # column per array (rangefuncs.sql:37)
                 arrays.extend(
-                    a.strip() for a in _split_args(am.group(1).strip())
+                    a.strip() for a in split_top(am.group(1).strip())
                 )
             elif gm:
                 arrays.append(f"sequence({gm.group(1).strip()})")
@@ -1912,11 +1800,11 @@ def _gs_flat_cols(kind: str, inner: str) -> list[str]:
     """Flatten the column expressions of a GROUPING SETS/CUBE/ROLLUP
     argument list (nested set parens stripped), order-preserving."""
     cols: list[str] = []
-    for x in _split_args(inner):
+    for x in split_top(inner):
         x = x.strip()
         if not x or x == "()":
             continue
-        parts = _split_args(x[1:-1]) if x.startswith("(") else [x]
+        parts = split_top(x[1:-1]) if x.startswith("(") else [x]
         for p in parts:
             p = p.strip()
             if p and p not in cols:
@@ -1937,14 +1825,14 @@ def _top_gb_clause(seg: str) -> tuple[int, int] | None:
     hits = [
         m
         for m in re.finditer(r"\bGROUP\s+BY\b", seg, re.I)
-        if _depth_at(seg, m.start()) == 0
+        if depth_at(seg, m.start()) == 0
     ]
     if len(hits) != 1:
         return None
     start = hits[0].end()
     end = len(seg)
     for tm in _GB_TERM_RE.finditer(seg, start):
-        if _depth_at(seg, tm.start()) == 0:
+        if depth_at(seg, tm.start()) == 0:
             end = tm.start()
             break
     return start, end
@@ -1956,7 +1844,7 @@ def _top_select_aliases(seg: str) -> dict[str, str]:
         (
             x
             for x in re.finditer(r"\bSELECT\b", seg, re.I)
-            if _depth_at(seg, x.start()) == 0
+            if depth_at(seg, x.start()) == 0
         ),
         None,
     )
@@ -1964,13 +1852,13 @@ def _top_select_aliases(seg: str) -> dict[str, str]:
         (
             x
             for x in re.finditer(r"\bFROM\b", seg, re.I)
-            if sm and x.start() > sm.end() and _depth_at(seg, x.start()) == 0
+            if sm and x.start() > sm.end() and depth_at(seg, x.start()) == 0
         ),
         None,
     )
     aliases: dict[str, str] = {}
     if sm and fm:
-        for item in _split_args(seg[sm.end() : fm.start()]):
+        for item in split_top(seg[sm.end() : fm.start()]):
             am = re.fullmatch(r"(.*?)\s+AS\s+(\w+)", item.strip(),
                               re.I | re.S)
             if am:
@@ -2019,11 +1907,11 @@ def _gs_sets_of(kind: str, inner: str) -> list[str]:
 
     def elems(arg: str) -> list[str]:
         arg = arg.strip()
-        if arg.startswith("(") and _match_paren(arg, 0) == len(arg) - 1:
-            return [p.strip() for p in _split_args(arg[1:-1]) if p.strip()]
+        if arg.startswith("(") and match_paren(arg, 0) == len(arg) - 1:
+            return [p.strip() for p in split_top(arg[1:-1]) if p.strip()]
         return [arg] if arg else []
 
-    args = [a for a in (x.strip() for x in _split_args(inner)) if a]
+    args = [a for a in (x.strip() for x in split_top(inner)) if a]
     if kind == "ROLLUP":
         sets = []
         for n in range(len(args), -1, -1):
@@ -2055,7 +1943,7 @@ def _gs_sets_of(kind: str, inner: str) -> list[str]:
             k = re.sub(r"\s+", " ", nm.group(1).upper())
             k = "GROUPING SETS" if k.startswith("GROUPING") else k
             o = a.index("(", nm.end() - 1)
-            sets.extend(_gs_sets_of(k, a[o + 1 : _match_paren(a, o)]))
+            sets.extend(_gs_sets_of(k, a[o + 1 : match_paren(a, o)]))
         else:
             sets.append("(" + ", ".join(elems(a)) + ")")
     return sets
@@ -2073,8 +1961,8 @@ def _expand_nested_gs(seg: str) -> str:
             out.append(seg[pos:])
             return "".join(out)
         o = seg.index("(", m.end() - 1)
-        c = _match_paren(seg, o)
-        args = [a.strip() for a in _split_args(seg[o + 1 : c]) if a.strip()]
+        c = match_paren(seg, o)
+        args = [a.strip() for a in split_top(seg[o + 1 : c]) if a.strip()]
         if not any(
             re.match(r"(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(", a, re.I)
             for a in args
@@ -2088,7 +1976,7 @@ def _expand_nested_gs(seg: str) -> str:
             if nm:
                 kind = re.sub(r"\s+", " ", nm.group(1).upper())
                 kind = "GROUPING SETS" if kind.startswith("GROUPING") else kind
-                inner = a[a.index("(", nm.end() - 1) + 1 : _match_paren(
+                inner = a[a.index("(", nm.end() - 1) + 1 : match_paren(
                     a, a.index("(", nm.end() - 1))]
                 sets.extend(_gs_sets_of(kind, inner))
             else:
@@ -2120,7 +2008,7 @@ def _gb_construct_members(seg: str) -> list[str]:
         r"\b(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(", seg[start:end], re.I
     ):
         o = start + seg[start:end].index("(", cm.end() - 1)
-        c = _match_paren(seg, o)
+        c = match_paren(seg, o)
         for x in _gs_flat_cols(
             re.sub(r"\s+", " ", cm.group(1).upper()), seg[o + 1 : c]
         ):
@@ -2133,7 +2021,7 @@ def _norm_expr(e: str) -> str:
     e = e.strip()
     # balanced outer parens are resolution-transparent (and the alias
     # substitution pass adds a pair around every spelled expression)
-    while e.startswith("(") and _match_paren(e, 0) == len(e) - 1:
+    while e.startswith("(") and match_paren(e, 0) == len(e) - 1:
         e = e[1:-1].strip()
     return re.sub(r"\s+", "", e).upper()
 
@@ -2146,13 +2034,13 @@ def _always_grouped_exprs(seg: str) -> set[str]:
     span = _top_gb_clause(seg)
     if span is None:
         return always
-    for item in (x.strip() for x in _split_args(seg[span[0] : span[1]])):
+    for item in (x.strip() for x in split_top(seg[span[0] : span[1]])):
         if not item or item == "()" or re.match(
             r"(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(", item, re.I
         ):
             continue
-        if item.startswith("(") and _match_paren(item, 0) == len(item) - 1:
-            for p in (y.strip() for y in _split_args(item[1:-1])):
+        if item.startswith("(") and match_paren(item, 0) == len(item) - 1:
+            for p in (y.strip() for y in split_top(item[1:-1])):
                 always.add(_norm_expr(p))
         else:
             always.add(_norm_expr(item))
@@ -2180,19 +2068,19 @@ def _dedupe_always_grouped(seg: str) -> str:
         return seg
     start, end = span
     out: list[str] = []
-    for item in (x.strip() for x in _split_args(seg[start:end])):
+    for item in (x.strip() for x in split_top(seg[start:end])):
         cm = re.match(r"(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(", item, re.I)
         if not cm:
             out.append(item)
             continue
         o = item.index("(", cm.end() - 1)
-        c = _match_paren(item, o)
+        c = match_paren(item, o)
         args_out = []
-        for a in (y.strip() for y in _split_args(item[o + 1 : c])):
-            if a.startswith("(") and _match_paren(a, 0) == len(a) - 1:
+        for a in (y.strip() for y in split_top(item[o + 1 : c])):
+            if a.startswith("(") and match_paren(a, 0) == len(a) - 1:
                 kept = [
                     p
-                    for p in (z.strip() for z in _split_args(a[1:-1]))
+                    for p in (z.strip() for z in split_top(a[1:-1]))
                     if p and _norm_expr(p) not in always
                 ]
                 args_out.append("(" + ", ".join(kept) + ")")
@@ -2228,15 +2116,15 @@ def _drop_singleton_empty_gs(seg: str) -> str:
     if span is None:
         return seg
     start, end = span
-    items = [x.strip() for x in _split_args(seg[start:end]) if x.strip()]
+    items = [x.strip() for x in split_top(seg[start:end]) if x.strip()]
     kept = []
     dropped = False
     for item in items:
         m = re.match(r"GROUPING\s+SETS\s*\(", item, re.I)
         if m:
             o = item.index("(", m.end() - 1)
-            inner = item[o + 1 : _match_paren(item, o)]
-            args = [a.strip() for a in _split_args(inner) if a.strip()]
+            inner = item[o + 1 : match_paren(item, o)]
+            args = [a.strip() for a in split_top(inner) if a.strip()]
             if len(args) == 1 and args[0] == "()":
                 dropped = True
                 continue
@@ -2265,12 +2153,12 @@ def _plain_gb_grouping_zero(seg: str) -> str:
             out.append(seg[pos:])
             return "".join(out)
         st = pos + m.start()
-        if _depth_at(seg, st) != 0:
+        if depth_at(seg, st) != 0:
             out.append(seg[pos : st + m.end() - m.start()])
             pos = st + (m.end() - m.start())
             continue
         o = seg.index("(", st)
-        c = _match_paren(seg, o)
+        c = match_paren(seg, o)
         out.append(seg[pos:st])
         out.append("0")
         pos = c + 1
@@ -2303,7 +2191,7 @@ def _rewrite_gs_dup_exprs(seg: str) -> str:
         (
             x
             for x in re.finditer(r"\bSELECT\b", seg, re.I)
-            if _depth_at(seg, x.start()) == 0
+            if depth_at(seg, x.start()) == 0
         ),
         None,
     )
@@ -2311,13 +2199,13 @@ def _rewrite_gs_dup_exprs(seg: str) -> str:
         (
             x
             for x in re.finditer(r"\bFROM\b", seg, re.I)
-            if sm and x.start() > sm.end() and _depth_at(seg, x.start()) == 0
+            if sm and x.start() > sm.end() and depth_at(seg, x.start()) == 0
         ),
         None,
     )
     if not (sm and fm):
         return seg
-    items = _split_args(seg[sm.end() : fm.start()])
+    items = split_top(seg[sm.end() : fm.start()])
     changed = False
     new_items = []
     for item in items:
@@ -2383,7 +2271,7 @@ def _rewrite_group_id(seg: str) -> str:
             seen.add(key)
             cols.append(x)
 
-    for item in (x.strip() for x in _split_args(seg[span[0] : span[1]])):
+    for item in (x.strip() for x in split_top(seg[span[0] : span[1]])):
         if not item or item == "()":
             continue
         cm = re.match(r"(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(", item, re.I)
@@ -2392,11 +2280,11 @@ def _rewrite_group_id(seg: str) -> str:
             o = item.index("(", cm.end() - 1)
             for x in _gs_flat_cols(
                 re.sub(r"\s+", " ", cm.group(1).upper()),
-                item[o + 1 : _match_paren(item, o)],
+                item[o + 1 : match_paren(item, o)],
             ):
                 _add(x)
-        elif item.startswith("(") and _match_paren(item, 0) == len(item) - 1:
-            for p in (y.strip() for y in _split_args(item[1:-1])):
+        elif item.startswith("(") and match_paren(item, 0) == len(item) - 1:
+            for p in (y.strip() for y in split_top(item[1:-1])):
                 _add(p)
         else:
             _add(item)
@@ -2414,7 +2302,7 @@ def _rewrite_group_id(seg: str) -> str:
         (
             x
             for x in re.finditer(r"\bSELECT\b", seg, re.I)
-            if _depth_at(seg, x.start()) == 0
+            if depth_at(seg, x.start()) == 0
         ),
         None,
     )
@@ -2423,13 +2311,13 @@ def _rewrite_group_id(seg: str) -> str:
             x
             for x in re.finditer(r"\bFROM\b", seg, re.I)
             if sm and x.start() > sm.end()
-            and _depth_at(seg, x.start()) == 0
+            and depth_at(seg, x.start()) == 0
         ),
         None,
     )
     if sm and fm:
         aliases: dict[str, str] = {}
-        for item in _split_args(seg[sm.end() : fm.start()]):
+        for item in split_top(seg[sm.end() : fm.start()]):
             am = re.fullmatch(
                 r"(.*?)\s+AS\s+(\w+)", item.strip(), re.I | re.S
             )
@@ -2471,16 +2359,16 @@ def _gs_empty_input_fallback(seg: str) -> str:
     untouched (the divergence stays documented for those).
     """
     m = _GS_HEAD_RE.search(seg)
-    if m is None or _depth_at(seg, m.start()) != 0:
+    if m is None or depth_at(seg, m.start()) != 0:
         return seg
     kind = re.sub(r"\s+", " ", m.group(1).upper())
     o = seg.index("(", m.end() - 1)
-    c = _match_paren(seg, o)
+    c = match_paren(seg, o)
     if c < 0:
         return seg
     inner = seg[o + 1 : c]
     if kind == "GROUPING SETS":
-        sets = _split_args(inner)
+        sets = split_top(inner)
         n_empty = sum(1 for x in sets if x.strip() in ("()", ""))
         flat: list[str] = []
         for x in sets:
@@ -2489,13 +2377,13 @@ def _gs_empty_input_fallback(seg: str) -> str:
                 continue
             flat += [
                 p.strip()
-                for p in _split_args(x[1:-1] if x.startswith("(") else x)
+                for p in split_top(x[1:-1] if x.startswith("(") else x)
                 if p.strip()
             ]
         cols = flat
     else:  # CUBE / ROLLUP product always includes the empty set once
         n_empty = 1
-        cols = [p.strip() for p in _split_args(inner) if p.strip()]
+        cols = [p.strip() for p in split_top(inner) if p.strip()]
     if n_empty == 0:
         return seg
     tail = seg[c + 1 :]
@@ -2509,7 +2397,7 @@ def _gs_empty_input_fallback(seg: str) -> str:
         (
             x
             for x in re.finditer(r"\bSELECT\b", head, re.I)
-            if _depth_at(head, x.start()) == 0
+            if depth_at(head, x.start()) == 0
         ),
         None,
     )
@@ -2519,7 +2407,7 @@ def _gs_empty_input_fallback(seg: str) -> str:
         (
             x
             for x in re.finditer(r"\bFROM\b", head, re.I)
-            if x.start() > sm.end() and _depth_at(head, x.start()) == 0
+            if x.start() > sm.end() and depth_at(head, x.start()) == 0
         ),
         None,
     )
@@ -2528,7 +2416,7 @@ def _gs_empty_input_fallback(seg: str) -> str:
     after_sel = head[sm.end() :]
     for kw in ("UNION", "INTERSECT", "EXCEPT", "HAVING", "DISTINCT"):
         if any(
-            _depth_at(after_sel, x.start()) == 0
+            depth_at(after_sel, x.start()) == 0
             for x in re.finditer(rf"\b{kw}\b", after_sel, re.I)
         ):
             return seg
@@ -2560,7 +2448,7 @@ def _gs_empty_input_fallback(seg: str) -> str:
         re.I,
     )
     items = []
-    for item in _split_args(sel_list):
+    for item in split_top(sel_list):
         item = item.strip()
         am = re.fullmatch(r"(.*?)(\s+AS\s+\w+)", item, re.I | re.S)
         expr, alias = (am.group(1), am.group(2)) if am else (item, "")
@@ -2568,7 +2456,7 @@ def _gs_empty_input_fallback(seg: str) -> str:
             r"grouping(?:_id)?\s*\(([^()]*)\)", expr.strip(), re.I
         )
         if gm:
-            nargs = len(_split_args(gm.group(1)))
+            nargs = len(split_top(gm.group(1)))
             expr = str((1 << nargs) - 1)
         elif norm(expr) in col_keys:
             expr = f"max({expr.strip()})"
@@ -2615,7 +2503,7 @@ def _rewrite_quantified_ordering(seg: str) -> str:
             return seg
         op, quant = m.group(1), m.group(2).upper()
         o = m.end() - 1
-        c = _match_paren(seg, o)
+        c = match_paren(seg, o)
         if c < 0:
             return seg
         lm = re.search(rf"{_LEFT_OPERAND}\s*$", seg[: m.start()], re.I)
@@ -2668,23 +2556,6 @@ def _rewrite_quantified_ordering(seg: str) -> str:
     return seg
 
 
-def _match_paren(s: str, i: int) -> int:
-    """Index of the ')' matching the '(' at i, or -1."""
-    depth = 0
-    for j in range(i, len(s)):
-        if s[j] == "(":
-            depth += 1
-        elif s[j] == ")":
-            depth -= 1
-            if depth == 0:
-                return j
-    return -1
-
-
-def _depth_at(s: str, i: int) -> int:
-    return s.count("(", 0, i) - s.count(")", 0, i)
-
-
 def _flatten_one_exists_body(body: str, counter: list[int]) -> str | None:
     """Rewrite one cross-level `X IN (SELECT e FROM t WHERE w)` inside
     an EXISTS body into a plain join appended to the body's FROM list.
@@ -2694,7 +2565,7 @@ def _flatten_one_exists_body(body: str, counter: list[int]) -> str | None:
         (
             m
             for m in re.finditer(r"\bFROM\b", body, re.I)
-            if _depth_at(body, m.start()) == 0
+            if depth_at(body, m.start()) == 0
         ),
         None,
     )
@@ -2702,7 +2573,7 @@ def _flatten_one_exists_body(body: str, counter: list[int]) -> str | None:
         return None
     from_end = len(body)
     for m in _CLAUSE_KW_RE.finditer(body, from_m.end()):
-        if m.group(1).upper() != "FROM" and _depth_at(body, m.start()) == 0:
+        if m.group(1).upper() != "FROM" and depth_at(body, m.start()) == 0:
             from_end = m.start()
             break
     from_list = body[from_m.end() : from_end]
@@ -2715,13 +2586,13 @@ def _flatten_one_exists_body(body: str, counter: list[int]) -> str | None:
             body_aliases.add(words[-1])
 
     for m2 in _IN_SUBQ_RE.finditer(body):
-        if _depth_at(body, m2.start()) != 0:
+        if depth_at(body, m2.start()) != 0:
             continue
         if re.search(r"\bNOT\s*$", body[: m2.start()], re.I):
             continue
         left = m2.group(1)
         popen = m2.start(2)
-        pclose = _match_paren(body, popen)
+        pclose = match_paren(body, popen)
         if pclose < 0:
             continue
         sub = body[popen + 1 : pclose]
@@ -2783,7 +2654,7 @@ def _expand_window_inheritance(masked: str) -> str:
             if not dm:
                 break
             o = masked.index("(", dm.end() - 1)
-            c = _match_paren(masked, o)
+            c = match_paren(masked, o)
             if c < 0:
                 break
             body = masked[o + 1 : c].strip()
@@ -2830,9 +2701,9 @@ def _exclude_expr(agg: str, arg: str, body: str) -> str:
     part, order, mode = bm.group("p"), bm.group("o"), bm.group("m").upper()
     keys = [
         re.sub(r"\s+(ASC|DESC|NULLS\s+(FIRST|LAST))\b", "", k, flags=re.I).strip()
-        for k in _split_args(order)
+        for k in split_top(order)
     ]
-    pcols = [p.strip() for p in _split_args(part)] if part else []
+    pcols = [p.strip() for p in split_top(part)] if part else []
     pw = f"OVER (PARTITION BY {', '.join(pcols)})" if pcols else "OVER ()"
     pk = f"OVER (PARTITION BY {', '.join(pcols + keys)})"
     e = arg.strip()
@@ -2876,7 +2747,7 @@ def _rewrite_window_exclude(masked: str) -> str:
             break
         name = m.group(1)
         o = masked.index("(", m.end() - 1)
-        c = _match_paren(masked, o)
+        c = match_paren(masked, o)
         body = masked[o + 1 : c]
         if not _EXCLUDE_KW_RE.search(body):
             break
@@ -2902,7 +2773,7 @@ def _rewrite_window_exclude(masked: str) -> str:
             r"([A-Za-z_]\w*)\s*\(\s*([^()]*?)\s*\)\s+OVER\s*\(", masked, re.I
         ):
             o = masked.index("(", cm.end() - 1)
-            c = _match_paren(masked, o)
+            c = match_paren(masked, o)
             body = masked[o + 1 : c]
             if not _EXCLUDE_KW_RE.search(body):
                 continue
@@ -2934,7 +2805,7 @@ def _flatten_in_under_exists(masked: str) -> str:
         progressed = False
         for m in _EXISTS_OPEN_RE.finditer(masked):
             o = masked.index("(", m.start())
-            c = _match_paren(masked, o)
+            c = match_paren(masked, o)
             if c < 0:
                 continue
             new_body = _flatten_one_exists_body(masked[o + 1 : c], counter)
@@ -2960,7 +2831,7 @@ def _rewrite_format(masked: str, lits: list[str]) -> str:
     for _ in range(50):
         target = None
         for s, o, c in _call_sites(masked, "format"):
-            args = _split_args(masked[o + 1 : c])
+            args = split_top(masked[o + 1 : c])
             if not args or not args[0].strip():
                 continue
             fmt = args[0].strip()
@@ -3163,7 +3034,7 @@ def _rewrite_array_quantified(masked: str, lits: list[str]) -> str:
         m = None
         for cand in _ARR_QUANT_RE.finditer(masked):
             o = cand.end() - 1
-            c = _match_paren(masked, o)
+            c = match_paren(masked, o)
             if c < 0:
                 continue
             if re.match(r"\s*(?i:SELECT)\b", masked[o + 1 : c]):
@@ -3174,7 +3045,7 @@ def _rewrite_array_quantified(masked: str, lits: list[str]) -> str:
             return masked
         x, op, quant = m.group(1), m.group(2), m.group(3).upper()
         o = m.end() - 1
-        c = _match_paren(masked, o)
+        c = match_paren(masked, o)
         arg = masked[o + 1 : c].strip()
         ph = _PH_RE.fullmatch(arg)
         if ph:
@@ -3262,7 +3133,7 @@ def _rewrite_to_char(masked: str, lits: list[str]) -> str:
     for _ in range(50):
         target = None
         for s, o, c in _call_sites(masked, "to_char"):
-            args = _split_args(masked[o + 1 : c])
+            args = split_top(masked[o + 1 : c])
             if len(args) != 2:
                 continue
             ph = _PH_RE.fullmatch(args[1].strip())
@@ -3351,7 +3222,7 @@ def _rewrite_to_datetime(masked: str, lits: list[str]) -> str:
         for _ in range(50):
             target = None
             for s, o, c in _call_sites(masked, fn):
-                args = _split_args(masked[o + 1 : c])
+                args = split_top(masked[o + 1 : c])
                 if len(args) != 2:
                     continue
                 ph = _PH_RE.fullmatch(args[1].strip())
@@ -3395,7 +3266,7 @@ def translate_pg_sql(sql: str) -> str:
         lits.append(m.group(0))
         return _PH.format(len(lits) - 1)
 
-    masked = _STRING_OR_COMMENT_RE.sub(_mask, sql)
+    masked = STRING_OR_COMMENT_RE.sub(_mask, sql)
     # E'...' escape strings: PG halves backslash pairs and maps the
     # C-style escapes at parse time (scan.l xe rules); the pipeline's
     # plain literals hold value-level text, so unescape the stored
@@ -3480,7 +3351,7 @@ def translate_pg_sql(sql: str) -> str:
 
 _ORDER_BY_KW_RE = re.compile(r"\bORDER\s+BY\b", re.I)
 _ORD_TERM_RE = re.compile(
-    r"(LIMIT|OFFSET|FETCH|WINDOW|UNION|INTERSECT|EXCEPT|ROWS|RANGE"
+    r"\b(LIMIT|OFFSET|FETCH|WINDOW|UNION|INTERSECT|EXCEPT|ROWS|RANGE"
     r"|GROUPS|FOR|HAVING)\b",
     re.I,
 )
@@ -3508,41 +3379,12 @@ def _pg_null_ordering(seg: str, lits: list[str] | None = None) -> str:
             return "".join(out)
         # extent of the item list: up to the enclosing ')' or a depth-0
         # terminator keyword
-        i, depth, end = m.end(), 0, len(seg)
-        while i < len(seg):
-            ch = seg[i]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    end = i
-                    break
-                depth -= 1
-            elif depth == 0 and (ch.isalpha() or ch == "_"):
-                if _ORD_TERM_RE.match(seg, i) and not (
-                    i > 0 and (seg[i - 1].isalnum() or seg[i - 1] == "_")
-                ):
-                    end = i
-                    break
-                while i < len(seg) and (
-                    seg[i].isalnum() or seg[i] == "_"
-                ):
-                    i += 1
-                continue
-            i += 1
-        items_txt = seg[m.end() : end]
-        items, depth, start = [], 0, 0
-        for j, ch in enumerate(items_txt):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                items.append(items_txt[start:j])
-                start = j + 1
-        items.append(items_txt[start:])
+        end = next(
+            (t.start() for t in iter_top(seg, _ORD_TERM_RE, m.end())),
+            len(seg),
+        )
         fixed = []
-        for it in items:
+        for it in split_top(seg[m.end() : end]):
             body = it.rstrip()
             pad = it[len(body) :]
             if not body.strip():

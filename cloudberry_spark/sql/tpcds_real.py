@@ -58,6 +58,7 @@ from cloudberry_spark.registry import register
 from cloudberry_spark.sql.pgcompat import translate_pg_sql
 from cloudberry_spark.sql.regress import _with_prelude
 from cloudberry_spark.sql.scale_fixture import prelude_views
+from cloudberry_spark.sql.sqltext import match_paren
 
 #: Deterministic TPC-DS schema, shared verbatim by both engines.
 #: Column subsets follow the reference DDL (tpcds_q04.sql:24-360,
@@ -435,17 +436,11 @@ def materialize_hot_cte(
         m = re.match(r"\s*with\s+(\w+)\s+as\s*\(", remaining, flags=re.I)
         if not m:
             break
-        depth, i = 1, m.end()
-        while i < len(remaining) and depth:
-            if remaining[i] == "(":
-                depth += 1
-            elif remaining[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        c = match_paren(remaining, m.end() - 1)
+        if c < 0:
             return None
-        cte, body = m.group(1), remaining[m.end(): i - 1]
-        rest = remaining[i:]
+        cte, body = m.group(1), remaining[m.end() : c]
+        rest = remaining[c + 1 :]
         mm = re.match(r"\s*,\s*", rest)
         # re-open the WITH for the next CTE so the loop peels it too
         rest_q = ("with " + rest[mm.end():]) if mm else rest

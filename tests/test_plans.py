@@ -671,8 +671,9 @@ def test_driver_prefix_composition():
     # every committed CORRECTNESS round is folded into driver_sampled(),
     # so the prefix must consist ENTIRELY of first-time-confirmable
     # queries, led by the never-sampled queries whose internals changed
-    # since: snapshot-table DML, streaming sinks and checkpoints, and
-    # the per-process scratch writers
+    # since: snapshot-table DML, streaming sinks and checkpoints, the
+    # per-process scratch writers, and the inheritance and
+    # directory-table writes that moved onto SnapshotTable._commit
     for must in (
         "dml_merge",
         "dml_update_delete",
@@ -687,6 +688,11 @@ def test_driver_prefix_composition():
         "copy_orc_roundtrip",
         "fdw_python_textfeed",
         "graph_kcore_peel",
+        "regress_inh_scan_mid_level",
+        "regress_inh_only_scans",
+        "regress_inh_update_child_propagates",
+        "regress_dirtable_tag_filter",
+        "regress_dirtable_md5_lookup",
     ):
         assert must in prefix, f"{must} fell out of the sampled prefix"
     never = sum(1 for n in prefix if n not in driver_sampled())

@@ -42,7 +42,12 @@ import re
 from pyspark.sql import SparkSession
 
 from cloudberry_spark.sql.pgcompat import translate_pg_sql
-from cloudberry_spark.sql.sqltext import iter_top, match_paren, split_top
+from cloudberry_spark.sql.sqltext import (
+    clause_map,
+    iter_top,
+    match_paren,
+    split_top,
+)
 
 __all__ = ["compile_plpgsql", "create_plpgsql_function"]
 
@@ -1156,12 +1161,12 @@ def create_plpgsql_function(
         q = expr.strip()
         while q.startswith("(") and match_paren(q, 0) == len(q) - 1:
             q = q[1:-1].strip()
-        if re.match(r"SELECT\b", q, re.I):
-            fm = next(iter_top(q, "(?i:FROM)"), None)
-            if fm is not None:
-                item = q[len("SELECT") : fm.start()].strip()
-                if "," not in item:
-                    body = f"SELECT ({item}) AS {name} {q[fm.start():]}"
+        block = clause_map(q) if re.match(r"SELECT\b", q, re.I) else None
+        if block is not None and "from" in block:
+            sel, frm = block["select"], block["from"]
+            item = q[sel.start : sel.end].strip()
+            if "," not in item:
+                body = f"{q[: sel.start]} ({item}) AS {name} {q[frm.head :]}"
         spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "
             f"RETURNS TABLE ({name} {ret}) RETURN {body}"

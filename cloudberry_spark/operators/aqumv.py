@@ -41,7 +41,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cloudberry_spark.sql.sqltext import split_top
+from cloudberry_spark.sql.sqltext import (
+    CONSTRUCTS,
+    EXPR,
+    GroupItem,
+    group_items,
+    split_top,
+)
 
 
 def _analyzed_exprs(df: DataFrame):
@@ -243,40 +249,18 @@ def _split_order_item(item: str) -> tuple[str, None, str]:
 def _strip_grouping(group_by: str) -> str:
     """The flat item list of a grouping clause (plain / GROUPING SETS /
     ROLLUP / CUBE) — for derivability probing."""
-    import re
-
-    m = re.match(
-        r"\s*(GROUPING\s+SETS|ROLLUP|CUBE)\s*\((.*)\)\s*$",
-        group_by, flags=re.I | re.S,
-    )
-    body = m.group(2) if m else group_by
-    items: list[str] = []
-    for it in split_top(body):
-        it = it.strip()
-        if it.startswith("(") and it.endswith(")"):
-            items.extend(p.strip() for p in split_top(it[1:-1]))
-        elif it:
-            items.append(it)
-    return ", ".join(i for i in items if i)
+    return ", ".join(e for it in group_items(group_by) for e in it.exprs())
 
 
 def _rewrite_grouping(group_by: str, rw) -> str:
     """Rewrite a grouping clause (plain / GROUPING SETS / ROLLUP /
     CUBE) item by item, preserving structure."""
-    import re
 
-    m = re.match(
-        r"\s*(GROUPING\s+SETS|ROLLUP|CUBE)\s*\((.*)\)\s*$",
-        group_by, flags=re.I | re.S,
-    )
-    if not m:
-        return rw(group_by)
-    kw, body = m.group(1), m.group(2)
-    # body items may be parenthesized tuples
-    out = []
-    for it in filter(None, map(str.strip, split_top(body))):
-        if it.startswith("("):
-            out.append("(" + rw(it[1:-1]) + ")")
-        else:
-            out.append(rw(it))
-    return f"{kw}({', '.join(out)})"
+    def one(it: GroupItem) -> str:
+        if it.kind in CONSTRUCTS:
+            return f"{it.kind}({', '.join(map(one, it.args))})"
+        if it.kind == EXPR:
+            return rw(it.text)
+        return "(" + rw(", ".join(it.members)) + ")"
+
+    return ", ".join(map(one, group_items(group_by)))

@@ -41,10 +41,20 @@ import functools
 import re
 
 from cloudberry_spark.sql.sqltext import (
+    COMPOSITE,
+    CONSTRUCTS,
+    EMPTY,
+    EXPR,
     STRING_OR_COMMENT_RE,
+    GroupItem,
+    clause_end,
+    clause_map,
     depth_at,
+    group_items,
     iter_top,
     match_paren,
+    query_blocks,
+    select_list,
     split_top,
 )
 
@@ -105,11 +115,7 @@ def _rewrite_cast_as_type(seg: str, pg: str, sp: str) -> str:
     return "".join(out)
 
 
-_SELECT_SPAN_END_RE = re.compile(
-    r"\b(FROM|WHERE|GROUP|HAVING|ORDER|LIMIT|UNION|INTERSECT|EXCEPT|"
-    r"WINDOW)\b",
-    re.I,
-)
+_SELECT_RE = re.compile(r"\bSELECT\b", re.I)
 
 
 def _rewrite_selectlist_srf(seg: str) -> str:
@@ -117,16 +123,12 @@ def _rewrite_selectlist_srf(seg: str) -> str:
     item to Spark's ``explode(sequence(...))`` generator. See the call
     site for scope; conservative by construction — anything else
     passes through for the FROM-position rewrites or a loud error."""
+    if not re.search(r"\bgenerate_series\s*\(", seg, re.I):
+        return seg
     for _ in range(50):  # bounded: each pass rewrites one site
         changed = False
-        for m in re.finditer(
-            r"\bSELECT\b(?:\s+(?:DISTINCT|ALL)\b)?", seg, re.I
-        ):
-            start = m.end()
-            end = next(
-                (e.start() for e in iter_top(seg, _SELECT_SPAN_END_RE, start)),
-                len(seg),
-            )
+        for m in _SELECT_RE.finditer(seg):
+            _, start, end = select_list(seg, m.start())
             span = seg[start:end]
             sites = [
                 (s, o, c)
@@ -1017,11 +1019,21 @@ def _rewrite_window_filter(seg: str) -> str:
 
 
 _GROUP_BY_RE = re.compile(r"\bGROUP\s+BY\b", re.I)
-#: a GROUP BY item separator, or a keyword that ends the clause
-_GB_SPLIT_RE = re.compile(
-    r",|\b(HAVING|WINDOW|ORDER|LIMIT|OFFSET|UNION|INTERSECT|EXCEPT|FETCH)\b",
-    re.I,
-)
+
+
+def _each_group_by(seg: str, rewrite) -> str:
+    """``seg`` with every GROUP BY clause, at any depth, replaced by
+    ``rewrite(keyword, body)``; a GROUP BY inside an earlier clause's
+    body is left to that clause."""
+    out, pos = [], 0
+    for m in _GROUP_BY_RE.finditer(seg):
+        if m.start() < pos:
+            continue
+        end = clause_end(seg, m.end())
+        out += [seg[pos : m.start()], rewrite(m.group(0), seg[m.end() : end])]
+        pos = end
+    out.append(seg[pos:])
+    return "".join(out)
 
 
 def _strip_empty_grouping(seg: str) -> str:
@@ -1034,37 +1046,19 @@ def _strip_empty_grouping(seg: str) -> str:
     top-level ``()`` entries — a ``()`` nested inside GROUPING SETS /
     CUBE / ROLLUP is meaningful and preserved — and when nothing
     remains, drop the whole clause (grand-total aggregation)."""
-    out: list[str] = []
-    pos = 0
-    while True:
-        m = _GROUP_BY_RE.search(seg, pos)
-        if not m:
-            out.append(seg[pos:])
-            return "".join(out)
-        out.append(seg[pos : m.start()])
-        # scan the clause: split on depth-0 commas, stop at depth-0
-        # terminator keyword or the subquery's closing paren
-        items: list[str] = []
-        cur, end = m.end(), len(seg)
-        for t in iter_top(seg, _GB_SPLIT_RE, m.end()):
-            if t.group() != ",":
-                end = t.start()
-                break
-            items.append(seg[cur : t.start()])
-            cur = t.end()
-        items.append(seg[cur:end])
-        kept = [it for it in items if it.strip() != "()"]
-        if kept:
-            # explicit spaces: a dropped FIRST item may have held the
-            # whitespace after GROUP BY (else `GROUP BYsale.pn`), and a
-            # dropped LAST item the one before HAVING/ORDER BY
-            out.append(m.group(0) + " " + ",".join(kept) + " ")
-        elif items and not any(it.strip() for it in items):
-            # not actually a list (e.g. malformed); leave untouched
-            out.append(m.group(0) + seg[m.end() : end])
-        # else: every item was (), drop the clause entirely
-        pos = end
-    return "".join(out)
+
+    def strip(keyword: str, body: str) -> str:
+        items = group_items(body)
+        if not items:  # not actually a list (e.g. malformed)
+            return keyword + body
+        kept = [it.raw for it in items if it.kind != EMPTY]
+        # explicit spaces: a dropped FIRST item may have held the
+        # whitespace after GROUP BY (else `GROUP BYsale.pn`), and a
+        # dropped LAST item the one before HAVING/ORDER BY; with every
+        # item (), drop the clause entirely
+        return f"{keyword} {','.join(kept)} " if kept else ""
+
+    return _each_group_by(seg, strip)
 
 
 #: one-paren-nesting-level argument, shared by the field rewrites below
@@ -1585,12 +1579,6 @@ _SIMPLE_SUBQ_RE = re.compile(
     r"(?:\s+WHERE\s+(?P<w>.+?))?\s*$",
     re.I | re.S,
 )
-_CLAUSE_KW_RE = re.compile(
-    r"\b(FROM|WHERE|GROUP|HAVING|ORDER|LIMIT|UNION|INTERSECT|EXCEPT)\b",
-    re.I,
-)
-
-
 _ROWS_FROM_RE = re.compile(r"\bROWS\s+FROM\s*\(", re.I)
 
 
@@ -1791,78 +1779,30 @@ def _rewrite_rows_from(seg: str) -> str:
         seg = seg[: m.start()] + repl + seg[c + 1 + tm.end() :]
 
 
-_GS_HEAD_RE = re.compile(
-    r"\bGROUP\s+BY\s+(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(", re.I
-)
-
-
-def _gs_flat_cols(kind: str, inner: str) -> list[str]:
-    """Flatten the column expressions of a GROUPING SETS/CUBE/ROLLUP
-    argument list (nested set parens stripped), order-preserving."""
-    cols: list[str] = []
-    for x in split_top(inner):
-        x = x.strip()
-        if not x or x == "()":
-            continue
-        parts = split_top(x[1:-1]) if x.startswith("(") else [x]
-        for p in parts:
-            p = p.strip()
-            if p and p not in cols:
-                cols.append(p)
-    return cols
-
-
-_GB_TERM_RE = re.compile(
-    r"\b(HAVING|ORDER\s+BY|WINDOW|LIMIT|OFFSET|FETCH|UNION|INTERSECT"
-    r"|EXCEPT)\b",
-    re.I,
-)
-
-
-def _top_gb_clause(seg: str) -> tuple[int, int] | None:
-    """Span (start, end) of the single top-level GROUP BY clause's
-    item list, or None (absent, or multiple top-level GROUP BYs)."""
-    hits = [
-        m
-        for m in re.finditer(r"\bGROUP\s+BY\b", seg, re.I)
-        if depth_at(seg, m.start()) == 0
-    ]
-    if len(hits) != 1:
+@functools.lru_cache(maxsize=4)
+def _grouped_block(seg: str):
+    """Clause map of the top-level query block that holds ``seg``'s one
+    depth-0 GROUP BY, with that clause's items; None when there is no
+    such clause or more than one. Cached: consecutive passes that
+    leave the text alone read the block once."""
+    if not _GROUP_BY_RE.search(seg):
         return None
-    start = hits[0].end()
-    end = len(seg)
-    for tm in _GB_TERM_RE.finditer(seg, start):
-        if depth_at(seg, tm.start()) == 0:
-            end = tm.start()
-            break
-    return start, end
+    blocks = [b for b in query_blocks(seg) if "group by" in b]
+    if len(blocks) != 1:
+        return None
+    _, start, end = blocks[0]["group by"]
+    return blocks[0], tuple(group_items(seg[start:end]))
 
 
-def _top_select_aliases(seg: str) -> dict[str, str]:
-    """Top-level SELECT-list ``expr AS alias`` map (lowercased names)."""
-    sm = next(
-        (
-            x
-            for x in re.finditer(r"\bSELECT\b", seg, re.I)
-            if depth_at(seg, x.start()) == 0
-        ),
-        None,
-    )
-    fm = next(
-        (
-            x
-            for x in re.finditer(r"\bFROM\b", seg, re.I)
-            if sm and x.start() > sm.end() and depth_at(seg, x.start()) == 0
-        ),
-        None,
-    )
+def _select_aliases(seg: str, block) -> dict[str, str]:
+    """The block's SELECT-list ``expr AS alias`` map (lowercased
+    names)."""
+    _, start, end = block["select"]
     aliases: dict[str, str] = {}
-    if sm and fm:
-        for item in split_top(seg[sm.end() : fm.start()]):
-            am = re.fullmatch(r"(.*?)\s+AS\s+(\w+)", item.strip(),
-                              re.I | re.S)
-            if am:
-                aliases[am.group(2).lower()] = am.group(1).strip()
+    for item in split_top(seg[start:end]):
+        am = re.fullmatch(r"(.*?)\s+AS\s+(\w+)", item.strip(), re.I | re.S)
+        if am:
+            aliases[am.group(2).lower()] = am.group(1).strip()
     return aliases
 
 
@@ -1874,13 +1814,14 @@ def _substitute_gb_aliases(seg: str) -> str:
     Spark's group-by-alias resolution does not reach). The caller's
     alias names must not shadow input columns — PG would prefer the
     column; ports that hit that case spell the expression inline."""
-    span = _top_gb_clause(seg)
-    if span is None:
+    grouped = _grouped_block(seg)
+    if grouped is None:
         return seg
-    aliases = _top_select_aliases(seg)
+    block, _ = grouped
+    aliases = _select_aliases(seg, block)
     if not aliases:
         return seg
-    start, end = span
+    _, start, end = block["group by"]
     clause = seg[start:end]
 
     def _sub(m: re.Match) -> str:
@@ -1898,54 +1839,33 @@ def _substitute_gb_aliases(seg: str) -> str:
     return seg[:start] + new + seg[end:]
 
 
-_NESTED_GS_RE = re.compile(r"\bGROUPING\s+SETS\s*\(", re.I)
+def _gs_sets_of(item: GroupItem) -> list[str]:
+    """Expand one construct into explicit grouping sets, each rendered
+    ``(e1, e2, ...)`` / ``()``."""
 
+    def render(args) -> str:
+        return "(" + ", ".join(e for a in args for e in a.exprs()) + ")"
 
-def _gs_sets_of(kind: str, inner: str) -> list[str]:
-    """Expand one construct's argument list into explicit grouping
-    sets, each rendered ``(e1, e2, ...)`` / ``()``."""
-
-    def elems(arg: str) -> list[str]:
-        arg = arg.strip()
-        if arg.startswith("(") and match_paren(arg, 0) == len(arg) - 1:
-            return [p.strip() for p in split_top(arg[1:-1]) if p.strip()]
-        return [arg] if arg else []
-
-    args = [a for a in (x.strip() for x in split_top(inner)) if a]
-    if kind == "ROLLUP":
-        sets = []
-        for n in range(len(args), -1, -1):
-            cur: list[str] = []
-            for a in args[:n]:
-                cur.extend(elems(a))
-            sets.append("(" + ", ".join(cur) + ")")
-        return sets
-    if kind == "CUBE":
+    args = item.args
+    if item.kind == "ROLLUP":
+        return [render(args[:n]) for n in range(len(args), -1, -1)]
+    if item.kind == "CUBE":
         if len(args) > 10:
             raise NotImplementedError(
                 "CUBE with more than 10 arguments inside GROUPING SETS"
             )
-        sets = []
-        for mask in range(1 << len(args), 0, -1):
-            cur = []
-            for i, a in enumerate(args):
-                if (mask - 1) & (1 << (len(args) - 1 - i)):
-                    cur.extend(elems(a))
-            sets.append("(" + ", ".join(cur) + ")")
-        return sets
+        n = len(args)
+        return [
+            render(a for i, a in enumerate(args)
+                   if (mask - 1) & (1 << (n - 1 - i)))
+            for mask in range(1 << n, 0, -1)
+        ]
     # plain GROUPING SETS list: each arg IS a set; nested constructs
     # flatten recursively (groupingsets.sql:171 `grouping sets(a,
     # grouping sets(a, cube(b)))` keeps duplicates)
     sets = []
     for a in args:
-        nm = re.match(r"(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(", a, re.I)
-        if nm:
-            k = re.sub(r"\s+", " ", nm.group(1).upper())
-            k = "GROUPING SETS" if k.startswith("GROUPING") else k
-            o = a.index("(", nm.end() - 1)
-            sets.extend(_gs_sets_of(k, a[o + 1 : match_paren(a, o)]))
-        else:
-            sets.append("(" + ", ".join(elems(a)) + ")")
+        sets += _gs_sets_of(a) if a.kind in CONSTRUCTS else [render([a])]
     return sets
 
 
@@ -1954,67 +1874,37 @@ def _expand_nested_gs(seg: str) -> str:
     argument list into the explicit set list (parse_clause.c
     expand_groupingset_node — PG composes them; Spark's parser resolves
     a nested ``ROLLUP(..)`` as a function call and fails)."""
-    out, pos = [], 0
-    while True:
-        m = _NESTED_GS_RE.search(seg, pos)
-        if m is None:
-            out.append(seg[pos:])
-            return "".join(out)
-        o = seg.index("(", m.end() - 1)
-        c = match_paren(seg, o)
-        args = [a.strip() for a in split_top(seg[o + 1 : c]) if a.strip()]
+
+    def expand(keyword: str, body: str) -> str:
+        items = group_items(body)
         if not any(
-            re.match(r"(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(", a, re.I)
-            for a in args
+            it.kind == "GROUPING SETS"
+            and any(a.kind in CONSTRUCTS for a in it.args)
+            for it in items
         ):
-            out.append(seg[pos : c + 1])
-            pos = c + 1
-            continue
-        sets: list[str] = []
-        for a in args:
-            nm = re.match(r"(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(", a, re.I)
-            if nm:
-                kind = re.sub(r"\s+", " ", nm.group(1).upper())
-                kind = "GROUPING SETS" if kind.startswith("GROUPING") else kind
-                inner = a[a.index("(", nm.end() - 1) + 1 : match_paren(
-                    a, a.index("(", nm.end() - 1))]
-                sets.extend(_gs_sets_of(kind, inner))
+            return keyword + body
+        parts = []
+        for it in items:
+            if it.kind == "GROUPING SETS":
+                sets = _gs_sets_of(it)
+                if len(sets) > 256:
+                    # a 10-argument CUBE inside GROUPING SETS (and its
+                    # cross product with sibling constructs) expands to
+                    # thousands of sets — the Expand-node projection
+                    # count stalls planning on BOTH engines
+                    # (qp_olap_mdqa.sql's widest fuzzer rows).
+                    # Combinatorial by construction; stay loud.
+                    raise NotImplementedError(
+                        f"GROUPING SETS expansion of {len(sets)} grouping "
+                        "sets exceeds the 256-set support cap"
+                    )
+                flat = "GROUPING SETS (" + ", ".join(sets) + ")"
+                parts.append(it.raw.replace(it.text, flat, 1))
             else:
-                sets.extend(_gs_sets_of("GROUPING SETS", a))
-        if len(sets) > 256:
-            # a 10-argument CUBE inside GROUPING SETS (and its cross
-            # product with sibling constructs) expands to thousands of
-            # sets — the Expand-node projection count stalls planning
-            # on BOTH engines (qp_olap_mdqa.sql's widest fuzzer rows).
-            # Combinatorial by construction; stay loud.
-            raise NotImplementedError(
-                f"GROUPING SETS expansion of {len(sets)} grouping sets "
-                "exceeds the 256-set support cap"
-            )
-        out.append(seg[pos : m.start()])
-        out.append("GROUPING SETS (" + ", ".join(sets) + ")")
-        pos = c + 1
+                parts.append(it.raw)
+        return keyword + ",".join(parts)
 
-
-def _gb_construct_members(seg: str) -> list[str]:
-    """Flattened member expressions of every ROLLUP/CUBE/GROUPING SETS
-    construct in the top-level GROUP BY clause (masked text)."""
-    span = _top_gb_clause(seg)
-    if span is None:
-        return []
-    start, end = span
-    members: list[str] = []
-    for cm in re.finditer(
-        r"\b(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(", seg[start:end], re.I
-    ):
-        o = start + seg[start:end].index("(", cm.end() - 1)
-        c = match_paren(seg, o)
-        for x in _gs_flat_cols(
-            re.sub(r"\s+", " ", cm.group(1).upper()), seg[o + 1 : c]
-        ):
-            if x not in members:
-                members.append(x)
-    return members
+    return _each_group_by(seg, expand)
 
 
 def _norm_expr(e: str) -> str:
@@ -2026,25 +1916,16 @@ def _norm_expr(e: str) -> str:
     return re.sub(r"\s+", "", e).upper()
 
 
-def _always_grouped_exprs(seg: str) -> set[str]:
+def _always_grouped(items: tuple[GroupItem, ...]) -> set[str]:
     """Normalized grouping items OUTSIDE any construct (bare items and
-    plain-composite members) of the top-level GROUP BY clause — these
-    are grouped in EVERY set of the cross product."""
-    always: set[str] = set()
-    span = _top_gb_clause(seg)
-    if span is None:
-        return always
-    for item in (x.strip() for x in split_top(seg[span[0] : span[1]])):
-        if not item or item == "()" or re.match(
-            r"(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(", item, re.I
-        ):
-            continue
-        if item.startswith("(") and match_paren(item, 0) == len(item) - 1:
-            for p in (y.strip() for y in split_top(item[1:-1])):
-                always.add(_norm_expr(p))
-        else:
-            always.add(_norm_expr(item))
-    return always
+    plain-composite members) — these are grouped in EVERY set of the
+    cross product."""
+    return {
+        _norm_expr(e)
+        for it in items
+        if it.kind in (EXPR, COMPOSITE)
+        for e in it.members
+    }
 
 
 def _dedupe_always_grouped(seg: str) -> str:
@@ -2060,46 +1941,37 @@ def _dedupe_always_grouped(seg: str) -> str:
     value because the expression is grouped in every set
     (qp_olap_mdqa.sql `CUBE((..,newalias1,..)), (newalias1, ..)`
     shapes)."""
-    always = _always_grouped_exprs(seg)
+    grouped = _grouped_block(seg)
+    if grouped is None:
+        return seg
+    block, items = grouped
+    always = _always_grouped(items)
     if not always:
         return seg
-    span = _top_gb_clause(seg)
-    if span is None:
-        return seg
-    start, end = span
     out: list[str] = []
-    for item in (x.strip() for x in split_top(seg[start:end])):
-        cm = re.match(r"(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(", item, re.I)
-        if not cm:
-            out.append(item)
+    for it in items:
+        if it.kind not in CONSTRUCTS:
+            out.append(it.text)
             continue
-        o = item.index("(", cm.end() - 1)
-        c = match_paren(item, o)
-        args_out = []
-        for a in (y.strip() for y in split_top(item[o + 1 : c])):
-            if a.startswith("(") and match_paren(a, 0) == len(a) - 1:
-                kept = [
-                    p
-                    for p in (z.strip() for z in split_top(a[1:-1]))
-                    if p and _norm_expr(p) not in always
-                ]
-                args_out.append("(" + ", ".join(kept) + ")")
-            elif a and _norm_expr(a) in always:
-                args_out.append("()")
-            else:
-                args_out.append(a)
-        kind = re.sub(r"\s+", " ", cm.group(1).upper())
-        kind = "GROUPING SETS" if kind.startswith("GROUPING") else kind
-        if kind != "GROUPING SETS" and "()" in args_out:
+        args = []
+        for a in it.args:
+            if a.kind == COMPOSITE:
+                kept = tuple(
+                    p for p in a.members if _norm_expr(p) not in always
+                )
+                a = GroupItem("(" + ", ".join(kept) + ")", COMPOSITE, kept)
+            elif a.kind == EXPR and _norm_expr(a.text) in always:
+                a = GroupItem("()", EMPTY)
+            args.append(a)
+        if it.kind != "GROUPING SETS" and any(not a.exprs() for a in args):
             # Spark's parser rejects an empty composite inside ROLLUP/
             # CUBE — expand to the explicit (now arg-reduced) set list
-            out.append(
-                "GROUPING SETS ("
-                + ", ".join(_gs_sets_of(kind, ", ".join(args_out)))
-                + ")"
-            )
+            sets = _gs_sets_of(it._replace(args=tuple(args)))
+            out.append("GROUPING SETS (" + ", ".join(sets) + ")")
         else:
-            out.append(item[: o + 1] + ", ".join(args_out) + item[c:])
+            head = it.text[: it.text.index("(") + 1]
+            out.append(head + ", ".join(a.text for a in args) + ")")
+    _, start, end = block["group by"]
     return seg[:start] + " " + ", ".join(out) + " " + seg[end:]
 
 
@@ -2112,25 +1984,21 @@ def _drop_singleton_empty_gs(seg: str) -> str:
     ``GROUP BY (a,a),(b),GROUPING SETS(()),c``). A multi-empty
     ``GROUPING SETS ((),())`` is NOT dropped: the duplicate sets
     multiply the output."""
-    span = _top_gb_clause(seg)
-    if span is None:
+    grouped = _grouped_block(seg)
+    if grouped is None:
         return seg
-    start, end = span
-    items = [x.strip() for x in split_top(seg[start:end]) if x.strip()]
-    kept = []
-    dropped = False
-    for item in items:
-        m = re.match(r"GROUPING\s+SETS\s*\(", item, re.I)
-        if m:
-            o = item.index("(", m.end() - 1)
-            inner = item[o + 1 : match_paren(item, o)]
-            args = [a.strip() for a in split_top(inner) if a.strip()]
-            if len(args) == 1 and args[0] == "()":
-                dropped = True
-                continue
-        kept.append(item)
-    if not dropped or not kept:
+    block, items = grouped
+    kept = [
+        it.text
+        for it in items
+        if not (
+            it.kind == "GROUPING SETS"
+            and [a.kind for a in it.args] == [EMPTY]
+        )
+    ]
+    if len(kept) in (0, len(items)):
         return seg
+    _, start, end = block["group by"]
     return seg[:start] + " " + ", ".join(kept) + " " + seg[end:]
 
 
@@ -2143,8 +2011,10 @@ def _plain_gb_grouping_zero(seg: str) -> str:
     (UNSUPPORTED_GROUPING_EXPRESSION). Applies to depth-0 calls only —
     subquery grouping() calls sit at depth > 0 and keep their own
     clause's semantics."""
-    span = _top_gb_clause(seg)
-    if span is None or _gb_construct_members(seg):
+    grouped = _grouped_block(seg)
+    if grouped is None or any(
+        it.exprs() for it in grouped[1] if it.kind in CONSTRUCTS
+    ):
         return seg
     out, pos = [], 0
     while True:
@@ -2177,38 +2047,26 @@ def _rewrite_gs_dup_exprs(seg: str) -> str:
     ``CASE WHEN grouping(E) = 1 THEN NULL ELSE E END`` (qp_olap_mdqa
     fuzzer shapes: `CASE WHEN vn < 10 ...` aliased twice, grouped once
     via a ROLLUP composite and once via the always-grouped vn)."""
-    members = _gb_construct_members(seg)
-    if not members:
+    grouped = _grouped_block(seg)
+    if grouped is None:
         return seg
+    block, items = grouped
     # grouping items OUTSIDE any construct are grouped in EVERY set of
     # the cross product — a targetlist expression that is also one of
     # those is never nullified (PG's set algebra; the dedupe pass has
     # usually already removed such members from the constructs)
-    norm_members = (
-        {_norm_expr(x) for x in members} - _always_grouped_exprs(seg)
-    )
-    sm = next(
-        (
-            x
-            for x in re.finditer(r"\bSELECT\b", seg, re.I)
-            if depth_at(seg, x.start()) == 0
-        ),
-        None,
-    )
-    fm = next(
-        (
-            x
-            for x in re.finditer(r"\bFROM\b", seg, re.I)
-            if sm and x.start() > sm.end() and depth_at(seg, x.start()) == 0
-        ),
-        None,
-    )
-    if not (sm and fm):
+    norm_members = {
+        _norm_expr(e)
+        for it in items
+        if it.kind in CONSTRUCTS
+        for e in it.exprs()
+    } - _always_grouped(items)
+    if not norm_members:
         return seg
-    items = split_top(seg[sm.end() : fm.start()])
+    _, start, end = block["select"]
     changed = False
     new_items = []
-    for item in items:
+    for item in split_top(seg[start:end]):
         am = re.fullmatch(r"(.*?)(\s+AS\s+\w+\s*)", item, re.I | re.S)
         expr, tail = (am.group(1), am.group(2)) if am else (item, "")
         # only ALIASED, non-trivial expressions need the wrap: a bare
@@ -2231,7 +2089,7 @@ def _rewrite_gs_dup_exprs(seg: str) -> str:
         changed = True
     if not changed:
         return seg
-    return seg[: sm.end()] + ",".join(new_items) + seg[fm.start() :]
+    return seg[:start] + ",".join(new_items) + seg[end:]
 
 
 def _rewrite_group_id(seg: str) -> str:
@@ -2246,91 +2104,45 @@ def _rewrite_group_id(seg: str) -> str:
     """
     if not re.search(r"\bGROUP_ID\s*\(\s*\)", seg, re.I):
         return seg
-    span = _top_gb_clause(seg)
-    if span is None:
+    grouped = _grouped_block(seg)
+    if grouped is None:
         raise NotImplementedError(
             "GROUP_ID() is only supported with a single top-level "
             "GROUP BY clause"
         )
-    # collect EVERY grouping expression of the clause — construct
-    # members, composite-item members and bare items alike — so the
-    # numbering partition distinguishes all distinct grouping sets
-    # even across `ROLLUP(..), CUBE(..), col` composition
-    # (qp_olap_mdqa.sql shapes)
-    cols: list[str] = []
-    seen: set[str] = set()
-    has_construct = False
-
-    def _add(x: str) -> None:
-        # dedupe on the NORMALIZED spelling: Spark's grouping_id()
-        # rejects duplicate columns (GROUPING_ID_COLUMN_MISMATCH), and
-        # the fuzzer repeats members across composites with varied
-        # whitespace/parens (qp_olap_mdqa.sql)
-        key = _norm_expr(x)
-        if key and key not in seen:
-            seen.add(key)
-            cols.append(x)
-
-    for item in (x.strip() for x in split_top(seg[span[0] : span[1]])):
-        if not item or item == "()":
-            continue
-        cm = re.match(r"(GROUPING\s+SETS|CUBE|ROLLUP)\s*\(", item, re.I)
-        if cm:
-            has_construct = True
-            o = item.index("(", cm.end() - 1)
-            for x in _gs_flat_cols(
-                re.sub(r"\s+", " ", cm.group(1).upper()),
-                item[o + 1 : match_paren(item, o)],
-            ):
-                _add(x)
-        elif item.startswith("(") and match_paren(item, 0) == len(item) - 1:
-            for p in (y.strip() for y in split_top(item[1:-1])):
-                _add(p)
-        else:
-            _add(item)
-    if not has_construct:
+    block, items = grouped
+    if not any(it.kind in CONSTRUCTS for it in items):
         # plain (possibly composite-item) GROUP BY is ONE grouping
         # set: GROUP_ID() is 0 on every row (parse_agg.c)
         return re.sub(r"\bGROUP_ID\s*\(\s*\)", "0", seg, flags=re.I)
+    # EVERY grouping expression of the clause — construct members,
+    # composite-item members and bare items alike — so the numbering
+    # partition distinguishes all distinct grouping sets even across
+    # `ROLLUP(..), CUBE(..), col` composition (qp_olap_mdqa.sql
+    # shapes), deduped on the NORMALIZED spelling: Spark's
+    # grouping_id() rejects duplicate columns
+    # (GROUPING_ID_COLUMN_MISMATCH), and the fuzzer repeats members
+    # across composites with varied whitespace/parens
+    by_key: dict[str, str] = {}
+    for e in (e for it in items for e in it.exprs()):
+        by_key.setdefault(_norm_expr(e), e)
+    by_key.pop("", None)
+    cols = list(by_key.values())
     if not cols:
         raise NotImplementedError("GROUP_ID() over empty grouping sets")
     # grouping keys that are SELECT-list aliases must be spelled as
     # their defining expressions: Spark rejects lateral column aliases
     # inside the window the emulation adds (qp_olap_mdqa.sql `GROUP BY
     # CUBE((dt, newalias2, ...))` shapes)
-    sm = next(
-        (
-            x
-            for x in re.finditer(r"\bSELECT\b", seg, re.I)
-            if depth_at(seg, x.start()) == 0
-        ),
-        None,
-    )
-    fm = next(
-        (
-            x
-            for x in re.finditer(r"\bFROM\b", seg, re.I)
-            if sm and x.start() > sm.end()
-            and depth_at(seg, x.start()) == 0
-        ),
-        None,
-    )
-    if sm and fm:
-        aliases: dict[str, str] = {}
-        for item in split_top(seg[sm.end() : fm.start()]):
-            am = re.fullmatch(
-                r"(.*?)\s+AS\s+(\w+)", item.strip(), re.I | re.S
-            )
-            if am:
-                aliases[am.group(2).lower()] = am.group(1).strip()
-        if any(col.lower() in aliases for col in cols):
-            # Spark's grouping() cannot reference an aliased grouping
-            # expression (GROUPING_COLUMN_MISMATCH) nor a lateral alias
-            # in the emulation's window — no lowering exists
-            raise NotImplementedError(
-                "GROUP_ID() with SELECT-alias grouping items is not "
-                "supported; spell the grouping expression inline"
-            )
+    aliases = _select_aliases(seg, block)
+    if any(col.lower() in aliases for col in cols):
+        # Spark's grouping() cannot reference an aliased grouping
+        # expression (GROUPING_COLUMN_MISMATCH) nor a lateral alias
+        # in the emulation's window — no lowering exists
+        raise NotImplementedError(
+            "GROUP_ID() with SELECT-alias grouping items is not "
+            "supported; spell the grouping expression inline"
+        )
     keys = ", ".join(cols)
     repl = (
         f"(row_number() OVER (PARTITION BY grouping_id({keys}), {keys} "
@@ -2355,74 +2167,40 @@ def _gs_empty_input_fallback(seg: str) -> str:
     2^n - 1 (every column un-grouped). Applies to the constrained
     top-level shape ``[WITH ...] SELECT .. FROM .. GROUP BY GROUPING
     SETS/CUBE/ROLLUP (..) [ORDER BY ..] [LIMIT ..]``; composite GROUP
-    BY items, HAVING, set-ops and windowed select lists are left
-    untouched (the divergence stays documented for those).
+    BY items, HAVING, set-ops, DISTINCT and windowed select lists are
+    left untouched (the divergence stays documented for those).
     """
-    m = _GS_HEAD_RE.search(seg)
-    if m is None or depth_at(seg, m.start()) != 0:
+    grouped = _grouped_block(seg)
+    if grouped is None:
         return seg
-    kind = re.sub(r"\s+", " ", m.group(1).upper())
-    o = seg.index("(", m.end() - 1)
-    c = match_paren(seg, o)
-    if c < 0:
+    block, items = grouped
+    if len(items) != 1 or items[0].kind not in CONSTRUCTS:
         return seg
-    inner = seg[o + 1 : c]
-    if kind == "GROUPING SETS":
-        sets = split_top(inner)
-        n_empty = sum(1 for x in sets if x.strip() in ("()", ""))
-        flat: list[str] = []
-        for x in sets:
-            x = x.strip()
-            if x in ("()", ""):
-                continue
-            flat += [
-                p.strip()
-                for p in split_top(x[1:-1] if x.startswith("(") else x)
-                if p.strip()
-            ]
-        cols = flat
+    (item,) = items
+    if item.kind == "GROUPING SETS":
+        n_empty = sum(1 for a in item.args if a.kind == EMPTY)
+        cols = item.exprs()
     else:  # CUBE / ROLLUP product always includes the empty set once
         n_empty = 1
-        cols = [p.strip() for p in split_top(inner) if p.strip()]
-    if n_empty == 0:
+        cols = [a.text for a in item.args]
+    gb, sel, frm = block["group by"], block["select"], block.get("from")
+    if n_empty == 0 or frm is None:
         return seg
-    tail = seg[c + 1 :]
-    tm = re.fullmatch(r"\s*((?:ORDER\s+BY|LIMIT)\b.*)?\s*", tail,
+    cut = gb.start + len(seg[gb.start : gb.end].rstrip())
+    tm = re.fullmatch(r"\s*((?:ORDER\s+BY|LIMIT)\b.*)?\s*", seg[cut:],
                       re.I | re.S)
     if tm is None:
         return seg
     tail_clause = (" " + tm.group(1).strip()) if tm.group(1) else ""
-    head = seg[: m.start()]
-    sm = next(
-        (
-            x
-            for x in re.finditer(r"\bSELECT\b", head, re.I)
-            if depth_at(head, x.start()) == 0
-        ),
-        None,
-    )
-    if sm is None:
-        return seg
-    fm = next(
-        (
-            x
-            for x in re.finditer(r"\bFROM\b", head, re.I)
-            if x.start() > sm.end() and depth_at(head, x.start()) == 0
-        ),
-        None,
-    )
-    if fm is None:
-        return seg
-    after_sel = head[sm.end() :]
-    for kw in ("UNION", "INTERSECT", "EXCEPT", "HAVING", "DISTINCT"):
-        if any(
-            depth_at(after_sel, x.start()) == 0
-            for x in re.finditer(rf"\b{kw}\b", after_sel, re.I)
-        ):
-            return seg
-    # a window ANYWHERE in the select list (it may hide inside CAST(..)
-    # parens) cannot ride the global-aggregate branch
-    if re.search(r"\bOVER\b", head[sm.end() : fm.start()], re.I):
+    sel_list = seg[sel.start : sel.end]
+    if (
+        # a set operation before the block
+        clause_map(seg)["select"] != sel
+        or any(iter_top(seg[sel.head : gb.head], r"(?i:\bDISTINCT\b)"))
+        # a window ANYWHERE in the select list (it may hide inside
+        # CAST(..) parens) cannot ride the global-aggregate branch
+        or re.search(r"\bOVER\b", sel_list, re.I)
+    ):
         return seg
     # a trailing ORDER BY may only use ordinals / bare output names
     # (after UNION ALL it can no longer see base-table expressions)
@@ -2436,8 +2214,7 @@ def _gs_empty_input_fallback(seg: str) -> str:
         re.I,
     ):
         return seg
-    sel_list = head[sm.end() : fm.start()]
-    body = head[fm.start() :].rstrip()
+    body = seg[frm.head : gb.head].rstrip()
     norm = lambda t: re.sub(r"\s+", "", t).lower()  # noqa: E731
     col_keys = {norm(x) for x in cols}
     _AGG_RE = re.compile(
@@ -2447,7 +2224,7 @@ def _gs_empty_input_fallback(seg: str) -> str:
         r"bit_and|bit_or|bit_xor|regr_\w+|skewness|kurtosis)\s*\(",
         re.I,
     )
-    items = []
+    branch_items = []
     for item in split_top(sel_list):
         item = item.strip()
         am = re.fullmatch(r"(.*?)(\s+AS\s+\w+)", item, re.I | re.S)
@@ -2462,12 +2239,12 @@ def _gs_empty_input_fallback(seg: str) -> str:
             expr = f"max({expr.strip()})"
         elif not _AGG_RE.search(expr):
             return seg  # unclassifiable item: keep Spark semantics
-        items.append(expr + alias)
+        branch_items.append(expr + alias)
     branch = (
-        f" UNION ALL SELECT {', '.join(items)} {body} "
+        f" UNION ALL SELECT {', '.join(branch_items)} {body} "
         f"HAVING count(*) = 0"
     )
-    return seg[: c + 1] + branch * n_empty + tail_clause
+    return seg[:cut] + branch * n_empty + tail_clause
 
 
 _QUANT_OP_RE = re.compile(r"(<=|>=|<|>)\s*(ALL|ANY|SOME)\s*\(", re.I)
@@ -2561,22 +2338,11 @@ def _flatten_one_exists_body(body: str, counter: list[int]) -> str | None:
     an EXISTS body into a plain join appended to the body's FROM list.
     Returns the new body, or None if no eligible IN found."""
     # top-level FROM list span of the body
-    from_m = next(
-        (
-            m
-            for m in re.finditer(r"\bFROM\b", body, re.I)
-            if depth_at(body, m.start()) == 0
-        ),
-        None,
-    )
-    if from_m is None:
+    block = clause_map(body)
+    if block is None or "from" not in block:
         return None
-    from_end = len(body)
-    for m in _CLAUSE_KW_RE.finditer(body, from_m.end()):
-        if m.group(1).upper() != "FROM" and depth_at(body, m.start()) == 0:
-            from_end = m.start()
-            break
-    from_list = body[from_m.end() : from_end]
+    _, from_start, from_end = block["from"]
+    from_list = body[from_start:from_end]
     if re.search(r"\bJOIN\b", from_list, re.I):
         return None
     body_aliases = set()

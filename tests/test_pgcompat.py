@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import re
 
+import duckdb
+import pytest
+
 from cloudberry_spark.sql.pgcompat import translate_pg_sql as t
 
 
@@ -914,3 +917,70 @@ def test_round12_interval_abbreviations():
     assert "interval '2 minutes'" in out
     out = t("SELECT d + interval '3 hrs' FROM x")
     assert "interval '3 hours'" in out
+
+
+#: a GROUP BY in the second branch of a UNION ALL: the grouping passes
+#: must read the SELECT list of that branch, not the first one
+XBLOCK_ALIAS = (
+    "SELECT a AS x, 1 AS c FROM t UNION ALL SELECT b, x FROM w "
+    "GROUP BY ROLLUP(b, x)"
+)
+XBLOCK_WRAP = (
+    "SELECT a + 1 AS y, 0 AS z FROM t UNION ALL "
+    "SELECT a + 1 AS y, count(*) FROM u GROUP BY ROLLUP(a + 1, b)"
+)
+XBLOCK_VIEWS = {
+    "t": "SELECT * FROM (VALUES (1), (2)) AS v(a)",
+    "w": "SELECT * FROM (VALUES (1, 10), (2, 20)) AS v(b, x)",
+    "u": "SELECT * FROM (VALUES (1, 1), (2, 2)) AS v(a, b)",
+}
+
+
+def test_grouping_passes_read_the_grouped_block():
+    # the first branch's `a AS x` is not spelled into the ROLLUP
+    assert "ROLLUP(b, x)" in t(XBLOCK_ALIAS)
+    # the grouping() wrap lands on the branch that groups
+    first, second = t(XBLOCK_WRAP).split("UNION ALL")
+    assert "grouping(" not in first
+    assert "CASE WHEN grouping(a + 1) = 1 THEN NULL" in second
+
+
+@pytest.mark.parametrize("sql", [XBLOCK_ALIAS, XBLOCK_WRAP])
+def test_grouped_union_branch_matches_duckdb(spark, sql):
+    from tests.conftest import assert_matches_oracle
+
+    con = duckdb.connect()
+    try:
+        for name, body in XBLOCK_VIEWS.items():
+            con.execute(f"CREATE VIEW {name} AS {body}")
+            spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {name} AS {body}")
+        assert assert_matches_oracle(spark.sql(t(sql)), con, sql) == 7
+    finally:
+        for name in XBLOCK_VIEWS:
+            spark.catalog.dropTempView(name)
+        con.close()
+
+
+def test_plpgsql_table_form_select_item_spelling_from(spark):
+    # the body's FROM is the clause keyword, not the `from` inside the
+    # select item's identifier
+    from cloudberry_spark.functions.plpgsql import create_plpgsql_function
+
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY VIEW plpg_from_t AS SELECT * FROM "
+        "(VALUES (1, 10), (2, 20)) AS v(k, date_from_x)"
+    )
+    try:
+        name = create_plpgsql_function(
+            spark,
+            "CREATE FUNCTION plpg_from_f(p int) RETURNS int AS $$\n"
+            "DECLARE r int; BEGIN\n"
+            "SELECT date_from_x FROM plpg_from_t WHERE k = p INTO r;\n"
+            "RETURN r; END; $$ LANGUAGE plpgsql",
+            table_form=True,
+        )
+        rows = spark.sql(f"SELECT * FROM {name}(2)").collect()
+        assert [tuple(r) for r in rows] == [(20,)]
+        assert rows[0].__fields__ == [name]
+    finally:
+        spark.catalog.dropTempView("plpg_from_t")

@@ -7,10 +7,17 @@ import re
 import pytest
 
 from cloudberry_spark.sql.sqltext import (
+    COMPOSITE,
+    EMPTY,
+    EXPR,
+    clause_end,
+    clause_map,
     depth_at,
+    group_items,
     iter_top,
     match_paren,
     open_parens,
+    query_blocks,
     split_top,
 )
 
@@ -116,3 +123,104 @@ def test_depth_and_open_parens():
     assert open_parens(s, len(s)) == [2, 12]
     assert depth_at("a) b", 4) == -1
     assert open_parens("a) (b", 5) == [3]
+
+
+def _bodies(sql: str, block) -> dict[str, str]:
+    return {name: sql[c.start : c.end].strip() for name, c in block.items()}
+
+
+def test_clause_map_spans_every_clause():
+    sql = (
+        "SELECT DISTINCT a AS x, f(b) FROM t JOIN u ON t.k = u.k "
+        "WHERE a IS DISTINCT FROM b GROUP BY ROLLUP(a, b) HAVING 1 = 1 "
+        "WINDOW w AS (ORDER BY a) ORDER BY 1 LIMIT 3 OFFSET 2"
+    )
+    block = clause_map(sql)
+    assert _bodies(sql, block) == {
+        "select": "a AS x, f(b)",
+        "from": "t JOIN u ON t.k = u.k",
+        "where": "a IS DISTINCT FROM b",
+        "group by": "ROLLUP(a, b)",
+        "having": "1 = 1",
+        "window": "w AS (ORDER BY a)",
+        "order by": "1",
+        "limit": "3 OFFSET 2",
+    }
+    assert sql[block["group by"].head :].startswith("GROUP BY")
+    assert block["select"].head == 0
+
+
+def test_clause_map_skips_with_subqueries_strings_and_comments():
+    sql = (
+        "WITH c AS (SELECT k FROM v GROUP BY k) "
+        "SELECT date_from_x, 'a FROM b', (SELECT max(k) FROM c) AS m "
+        "-- GROUP BY nothing\n"
+        "FROM /* WHERE */ t WHERE x IN (SELECT k FROM c WHERE k > 0)"
+    )
+    assert _bodies(sql, clause_map(sql)) == {
+        "select": "date_from_x, 'a FROM b', (SELECT max(k) FROM c) AS m "
+        "-- GROUP BY nothing",
+        "from": "/* WHERE */ t",
+        "where": "x IN (SELECT k FROM c WHERE k > 0)",
+    }
+    # an alias or identifier that spells a keyword opens no clause
+    sql = "SELECT count(*) OVER () AS window FROM t GROUP BY a"
+    assert _bodies(sql, clause_map(sql))["from"] == "t"
+
+
+def test_query_blocks_one_per_set_operation_branch():
+    sql = (
+        "SELECT a AS x FROM t UNION ALL SELECT b, x FROM w "
+        "GROUP BY ROLLUP(b, x) EXCEPT (SELECT 1 FROM v) ORDER BY 1"
+    )
+    blocks = [_bodies(sql, b) for b in query_blocks(sql)]
+    assert blocks == [
+        {"select": "a AS x", "from": "t"},
+        {"select": "b, x", "from": "w", "group by": "ROLLUP(b, x)"},
+    ]
+
+
+def test_clause_map_inside_a_scope_stops_at_its_paren():
+    sql = "SELECT * FROM (SELECT a FROM t GROUP BY a) s WHERE z"
+    inner = clause_map(sql, sql.index("(") + 1)
+    assert _bodies(sql, inner) == {"select": "a", "from": "t", "group by": "a"}
+    assert sql[inner["group by"].end] == ")"
+    assert clause_map("VALUES (1), (2)") is None
+    # where a clause body stops, from inside it
+    gb = sql.index("GROUP BY") + len("GROUP BY")
+    assert sql[clause_end(sql, gb)] == ")"
+    where = sql.index("WHERE") + len("WHERE")
+    assert clause_end(sql, where) == len(sql)
+
+
+def test_group_items_kinds():
+    items = group_items(" a + 1, (b, c), (), (d) * 2, f(x) ")
+    assert [(it.kind, it.members) for it in items] == [
+        (EXPR, ("a + 1",)),
+        (COMPOSITE, ("b", "c")),
+        (EMPTY, ()),
+        (EXPR, ("(d) * 2",)),
+        (EXPR, ("f(x)",)),
+    ]
+    # raw parts rejoin to the clause; blank parts are dropped
+    assert ",".join(it.raw for it in items) == (
+        " a + 1, (b, c), (), (d) * 2, f(x) "
+    )
+    assert [it.text for it in group_items("a,,b ,")] == ["a", "b"]
+
+
+def test_group_items_constructs_nest_and_normalize():
+    (item,) = group_items(
+        "grouping   sets ((a), ROLLUP(b, cube(c)), (), GROUPING SETS (()))"
+    )
+    assert item.kind == "GROUPING SETS"
+    kinds = [a.kind for a in item.args]
+    assert kinds == [COMPOSITE, "ROLLUP", EMPTY, "GROUPING SETS"]
+    # ROLLUP and CUBE take expressions: a nested cube(c) is a call
+    assert [a.kind for a in item.args[1].args] == [EXPR, EXPR]
+    assert [a.kind for a in item.args[3].args] == [EMPTY]
+    assert item.exprs() == ["a", "b", "cube(c)"]
+    (cube,) = group_items("Cube (a, (b, a))")
+    assert (cube.kind, cube.exprs()) == ("CUBE", ["a", "b", "a"])
+    # a construct head not closed at the item's end is an expression
+    assert group_items("rollup(a) + 1")[0].kind == EXPR

@@ -30,6 +30,7 @@ Exit 0 iff everything matches. Prints one line per problem query.
 
 from __future__ import annotations
 
+import datetime
 import sys
 import time
 from pathlib import Path
@@ -60,9 +61,30 @@ def _cell_str(x) -> str:
     return str(x)
 
 
+def _unify_dates(s: pd.Series) -> pd.Series:
+    """A date column as tz-naive ``datetime64[us]``, the way
+    ``driver_sim.canon_frame`` spells it: Spark DATE arrives as object
+    of ``datetime.date`` and DuckDB's as ``datetime64``, and the two
+    stringify differently (``1401-05-21`` vs ``1401-05-21 00:00:00``).
+    us, not ns: pre-1677 dates overflow ns."""
+    if pd.api.types.is_datetime64_any_dtype(s):
+        if getattr(s.dt, "tz", None) is not None:
+            s = s.dt.tz_localize(None)
+        return s.astype("datetime64[us]")
+    nn = s.dropna() if s.dtype == object else ()
+    if len(nn) and nn.map(
+        lambda x: isinstance(x, (datetime.date, datetime.datetime))
+    ).all():
+        return s.astype("datetime64[us]")
+    return s
+
+
 def _canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns, key=str.lower)]
     df.columns = [c.lower() for c in df.columns]
+    # one spelling per date before the row sort, so both frames order
+    # their rows alike
+    df = df.apply(_unify_dates)
     # total row order: stringify every cell (NULL-stable), sort on the
     # tuple — mirrors the driver's canonicalization.
     if len(df):
